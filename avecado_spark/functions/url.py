@@ -190,8 +190,7 @@ def registrable_domain(host: str | None,
     return last2
 
 
-def canonicalize(href: str, base: str,
-                 base_parts: tuple | None = None) -> str | None:
+def canonicalize(href: str, base: str | tuple) -> str | None:
     """Resolve `href` against `base` and normalize to the graph's node key:
 
       * scheme + host lowercased (§6.2.2.1)
@@ -205,13 +204,12 @@ def canonicalize(href: str, base: str,
     (re-encoding without a registry of reserved-per-component octets can
     change meaning; documented boundary).
 
-    `base_parts` (optional): pre-split `split_url(base)` — per-page link
-    loops pass it so the base is split once per page, not once per link;
-    the resolved components feed the normalizer directly (no intermediate
-    recompose + re-split)."""
+    `base` is a URL string or its pre-split `split_url(base)` tuple —
+    per-page link loops pass the tuple so the base is split once per page,
+    not once per link; the resolved components feed the normalizer
+    directly (no intermediate recompose + re-split)."""
     scheme, auth, path, query, _ = _resolve_parts(
-        base_parts if base_parts is not None else split_url(base),
-        href.strip())
+        base if isinstance(base, tuple) else split_url(base), href.strip())
     if auth is None and path.startswith("//"):
         # recompose-then-resplit (the pre-fast-path behavior) reinterprets
         # a leading "//" of an authority-less path as the authority; keep

@@ -78,7 +78,7 @@ def parse_links(url: str, html: bytes) -> list[tuple[str, str, str, int, bool]]:
             text = href.decode("utf-8", "replace")
         except Exception:  # pragma: no cover - bytes always decode w/ replace
             continue
-        dst = canonicalize(text, url, base_parts)
+        dst = canonicalize(text, base_parts)
         pos += 1
         if dst is None or dst == url or dst in seen:
             continue

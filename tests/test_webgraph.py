@@ -118,7 +118,7 @@ CANON_CASES = [
 def test_canonicalize(href, base, expected):
     assert canonicalize(href, base) == expected
     # pre-split base fast path (the per-page link loop) is byte-identical
-    assert canonicalize(href, base, split_url(base)) == expected
+    assert canonicalize(href, split_url(base)) == expected
 
 
 def test_canonicalize_authorityless_double_slash_path():
@@ -127,7 +127,7 @@ def test_canonicalize_authorityless_double_slash_path():
     (the "//" becomes the authority) — pins the r08 fast-path guard."""
     for href in ("http:/..//b", "HTTP:/..//b"):
         assert canonicalize(href, B) == "http://b/"
-        assert canonicalize(href, B, split_url(B)) == "http://b/"
+        assert canonicalize(href, split_url(B)) == "http://b/"
 
 
 # ---------------------------------------------------------------------------
