@@ -6,7 +6,7 @@ escape partitions), wasted bits, all four channel assignments
 (independent, left/side, right/side, mid/side — side channels carry one
 extra bit), fixed and variable blocking, and verifies both the frame
 header CRC-8 and the frame CRC-16.  A fixture-grade encoder lives here
-too (same trick as functions/vp8.py / gif.py: tests round-trip real
+too (same trick as functions/webp.py / gif.py: tests round-trip real
 container bytes with no external data): fixed 4096-sample blocks,
 per-subframe choice of CONSTANT / FIXED(best order) / VERBATIM, with
 opt-in LPC, stereo decorrelation, partition orders, wasted-bit packing,

@@ -9,9 +9,7 @@ backward references with the 120-entry 2D neighbor distance mapping, and
 all four inverse transforms: PREDICTOR (14 modes), COLOR (signed 3.5
 cross-channel deltas), SUBTRACT_GREEN, COLOR_INDEXING (palette, with
 pixel bundling for palettes of 2/4/16). Returns (h, w, 4) uint8 RGBA.
-Lossy WebP (VP8 chunk) routes to the real key-frame decoder in
-functions/vp8.py (RFC 6386 intra path; scope boundaries documented
-there).
+Lossy WebP (VP8 chunk) is not decoded: it raises NotImplementedError.
 
 Encoder (`webp_encode`): a valid VP8L writer for round-trip fixtures —
 literal pixels with canonical prefix codes (flat 4-bit code-length
@@ -241,24 +239,14 @@ def _decode_frame_chunks(chunks) -> np.ndarray:
     """Decode an (ALPH?, VP8|VP8L) chunk sequence to (h, w, 4) RGBA —
     the frame-payload shape shared by the top-level container and each
     ANMF body (container spec 'Animation': frame data is itself a chunk
-    sequence)."""
-    alph = None
+    sequence). Only the lossless VP8L flavor decodes."""
     for tag, body in chunks:
-        if tag == b"ALPH":
-            alph = body
-        elif tag == b"VP8L":
+        if tag == b"VP8L":
             return _vp8l_decode_rgba(body)
-        elif tag == b"VP8 ":
-            # lossy WebP: real VP8 key-frame decode (functions/vp8.py)
-            from .vp8 import vp8_decode_rgb
-            rgb = vp8_decode_rgb(body)
-            if alph is not None:
-                alpha = alpha_decode(alph, rgb.shape[1],
-                                     rgb.shape[0]).reshape(
-                    rgb.shape[0], rgb.shape[1], 1)
-            else:
-                alpha = np.full(rgb.shape[:2] + (1,), 255, dtype=np.uint8)
-            return np.concatenate([rgb, alpha], axis=2)
+        if tag == b"VP8 ":
+            raise NotImplementedError(
+                "lossy WebP (VP8 chunk) decode is not implemented; only "
+                "lossless VP8L decodes")
     raise ValueError("no VP8L chunk in WebP container")
 
 
@@ -266,50 +254,6 @@ def webp_decode(data: bytes) -> np.ndarray:
     if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP (RIFF/WEBP) payload")
     return _decode_frame_chunks(_iter_chunks(data, 12))
-
-
-def alpha_decode(payload: bytes, w: int, h: int) -> np.ndarray:
-    """ALPH chunk (WebP container spec 'Alpha'): 1 header byte —
-    bits 0-1 compression (0 raw, 1 headerless VP8L with alpha in the
-    green channel), bits 2-3 per-row predictive filter (none /
-    horizontal / vertical / gradient), bits 4-5 preprocessing (encode
-    side only). Returns an (h, w) uint8 alpha plane."""
-    if not payload:
-        raise ValueError("empty ALPH chunk")
-    head = payload[0]
-    method = head & 3
-    filt = (head >> 2) & 3
-    if method == 0:
-        if len(payload) < 1 + w * h:
-            raise ValueError("truncated raw ALPH payload")
-        a = np.frombuffer(payload[1:1 + w * h],
-                          dtype=np.uint8).reshape(h, w).copy()
-    elif method == 1:
-        br = _LsbReader(payload[1:])
-        argb = _decode_image_stream(br, w, h, is_level0=True)
-        a = argb[:, :, 2].copy()          # alpha rides the green channel
-    else:
-        raise ValueError(f"reserved ALPH compression method {method}")
-    if filt:
-        a = a.astype(np.int64)
-        for r in range(h):
-            for c in range(w):
-                if filt == 1:             # horizontal
-                    p = a[r, c - 1] if c > 0 else (a[r - 1, 0]
-                                                   if r > 0 else 0)
-                elif filt == 2:           # vertical
-                    p = a[r - 1, c] if r > 0 else (a[r, c - 1]
-                                                   if c > 0 else 0)
-                elif r == 0:              # gradient row 0 = horizontal
-                    p = a[r, c - 1] if c > 0 else 0
-                else:                     # gradient
-                    left = a[r, c - 1] if c > 0 else a[r - 1, 0]
-                    top = a[r - 1, c]
-                    tl = a[r - 1, c - 1] if c > 0 else a[r - 1, 0]
-                    p = min(max(int(left) + int(top) - int(tl), 0), 255)
-                a[r, c] = (a[r, c] + p) & 0xFF
-        a = a.astype(np.uint8)
-    return a
 
 
 def _decode_image_stream(br, w, h, is_level0):

@@ -4,12 +4,11 @@ A 100 TB training pipeline carries image/audio/video as `binary` columns
 with struct metadata; the Spark-side plumbing (schema, partitioning, Arrow
 batch shape, UDF signatures) is real and tested here. PNG images decode
 FOR REAL via the in-repo pure-numpy decoder (operators/raster.png_decode),
-baseline AND progressive JPEG via functions/jpeg.jpeg_decode, WebP in
-BOTH flavors via functions/webp.webp_decode (VP8L lossless: prefix
-codes, color cache, LZ77, all four transforms; lossy VP8 key frames via
-functions/vp8.py), RIFF/WAVE PCM audio via wav_decode below,
-and YUV4MPEG2 video via y4m_decode_frame. Remaining codecs (mp3/aac,
-mp4/webm, AVIF) are STUBBED — those
+lossless WebP via functions/webp.webp_decode (VP8L: prefix codes, color
+cache, LZ77, all four transforms), GIF via functions/gif.gif_decode,
+RIFF/WAVE PCM audio via wav_decode below,
+and YUV4MPEG2 video via y4m_decode_frame. Remaining codecs (JPEG, lossy
+WebP, mp3/aac, mp4/webm, AVIF) are STUBBED — those
 libraries are not in this container — and raise NotImplementedError unless
 `deterministic_fake=True`, which produces a seeded fake decode so the
 downstream plumbing (resize → feature-extract shape) is exercised end to
@@ -53,16 +52,10 @@ def decode_image(payload: bytes, width: int, height: int,
     """Image decode → (h, w, 3) uint8. PNG payloads decode FOR REAL via the
     in-repo pure-numpy decoder (operators/raster.png_decode — IHDR/IDAT,
     filters 0-4; grayscale expanded, alpha dropped; the PNG's own header
-    dims win over the metadata). Baseline AND progressive JPEG
-    (SOF0/SOF2 — essentially all web JPEGs) decode FOR REAL via the
-    in-repo pure-numpy codec (functions/jpeg.jpeg_decode: Huffman +
-    dequant + IDCT + chroma upsample + YCbCr→RGB; progressive scans
-    accumulate coefficients). WebP decodes FOR REAL in both flavors:
-    lossless via the full VP8L decoder (functions/webp.webp_decode) and
-    lossy via the RFC 6386 VP8 key-frame decoder (functions/vp8.py —
-    intra path; scope boundaries documented there). Remaining formats
-    (AVIF, HEIC, ...) need a codec library not present in this
-    container: NotImplementedError unless deterministic_fake=True, which
+    dims win over the metadata). Lossless WebP decodes FOR REAL via the
+    full VP8L decoder (functions/webp.webp_decode); lossy WebP raises
+    NotImplementedError there. Remaining formats (JPEG, AVIF, HEIC, ...)
+    have no decoder: NotImplementedError unless deterministic_fake=True, which
     derives a shape-correct array from a sha256 keystream of the
     payload. GIF (87a/89a incl. interlace + LZW) decodes for real via
     functions/gif.gif_decode — first frame composed, alpha dropped."""
@@ -74,12 +67,6 @@ def decode_image(payload: bytes, width: int, height: int,
         if img.shape[2] == 2:        # gray+alpha → RGB
             return np.repeat(img[:, :, :1], 3, axis=2)
         return img[:, :, :3]         # RGB / RGBA (alpha dropped)
-    if bytes(payload[:2]) == b"\xff\xd8":
-        from ..functions.jpeg import jpeg_decode
-        img = jpeg_decode(bytes(payload))
-        if img.shape[2] == 1:        # gray → RGB
-            return np.repeat(img, 3, axis=2)
-        return img
     if bytes(payload[:4]) == b"RIFF" and bytes(payload[8:12]) == b"WEBP":
         from ..functions.webp import webp_decode
         return webp_decode(bytes(payload))[:, :, :3]  # alpha dropped
@@ -88,7 +75,7 @@ def decode_image(payload: bytes, width: int, height: int,
         return gif_decode(bytes(payload))[:, :, :3]  # alpha dropped
     if not deterministic_fake:
         raise NotImplementedError(
-            "non-PNG/JPEG/lossless-WebP image decode requires PIL/opencv "
+            "non-PNG/lossless-WebP/GIF image decode requires PIL/opencv "
             "(not installed); pass deterministic_fake=True for the "
             "seeded stand-in")
     need = width * height * 3
@@ -120,7 +107,7 @@ def extract_features(img: np.ndarray) -> np.ndarray:
 
 
 def media_features(df: DataFrame, target: int = 32) -> DataFrame:
-    """mapInPandas plumbing: decode (REAL for PNG/JPEG payloads, seeded
+    """mapInPandas plumbing: decode (REAL for PNG/WebP/GIF payloads, seeded
     fake otherwise) → resize → features. Arrow batches in,
     (media_id, features array<float>) out."""
 
@@ -153,8 +140,7 @@ def y4m_decode_frame(payload: bytes, frame_idx: int) -> np.ndarray:
     video container (ffmpeg's raw interchange format) needs no codec:
     ASCII stream header (W/H/chroma tags), then per-frame `FRAME\\n` +
     planar YUV. Supports C420 (default, 4:2:0), C422 and C444. Returns
-    the frame as (h, w, 3) uint8 RGB (BT.601 full-range, the same matrix
-    as the JPEG path)."""
+    the frame as (h, w, 3) uint8 RGB (BT.601 full-range)."""
     if not payload.startswith(b"YUV4MPEG2"):
         raise ValueError("not a YUV4MPEG2 payload")
     nl = payload.index(b"\n")

@@ -1,7 +1,8 @@
 """Header-only media probing (functions/mediameta.py): the corpus-scale
 first pass — classify and extract cheap facts from a few hundred bytes,
-no decode. Fixtures come from the in-repo encoders, so probe output is
-checked against known ground truth."""
+no decode. Fixtures come from the in-repo encoders or, for formats
+without one, hand-built headers, so probe output is checked against
+known ground truth."""
 
 import struct
 
@@ -14,10 +15,24 @@ def _box(tag, payload):
     return struct.pack(">I", 8 + len(payload)) + tag + payload
 
 
+def _jpeg_header(w, h):
+    """SOI + a baseline SOF0 segment (3 components, 4:2:0) + EOI."""
+    sof = struct.pack(">BHHB", 8, h, w, 3) + bytes(
+        [1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
+    return (b"\xff\xd8\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
+            + b"\xff\xd9")
+
+
+def _vp8_header(w, h):
+    """RIFF/WEBP with a lossy VP8 chunk: key-frame tag, start code, dims."""
+    frame = (bytes([0x10, 0, 0]) + b"\x9d\x01\x2a"
+             + struct.pack("<HH", w, h) + b"\x00" * 8)
+    chunk = b"VP8 " + struct.pack("<I", len(frame)) + frame
+    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
+
 def _fixtures():
     from avecado_spark.functions.gif import gif_encode
-    from avecado_spark.functions.jpeg import jpeg_encode
-    from avecado_spark.functions.vp8 import webp_encode_lossy
     from avecado_spark.functions.webp import webp_encode
     from avecado_spark.operators.raster import png_encode
     from avecado_spark.sources.multimodal import wav_encode
@@ -46,14 +61,15 @@ def _fixtures():
     return {
         "png": (png_encode(img), {"format": "png", "width": 31,
                                   "height": 24}),
-        "jpeg": (jpeg_encode(img), {"format": "jpeg", "width": 31,
-                                    "height": 24, "progressive": False}),
+        "jpeg": (_jpeg_header(31, 24), {"format": "jpeg", "width": 31,
+                                        "height": 24,
+                                        "progressive": False}),
         "gif": (gif_encode(gimg), {"format": "gif", "width": 31,
                                    "height": 24}),
         "webp_lossless": (webp_encode(rgba),
                           {"format": "webp", "codec": "vp8l",
                            "width": 31, "height": 24}),
-        "webp_lossy": (webp_encode_lossy(img, 20),
+        "webp_lossy": (_vp8_header(31, 24),
                        {"format": "webp", "codec": "vp8",
                         "width": 31, "height": 24}),
         "wav": (wav_encode(sig, rate=16000),

@@ -135,7 +135,7 @@ def test_raster_digest_golden(spark):
 
 
 # ---------------------------------------------------------------------------
-# PNG decoder
+# PNG decoder (the real half of the multimodal image path)
 # ---------------------------------------------------------------------------
 
 def test_png_decode_roundtrip_rgba():
@@ -194,6 +194,45 @@ def test_png_decode_all_filters():
             + _chunk(b"IDAT", zlib.compress(raw))
             + _chunk(b"IEND", b""))
     assert np.array_equal(png_decode(data), img)
+
+
+def test_decode_image_real_png_and_media_features(spark):
+    """decode_image is REAL for PNG payloads: media_features over PNGs
+    produced by png_encode matches the driver-side decode→resize→features
+    pipeline; non-PNG payloads still raise without the fake flag."""
+    import numpy as np
+    import pytest
+    from avecado_spark.sources.multimodal import (decode_image,
+                                                  extract_features,
+                                                  media_features,
+                                                  resize_nearest)
+    rng = np.random.default_rng(3)
+    imgs = {i: rng.integers(0, 256, size=(40 + i, 30 + i, 4), dtype=np.uint8)
+            for i in range(4)}
+    rows = [(i, "image", bytearray(png_encode(imgs[i])),
+             (30 + i, 40 + i, "image/png")) for i in range(4)]
+    df = spark.createDataFrame(
+        rows, schema="media_id long, kind string, payload binary, "
+                     "meta struct<width:int, height:int, mime:string>")
+    got = {r.media_id: np.asarray(r.features, dtype=np.float32)
+           for r in media_features(df, target=16).collect()}
+    assert len(got) == 4
+    for i in range(4):
+        want = extract_features(resize_nearest(imgs[i][:, :, :3], 16, 16))
+        assert np.allclose(got[i], want)
+    # real decode prefers the PNG header dims over metadata
+    d = decode_image(png_encode(imgs[0]), 1, 1)
+    assert d.shape == (40, 30, 3)
+    # formats without a decoder (lossy VP8 WebP, JPEG) fail loudly...
+    lossy = (b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
+             + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4)
+    with pytest.raises(NotImplementedError):
+        decode_image(lossy, 8, 8)
+    with pytest.raises(NotImplementedError):
+        decode_image(b"\xff\xd8\xffJPEGish", 8, 8)
+    # ...and malformed streams fail loudly, not silently
+    with pytest.raises(ValueError):
+        decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ", 8, 8)  # truncated
 
 
 # ---------------------------------------------------------------------------

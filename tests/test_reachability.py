@@ -9,6 +9,11 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 ENTRY_GLOBS = ["__spark_entry__.py", "bench*.py", "jobs/*.py", "perfbench/*.py",
                "avecado_spark/queries.py", "avecado_spark/api.py"]
 TEST_ONLY = {
+    "avecado_spark.functions.flac": "media column codec (FLAC)",
+    "avecado_spark.functions.gif": "media column codec (GIF)",
+    "avecado_spark.functions.mediameta": "header-only media probe",
+    "avecado_spark.functions.webp": "media column codec (lossless WebP)",
+    "avecado_spark.sources.multimodal": "binary media columns",
     "avecado_spark.operators.pyramid": "reference overzoom + exporter pyramid",
     "avecado_spark.sources.mapnik_xml": "reference --map-file surface",
     "avecado_spark.streaming.dedup": "streaming twin of the dedup queries",

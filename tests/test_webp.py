@@ -95,11 +95,11 @@ def test_rgb_input_and_alpha_channel():
 def test_rejects_garbage_and_truncated_vp8():
     with pytest.raises(ValueError, match="not a WebP"):
         webp_decode(b"\x89PNG\r\n\x1a\n")
-    # lossy VP8 decodes for real since r05 — a truncated VP8 chunk must
-    # fail LOUDLY through the container path, not return pixels
+    # lossy VP8 has no decoder — a VP8 chunk must fail LOUDLY through
+    # the container path, not return pixels
     fake_vp8 = (b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
                 + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4)
-    with pytest.raises(ValueError, match="truncated|start code"):
+    with pytest.raises(NotImplementedError, match="lossy WebP"):
         webp_decode(fake_vp8)
 
 
@@ -254,83 +254,3 @@ def test_real_libwebp_lossless_files_decode_exactly():
         # and against the source wherever pixels are opaque
         opaque = rgba[..., 3] > 0
         assert np.array_equal(img[opaque][:, :3], rgba[opaque][:, :3]), name
-
-
-def test_lossy_alpha_chunk_real_files():
-    """Lossy WebP with alpha (VP8X + ALPH + VP8): the alpha plane must
-    byte-match libwebp's own decode for both ALPH compression methods
-    (raw and headerless-VP8L)."""
-    import ctypes
-    lib = _libwebp()
-    if lib is None:
-        pytest.skip("system libwebp not present")
-    lib.WebPEncodeRGBA.restype = ctypes.c_size_t
-    lib.WebPEncodeRGBA.argtypes = [
-        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-        ctypes.c_float, ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8))]
-    rng = np.random.default_rng(9)
-    h, w = 29, 43
-    yy, xx = np.mgrid[0:h, 0:w]
-    rgb = np.stack([(xx * 5) % 256, (yy * 7) % 256,
-                    ((xx + yy) * 3) % 256], -1).astype(np.uint8)
-    alphas = {
-        "gradient": ((xx * 11 + yy * 3) % 256).astype(np.uint8),
-        "noise": rng.integers(0, 256, (h, w)).astype(np.uint8),  # raw
-        "banded": np.where(yy % 7 < 3, 40, 220).astype(np.uint8),
-    }
-    methods_seen = set()
-    for name, alpha in alphas.items():
-        rgba = np.dstack([rgb, alpha])
-        out = ctypes.POINTER(ctypes.c_uint8)()
-        n = lib.WebPEncodeRGBA(rgba.tobytes(), w, h, w * 4, 75.0,
-                               ctypes.byref(out))
-        assert n > 0, name
-        data = bytes(bytearray(ctypes.cast(
-            out, ctypes.POINTER(ctypes.c_uint8 * n)).contents))
-        lib.WebPFree(ctypes.cast(out, ctypes.c_void_p))
-        i = 12
-        while i + 8 <= len(data):
-            tag = data[i:i + 4]
-            ln = int.from_bytes(data[i + 4:i + 8], "little")
-            if tag == b"ALPH":
-                methods_seen.add(data[i + 8] & 3)
-            i += 8 + ln + (ln & 1)
-        want = _libwebp_decode_rgba(data)
-        img = np.asarray(webp_decode(data))
-        assert np.array_equal(img[..., 3], want[..., 3]), name
-    assert methods_seen >= {0, 1}  # raw AND compressed both exercised
-
-
-def test_alpha_row_filters_invert_exactly():
-    """ALPH per-row predictive filters 1-3 (horizontal/vertical/
-    gradient): forward-filter a raw plane with libwebp's conventions
-    (row 0 of vertical/gradient falls back to horizontal, leading pixel
-    of later rows predicts from the row above) and require
-    alpha_decode to invert it exactly."""
-    from avecado_spark.functions.webp import alpha_decode
-    rng = np.random.default_rng(31)
-    h, w = 13, 17
-    plane = rng.integers(0, 256, (h, w)).astype(np.uint8)
-
-    def fwd(a, filt):
-        a = a.astype(np.int64)
-        res = np.zeros_like(a)
-        for r in range(h):
-            for c in range(w):
-                if filt == 1 or r == 0:
-                    p = a[r, c - 1] if c > 0 else (a[r - 1, 0]
-                                                   if r > 0 else 0)
-                elif filt == 2:
-                    p = a[r - 1, c]
-                else:
-                    left = a[r, c - 1] if c > 0 else a[r - 1, 0]
-                    tl = a[r - 1, c - 1] if c > 0 else a[r - 1, 0]
-                    p = min(max(int(left) + int(a[r - 1, c]) - int(tl),
-                                0), 255)
-                res[r, c] = (a[r, c] - p) & 0xFF
-        return res.astype(np.uint8)
-
-    for filt in (1, 2, 3):
-        payload = bytes([filt << 2]) + fwd(plane, filt).tobytes()
-        got = alpha_decode(payload, w, h)
-        assert np.array_equal(got, plane), filt
