@@ -18,10 +18,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.keys import _GEO_RE as GEO_RE  # canonical geo-marker pattern
 from .operators.keys import geocode, with_tile_keys
 from .sources.pages import pages_df, pages_oracle_sql
-
-from .operators.keys import _GEO_RE as GEO_RE  # canonical geo-marker pattern
 
 _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
@@ -52,26 +51,26 @@ def oracle_sql() -> dict[str, str]:
 
 PAGES = pages_oracle_sql()
 
-# geocode in DuckDB: regexp_extract of the same integer markers
+# geocode in DuckDB: regexp_extract of the same pattern keys.geocode runs
 GEO_SQL = f"""(
   SELECT url, text, lang,
-         CAST(regexp_extract(text, 'geo:mxm=(-?\\d+);mym=(-?\\d+)', 1) AS BIGINT) AS mx_mm,
-         CAST(regexp_extract(text, 'geo:mxm=(-?\\d+);mym=(-?\\d+)', 2) AS BIGINT) AS my_mm
+         CAST(regexp_extract(text, '{GEO_RE}', 1) AS BIGINT) AS mx_mm,
+         CAST(regexp_extract(text, '{GEO_RE}', 2) AS BIGINT) AS my_mm
   FROM {PAGES} p
 )"""
 
 
 def _geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geocoded pages, slim projection, geocode-ONCE semantics (the north
-    star's 'lat/lon extracted once via vectorized Arrow UDF from text'):
-    the first caller in a session pays the text scan + Arrow UDF; every
-    later geo query reuses the cached (url, mx_mm, my_mm) table — the
-    sandbox analog of materializing the geocoded table once at corpus
-    scale (at 100 TB this is a written table, not a cache; same
-    one-generation persist_latest the dedup signature pipeline uses).
-    No current consumer reads text/html downstream of _geo, so the
-    cached footprint is four slim columns (lang rides along for the
-    raster tile build — r08)."""
+    star's 'lat/lon extracted once from text'): the first caller in a
+    session pays the text scan + keys.geocode (a JVM-side regexp_extract,
+    no Python boundary); every later geo query reuses the cached
+    (url, mx_mm, my_mm) table — the sandbox analog of materializing the
+    geocoded table once at corpus scale (at 100 TB this is a written
+    table, not a cache; same one-generation persist_latest the dedup
+    signature pipeline uses). No current consumer reads text/html
+    downstream of _geo, so the cached footprint is four slim columns
+    (lang rides along for the raster tile build — r08)."""
     from .operators.dedup import persist_latest
     return persist_latest(
         f"geo:{sf_dir}",

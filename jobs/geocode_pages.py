@@ -4,16 +4,16 @@
     spark-submit --py-files avecado_spark.zip jobs/geocode_pages.py \
         --input /root/testdata/sf0.1 --out /tmp/geo_pages [--buckets 64]
 
-The north star's "lat/lon extracted once via vectorized Arrow UDF from
-text" as a written artifact: at 10^12 documents the geocode pass reads
-every page's text exactly once and lands the slim (url, mx_mm, my_mm,
-x, y) projection in storage, bucketed by the z14 tile key — so every
-downstream consumer (tile builds at any zoom via key shifts, spatial
-joins, per-tile stats) starts from a 3-column scan instead of re-running
-the regex over the raw corpus, and tile-keyed joins between geocoded
-tables are Exchange-free (the bucketed-join property asserted in
-tests/test_plan_quality.py). The in-session analog is queries._geo's
-one-generation cache; this job is the durable form.
+The north star's "lat/lon extracted once from text" as a written
+artifact: at 10^12 documents the geocode pass (keys.geocode, a JVM-side
+regexp_extract) reads every page's text exactly once and lands the slim
+(url, mx_mm, my_mm, x, y) projection in storage, bucketed by the z14
+tile key — so every downstream consumer (tile builds at any zoom via key
+shifts, spatial joins, per-tile stats) starts from a 3-column scan
+instead of re-running the regex over the raw corpus, and tile-keyed
+joins between geocoded tables are Exchange-free (the bucketed-join
+property asserted in tests/test_plan_quality.py). The in-session analog
+is queries._geo's one-generation cache; this job is the durable form.
 """
 
 import argparse

@@ -9,16 +9,34 @@
     of shuffling lineitem twice.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted") if False else \
-        df._jdf.queryExecution().explainString("formatted")
+        df._jdf.queryExecution(), "formatted")
+
+
+def _python_nodes(df) -> list[str]:
+    """Python operators in the executed plan's node tree, one per node id."""
+    tree = _plan(df).split("\n\n")[0]
+    return [n for n in re.findall(r"(\w+) \(\d+\)", tree)
+            if n in _PYTHON_NODES]
+
+
+def test_geocode_has_no_python_boundary(spark):
+    """Geocode is a JVM-side regexp_extract: the text column never crosses
+    into a Python worker."""
+    from avecado_spark.operators.keys import geocode
+    from avecado_spark.sources.pages import pages_df
+    assert _python_nodes(geocode(pages_df(spark, SF))) == []
 
 
 def test_html_pruned_from_tile_build(spark):
@@ -70,6 +88,7 @@ def test_pip_probe_is_slim_and_map_side(spark):
     probe_lines = [l for l in physical.splitlines() if "MapInPandas probe" in l]
     assert probe_lines and all("html" not in l and "text" not in l
                                for l in probe_lines)
+    assert _python_nodes(df) == ["MapInPandas"]  # the probe; geocode is JVM
     exchanges = [l for l in physical.splitlines() if "Exchange" in l]
     assert len(exchanges) <= 1  # only the synthesis DISTINCT
 
@@ -303,10 +322,10 @@ def test_knn_rings_probe_is_slim_and_map_side(spark):
     probe_lines = [l for l in physical.splitlines() if "MapInPandas" in l]
     assert probe_lines and all("html" not in l and "text" not in l
                                for l in probe_lines)
+    assert _python_nodes(df) == ["MapInPandas"]  # the probe; geocode is JVM
     # the geocode-once cache makes InMemoryTableScan print its relation's
     # child plan too, repeating the same Exchange line — count unique
     # exchange signatures, not printed lines
-    import re
     exchanges = {re.sub(r"plan_id=\d+", "", l).strip()
                  for l in physical.splitlines() if "Exchange" in l}
     assert len(exchanges) <= 1  # only the synthesis DISTINCT
@@ -371,7 +390,6 @@ def test_window_top3_single_window_exchange(spark):
     dim broadcast (never shuffled against the aggregated revenue)."""
     from avecado_spark.queries import queries
     q = queries()["tpch_window_top3"](spark, SF)
-    import re
     plan = q._jdf.queryExecution().executedPlan().toString()
     # one Window node ("windowspecdefinition" inside the same line and the
     # WindowGroupLimit rank-pushdown node are not extra passes)
