@@ -22,8 +22,9 @@ from avecado_spark.sources.pages import pages_df  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: geocode sf0.001 pages, build z14 MVT tiles (two-phase
-    salted encode), return (z, x, y, tile_pbf, n_features, interesting)."""
+    """Flagship: geocode sf0.001 pages, build z14 MVT tiles (one exchange
+    on the tile key, then one mapInPandas that encodes and gzips each
+    tile), return (z, x, y, tile_pbf, n_features, interesting)."""
     pages = pages_df(spark, "/root/testdata/sf0.001")
     return build_tiles(pages, z=14)
 

@@ -1,4 +1,4 @@
-"""MVT tile assembly — single-tile kernel + distributed two-phase build.
+"""MVT tile assembly — single-tile kernel + distributed tile builds.
 
 Single-tile kernel (`make_layer`, `make_tile_bytes`) reproduces the reference
 pipeline avecado::make_vector_tile (/root/reference/src/make_vector_tile.cpp:12-47
@@ -10,18 +10,24 @@ goldens in /root/reference/test/make_vector_tile.cpp:55-59 and
   → clip to buffered tile box → integer quantization (floor(v+0.5), ties-up — the reference encoder rounding, shared with build_point_tiles)
   → tolerance thinning → zigzag/command encoding → protobuf → gzip.
 
-Distributed build (`build_point_tiles`) is Spark-first:
+Distributed point build (`build_point_tiles`) is one Spark stage boundary:
 
-  phase 1: repartition by (x, y, salt) → sortWithinPartitions → mapInPandas:
-           encode each page into a FINAL feature byte-block against a fixed
-           per-layer key/value table. Fixed tables make feature blocks
-           position-independent, so partial tiles from different salts merge
-           by byte concatenation — a distributive aggregation (the two-phase
-           salted groupBy the north rule demands for hot urban tiles,
-           reference counterpart: per-layer accumulation in
-           /root/reference/src/backend.cpp:15-44).
-  phase 2: repartition by (x, y) → mapInPandas: concat partial blocks in salt
-           order, wrap with layer header/footer, gzip → one row per tile.
+  repartition by the tile key (pkey >> salt_bits) → sortWithinPartitions by
+  pkey (x, y, salt) → ONE mapInPandas that encodes every feature of the
+  batch at once (`_encode_point_blocks`, numpy-vectorized, against a fixed
+  per-layer key/value table) and writes each tile from one slice of that
+  buffer: layer header + feature blocks + key/value tail, gzip. This is the
+  reference's per-layer accumulation, serialized once per tile (reference
+  src/backend.cpp:15-44). The salt only orders features inside a tile.
+  Every Python stage pays a fixed per-task boundary cost, so the build
+  runs one stage, not a salted encode stage plus a merge stage; with the
+  vectorized encode a hot tile's task is bound by its gzip, which is
+  serial per tile in either shape.
+
+Fixed tables make feature blocks position-independent, so partial tiles
+merge by byte concatenation: `partials_only=True` stops at one row per
+(x, y, salt), and `merge_point_partials` merges any union of partials (salt
+slices, streaming micro-batches) through the same tile writer.
 
 Why mapInPandas instead of groupBy().applyInPandas: at z14 most tiles hold a
 handful of pages, so there are O(number-of-tiles) groups; grouped-map pays
@@ -46,8 +52,7 @@ from ..functions.mercator import WORLD_SIZE as WORLD_SIZE_ENC
 from ..functions.mercator import box_for_tile
 from ..functions.mvt import (GEOM_LINESTRING, GEOM_POINT, GEOM_POLYGON,
                              MvtFeature, MvtLayer, MvtTile, _len_delim,
-                             _varint, _varint_field, _packed_uint32,
-                             encode_geometry)
+                             _varint, _varint_field, encode_geometry)
 from ..functions.wkt import Geom
 
 DEFAULT_TILE_SIZE = 256
@@ -192,28 +197,95 @@ def make_vector_tile(features_by_layer: dict[str, list[dict]], z: int, x: int, y
 # distributed point-tile build
 # ---------------------------------------------------------------------------
 
-# fixed key/value table for the pages layer → feature blocks merge by concat
-PAGES_KEYS = ["lang"]
+# fixed value table for the pages layer → feature blocks merge by concat
 PAGES_VALUES = ["en", "de", "fr", "es", "zh", "ru", "pt"]
-_VAL_IDX = {v: i for i, v in enumerate(PAGES_VALUES)}
 
 _PARTIAL_SCHEMA = ("pkey long, fblock binary, "
                    "n_features long, inside1 boolean")
 _TILE_SCHEMA = "z int, x long, y long, tile_pbf binary, n_features long, interesting boolean"
 
 
-# varint byte cache for small values (zigzagged tile-local coords < 2*extent
-# and tag/len bytes) — keeps the per-feature assembly loop allocation-free
-_VARINT_CACHE = [None]
+def _varint_len(v: np.ndarray) -> np.ndarray:
+    """Protobuf varint length (1..10 bytes) of each uint64 in v."""
+    n = np.ones(len(v), dtype=np.int64)
+    for k in range(1, 10):
+        more = v >= np.uint64(1 << (7 * k))
+        if not more.any():
+            break
+        n += more
+    return n
 
-def _varint_cached(v: int) -> bytes:
-    cache = _VARINT_CACHE[0]
-    if cache is None:
-        cache = [_varint(i) for i in range(1 << 14)]
-        _VARINT_CACHE[0] = cache
-    if 0 <= v < (1 << 14):
-        return cache[v]
-    return _varint(v)
+
+def _put_varint(buf: np.ndarray, pos: np.ndarray, v: np.ndarray,
+                n: np.ndarray) -> None:
+    """Write each uint64 v[i] as the n[i]-byte varint at buf[pos[i]:]."""
+    for k in range(int(n.max(initial=0))):
+        m = n > k
+        byte = (v[m] >> np.uint64(7 * k)).astype(np.uint8) & 0x7F
+        buf[pos[m] + k] = byte | ((n[m] > k + 1).astype(np.uint8) << 7)
+
+
+def _encode_point_blocks(fid: np.ndarray, px: np.ndarray, py: np.ndarray,
+                         combo: np.ndarray, tag_table: list[bytes]
+                         ) -> tuple[np.ndarray, np.ndarray]:
+    """Point features → one uint8 buffer and offsets: row i is the layer's
+    field-2 feature message buf[off[i]:off[i+1]], the same bytes as
+    _len_delim(2, mvt._encode_feature(...)) for id fid[i], the packed tags
+    tag_table[combo[i]], type POINT and geometry MoveTo(px[i], py[i]).
+    Every field is written for all rows at once (no per-feature Python),
+    so the blocks of a sorted run of rows are one buffer slice."""
+    fid = np.asarray(fid, dtype=np.int64).view(np.uint64)
+    px = np.asarray(px, dtype=np.int64)
+    py = np.asarray(py, dtype=np.int64)
+    zx = ((px << 1) ^ (px >> 63)).view(np.uint64)  # zigzag
+    zy = ((py << 1) ^ (py >> 63)).view(np.uint64)
+    used, inv = np.unique(np.asarray(combo, dtype=np.int64),
+                          return_inverse=True)
+    tags = [tag_table[c] for c in used.tolist()]
+    tlen = np.array([len(t) for t in tags], dtype=np.int64)
+    ltag = tlen[inv]
+    lid, lx, ly = _varint_len(fid), _varint_len(zx), _varint_len(zy)
+    body = 6 + lid + ltag + lx + ly  # 08 id | tags | 18 01 22 len 09 x y
+    lbody = _varint_len(body.view(np.uint64))
+    off = np.zeros(len(fid) + 1, dtype=np.int64)
+    np.cumsum(1 + lbody + body, out=off[1:])
+    buf = np.empty(off[-1], dtype=np.uint8)
+
+    p = off[:-1].copy()
+    buf[p] = 0x12
+    _put_varint(buf, p + 1, body.view(np.uint64), lbody)
+    p += 1 + lbody
+    buf[p] = 0x08
+    _put_varint(buf, p + 1, fid, lid)
+    p += 1 + lid
+    if ltag.any():  # gather each row's tag bytes from the used entries
+        row0 = np.cumsum(ltag) - ltag
+        step = np.arange(row0[-1] + ltag[-1])
+        src = np.repeat((np.cumsum(tlen) - tlen)[inv] - row0, ltag) + step
+        flat = np.frombuffer(b"".join(tags), dtype=np.uint8)
+        buf[np.repeat(p - row0, ltag) + step] = flat[src]
+    p += ltag
+    for i, b in enumerate(b"\x18\x01\x22"):  # type POINT, geometry header
+        buf[p + i] = b
+    buf[p + 3] = 1 + lx + ly
+    buf[p + 4] = 0x09  # MoveTo, count 1
+    _put_varint(buf, p + 5, zx, lx)
+    _put_varint(buf, p + 5 + lx, zy, ly)
+    return buf, off
+
+
+def _salt_bits(z: int, n_salts: int) -> int:
+    """Low bits of the packed key pkey = x << (z + s) | y << s | salt that
+    hold the salt: log2(n_salts), capped by the 63 - 2z bits z leaves."""
+    bits = max(1, int(np.ceil(np.log2(max(n_salts, 2)))))
+    if 2 * z + bits > 63:
+        bits = 63 - 2 * z
+        if bits < 1:
+            raise ValueError(f"z={z} > 30 exceeds the packed-key layout")
+        if n_salts > (1 << bits):
+            raise ValueError(
+                f"z={z} leaves {bits} salt bits; use n_salts <= {1 << bits}")
+    return bits
 
 
 def _group_starts(*keys: np.ndarray) -> np.ndarray:
@@ -251,6 +323,52 @@ def _numpy_batches(batches: Iterator[pd.DataFrame], cols: list[str],
         yield carry, starts, np.append(starts[1:], len(carry[cols[0]]))
 
 
+def _with_tkey(batches: Iterator[pd.DataFrame],
+               salt_bits: int) -> Iterator[pd.DataFrame]:
+    """Add each batch's tile key: the packed pkey without its salt bits."""
+    for pdf in batches:
+        pdf["tkey"] = pdf["pkey"].to_numpy() >> salt_bits
+        yield pdf
+
+
+def _point_tile_writer(z: int, layer_name: str, props_cols: tuple,
+                       vocab: dict[str, list], extent: int,
+                       compression_level: int):
+    """The tile half shared by build_point_tiles and merge_point_partials:
+    wrap each tile's concatenated feature blocks in the layer name, the
+    fixed key/value tables, extent and version, then gzip. The
+    one-feature interestingness flag (inside1) was taken at encode time
+    from the quantized coords: for a one-point layer the reference
+    classifier reduces to "some coordinate strictly inside (0, extent)"
+    (util_tile.cpp:44-105), so no tile is ever decoded."""
+    head = _len_delim(1, layer_name.encode("utf-8"))
+    tail = (b"".join(_len_delim(3, k.encode("utf-8")) for k in props_cols)
+            + b"".join(_len_delim(4, mvt._encode_value(v))
+                       for c in props_cols for v in vocab[c])
+            + _varint_field(5, extent)
+            + _varint_field(15, mvt.MVT_VERSION))
+    fixed = len(head) + len(tail)
+    ymask = (1 << z) - 1
+
+    def write(tkeys: np.ndarray, bodies: list, n_features: np.ndarray,
+              inside1: np.ndarray) -> pd.DataFrame:
+        pbfs = []
+        for body in bodies:
+            tile = b"".join((b"\x1a", _varint(fixed + len(body)),
+                             head, body, tail))
+            pbfs.append(mvt.gzip_bytes(tile, compression_level)
+                        if compression_level > 0 else tile)
+        return pd.DataFrame({
+            "z": np.full(len(tkeys), z, dtype=np.int32),
+            "x": tkeys >> z,
+            "y": tkeys & ymask,
+            "tile_pbf": pbfs, "n_features": n_features,
+            "interesting": (n_features > 1) | inside1,
+        })
+
+    return write
+
+
 def build_point_tiles(df: DataFrame, z: int,
                       tile_size: int = DEFAULT_TILE_SIZE,
                       path_multiplier: int = DEFAULT_PATH_MULT,
@@ -264,14 +382,16 @@ def build_point_tiles(df: DataFrame, z: int,
     """pages with (x, y, salt, mx_mm, my_mm, feature_id, <props_cols>) → one
     row per tile (z, x, y, tile_pbf, n_features, interesting).
 
-    Both phases are numpy-offset grouped (no per-group pandas): coordinate
-    math is vectorized across the whole Arrow batch; the only python loop
-    is the per-feature protobuf byte assembly, fed from a varint cache.
-    The single-feature interestingness flag is computed AT ENCODE TIME from
-    the quantized coords (for a one-point layer the reference classifier
-    reduces to "some coordinate strictly inside (0, extent)" —
-    util_tile.cpp:44-105 with one distinct x and one distinct y), so phase 2
-    never has to decode tiles.
+    One exchange on the tile key, one sort on pkey (x, y, salt) and one
+    mapInPandas that encodes every feature with _encode_point_blocks and
+    writes each tile from one slice of that buffer. The salt only orders
+    features inside a tile. A null feature_id, mx_mm, my_mm, x, y or salt
+    fails the job with the tile's z/x/y, on the JVM side, before the
+    exchange.
+
+    partials_only: stop at one PARTIAL row per (x, y, salt) — pkey, its
+    concatenated feature blocks, n_features, inside1 — hash-partitioned on
+    pkey; merge_point_partials turns any union of such rows into tiles.
 
     props_cols: categorical string columns carried as MVT tags. vocab maps
     each to its value list; when None it is computed with one distinct()
@@ -286,15 +406,7 @@ def build_point_tiles(df: DataFrame, z: int,
     extent = tile_size * path_multiplier
     nparts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     nparts = int(nparts)
-
-    salt_bits = max(1, int(np.ceil(np.log2(max(n_salts, 2)))))
-    if 2 * z + salt_bits > 63:
-        salt_bits = 63 - 2 * z
-        if salt_bits < 1:
-            raise ValueError(f"z={z} > 30 exceeds the packed-key layout")
-        if n_salts > (1 << salt_bits):
-            raise ValueError(
-                f"z={z} leaves {salt_bits} salt bits; use n_salts <= {1 << salt_bits}")
+    salt_bits = _salt_bits(z, n_salts)
     if extent > 8191:
         raise ValueError("payload layout supports extent <= 8191 (13 bits)")
 
@@ -377,56 +489,52 @@ def build_point_tiles(df: DataFrame, z: int,
                  * F.lit(extent) + F.lit(0.5)).cast("long")
     py = F.floor(((F.lit(H) - F.col("y") * F.lit(scale)) - mym) / F.lit(scale)
                  * F.lit(extent) + F.lit(0.5)).cast("long")
+    null_key = (F.col("feature_id").isNull() | F.col("mx_mm").isNull()
+                | F.col("my_mm").isNull() | F.col("x").isNull()
+                | F.col("y").isNull() | F.col("salt").isNull())
+    pkey = (F.col("x") * F.lit(1 << (z + salt_bits))
+            + F.col("y") * F.lit(1 << salt_bits) + F.col("salt"))
     slim = df.select(
-        (F.col("x") * F.lit(1 << (z + salt_bits))
-         + F.col("y") * F.lit(1 << salt_bits)
-         + F.col("salt")).alias("pkey"),
+        F.when(null_key, F.raise_error(F.format_string(
+            "point tile %s/%s/%s: null feature_id, mx_mm, my_mm, x, y or salt",
+            F.lit(z), F.col("x"), F.col("y")))).otherwise(pkey).alias("pkey"),
         F.col("feature_id").alias("fid"),
         (combo_expr * F.lit(1 << 26) + px * F.lit(1 << 13) + py).alias("pv"))
 
-    p1cols = ["pkey", "fid", "pv"]
+    write = _point_tile_writer(z, layer_name, props_cols, vocab, extent,
+                               compression_level)
+    group = "pkey" if partials_only else "tkey"
 
-    def phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for arrs, starts, ends in _numpy_batches(batches, p1cols, ["pkey"]):
-            pv = arrs["pv"].astype(np.int64)
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # sorted by pkey → tiles contiguous, each tile's rows in salt order
+        for arrs, starts, ends in _numpy_batches(
+                _with_tkey(batches, salt_bits),
+                ["pkey", "tkey", "fid", "pv"], [group]):
+            pv = arrs["pv"]
             px = (pv >> 13) & 0x1FFF
             py = pv & 0x1FFF
-            combos = (pv >> 26).tolist()
+            buf, off = _encode_point_blocks(arrs["fid"], px, py, pv >> 26,
+                                            tag_table)
+            mv = memoryview(buf)
+            blocks = [mv[a:b] for a, b in zip(off[starts].tolist(),
+                                              off[ends].tolist())]
             inside = ((px > 0) & (px < extent)) | ((py > 0) & (py < extent))
-            zx = (px << 1).tolist()  # px, py >= 0 → zigzag is a left shift
-            zy = (py << 1).tolist()
-            ids = arrs["fid"].astype(np.int64).tolist()
-            vc = _varint_cached
-            tt = tag_table
-            blocks = []
-            for i in range(len(pv)):
-                geom = b"\x09" + vc(zx[i]) + vc(zy[i])
-                body = (b"\x08" + vc(ids[i])
-                        + tt[combos[i]]
-                        + b"\x18\x01"
-                        + b"\x22" + vc(len(geom)) + geom)
-                blocks.append(b"\x12" + vc(len(body)) + body)
-            fb = [b"".join(blocks[s:e]) for s, e in zip(starts, ends)]
-            yield pd.DataFrame({
-                "pkey": arrs["pkey"][starts],
-                "fblock": fb,
-                "n_features": (ends - starts).astype(np.int64),
-                "inside1": inside[starts],
-            })
+            n = (ends - starts).astype(np.int64)
+            if partials_only:
+                yield pd.DataFrame({
+                    "pkey": arrs["pkey"][starts],
+                    "fblock": [bytes(b) for b in blocks],
+                    "n_features": n, "inside1": inside[starts]})
+            else:
+                yield write(arrs["tkey"][starts], blocks, n, inside[starts])
 
-    partial = (slim
-               .repartition(nparts, "pkey")
-               .sortWithinPartitions("pkey")
-               .mapInPandas(phase1, schema=_PARTIAL_SCHEMA))
-
-    if partials_only:
-        return partial
-    return merge_point_partials(partial, z, tile_size=tile_size,
-                                path_multiplier=path_multiplier,
-                                layer_name=layer_name, n_salts=n_salts,
-                                compression_level=compression_level,
-                                num_partitions=nparts,
-                                props_cols=props_cols, vocab=vocab)
+    part = (F.col("pkey") if partials_only
+            else F.shiftright("pkey", salt_bits))
+    return (slim
+            .repartition(nparts, part)
+            .sortWithinPartitions("pkey")
+            .mapInPandas(encode, schema=(_PARTIAL_SCHEMA if partials_only
+                                         else _TILE_SCHEMA)))
 
 
 def merge_point_partials(partial: DataFrame, z: int,
@@ -439,74 +547,45 @@ def merge_point_partials(partial: DataFrame, z: int,
                          props_cols: tuple = ("lang",),
                          vocab: dict[str, list] | None = None,
                          extra_sort_cols: tuple = ()) -> DataFrame:
-    """Phase 2 of the point build as a standalone operator: merge PARTIAL
-    rows (pkey, fblock, n_features, inside1) into final gzipped tiles by
-    byte concatenation. Partials merge from ANY partition of the feature
-    set — salt slices within one job, or MICRO-BATCHES across a streaming
-    ingest (streaming/tiles.py uses batch_id as a time-salt) — because
-    feature blocks index the fixed global key/value tables. Rows with the
-    same pkey from different sources are ordered by extra_sort_cols (e.g.
-    ("batch_id",)) for deterministic tile bytes."""
+    """Merge PARTIAL rows (pkey, fblock, n_features, inside1) from
+    build_point_tiles(partials_only=True) into final gzipped tiles by byte
+    concatenation, through the same tile writer as the one-stage build.
+    Partials merge from ANY partition of the feature set — salt slices, or
+    MICRO-BATCHES across a streaming ingest (streaming/tiles.py uses
+    batch_id as a time-salt) — because feature blocks index the fixed
+    global key/value tables. Rows with the same pkey from different sources
+    are ordered by extra_sort_cols (e.g. ("batch_id",)) for deterministic
+    tile bytes."""
     extent = tile_size * path_multiplier
     nparts = (num_partitions
               or int(partial.sparkSession.conf.get("spark.sql.shuffle.partitions")))
-    salt_bits = max(1, int(np.ceil(np.log2(max(n_salts, 2)))))
-    if 2 * z + salt_bits > 63:
-        salt_bits = 63 - 2 * z
+    salt_bits = _salt_bits(z, n_salts)
     if vocab is None:
         if tuple(props_cols) != ("lang",):
             raise ValueError("merge_point_partials needs the vocab the "
                              "partials were built with")
         vocab = {"lang": PAGES_VALUES}
+    write = _point_tile_writer(z, layer_name, props_cols, vocab, extent,
+                               compression_level)
 
-    layer_head = _len_delim(1, layer_name.encode("utf-8"))
-    layer_tail = (b"".join(_len_delim(3, k.encode("utf-8")) for k in props_cols)
-                  + b"".join(_len_delim(4, mvt._encode_value(v))
-                             for c in props_cols for v in vocab[c])
-                  + _varint_field(5, extent)
-                  + _varint_field(15, mvt.MVT_VERSION))
-    from ..functions.mvt import gzip_bytes as _gzb
-    p2cols = ["tkey", "fblock", "n_features", "inside1"]
-    ymask = (1 << z) - 1
-    compression = compression_level
-
-    def phase2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # sorted by pkey → tiles contiguous, partial blocks in salt order
-        for arrs, starts, ends in _numpy_batches(batches, p2cols, ["tkey"]):
+        for arrs, starts, ends in _numpy_batches(
+                _with_tkey(batches, salt_bits),
+                ["tkey", "fblock", "n_features", "inside1"], ["tkey"]):
             fbl = arrs["fblock"]
-            nf = arrs["n_features"].astype(np.int64)
-            ins = arrs["inside1"]
-            tk = arrs["tkey"].astype(np.int64)
-            # per-tile totals/flags vectorized: one reduceat instead of
-            # 2.5M tiny nf[st:e].sum() scalar reductions (r08 — the z14
-            # build emits ~one tile per 1.5 features, so anything per
-            # TILE in python must be O(1) python ops)
-            totals = np.add.reduceat(nf, starts)
-            inter = (totals > 1) | ins[starts].astype(bool)
-            pbfs = []
-            for st, e in zip(starts, ends):
-                body = layer_head + b"".join(fbl[st:e]) + layer_tail
-                tile_bytes = _len_delim(3, body)
-                if compression > 0:
-                    tile_bytes = _gzb(tile_bytes, compression)
-                pbfs.append(tile_bytes)
-            keys = tk[starts]
-            yield pd.DataFrame({
-                "z": np.full(len(starts), z, dtype=np.int32),
-                "x": keys >> z,
-                "y": keys & ymask,
-                "tile_pbf": pbfs, "n_features": totals,
-                "interesting": inter,
-            })
+            # per-tile totals in one reduceat: anything per TILE in Python
+            # must stay O(1) Python ops (about one tile per 1.5 features)
+            totals = np.add.reduceat(arrs["n_features"].astype(np.int64),
+                                     starts)
+            yield write(arrs["tkey"][starts],
+                        [b"".join(fbl[s:e]) for s, e in zip(starts, ends)],
+                        totals, arrs["inside1"][starts].astype(bool))
 
-    tiled = partial.withColumn("tkey", F.shiftright("pkey", salt_bits))
-    # phase2 needs cols ["tkey","fblock","n_features","inside1"]; group key
-    # order within a tile follows pkey (salt) because the phase-1 sort order
-    # is preserved per partition and we re-sort by pkey here
-    return (tiled
-            .repartition(nparts, "tkey")
+    return (partial
+            .repartition(nparts, F.shiftright("pkey", salt_bits))
             .sortWithinPartitions("pkey", *extra_sort_cols)
-            .mapInPandas(phase2, schema=_TILE_SCHEMA))
+            .mapInPandas(merge, schema=_TILE_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
@@ -527,8 +606,8 @@ def build_feature_tiles(df: DataFrame, izer_config: dict | None = None,
 
     One applyInPandas group per tile: feature layers are the heavy-geometry
     case (few features, real vertex work) where per-group pandas overhead
-    is negligible relative to clipping/encoding; the hot-point case uses
-    build_point_tiles' two-phase path instead.
+    is negligible relative to clipping/encoding; points use
+    build_point_tiles' vectorized one-stage path instead.
     """
     from ..functions import wkt as _wkt
     from ..plans.pipeline import PostProcessor

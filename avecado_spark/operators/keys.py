@@ -9,7 +9,10 @@ Pipeline position: pages(url, warc_ts, html, text, lang)
     quadkey cell id (H3/S2 stand-in: the h3 library is not available in this
     container, so the hierarchical cell index is the z-interleaved quadkey,
     which has the same containment-by-prefix property used for joins)
-  → salt column for skewed hot tiles (two-phase aggregation; north rule).
+  → salt column: a data-independent sub-key under the tile key. The point
+    build sorts on (x, y, salt), so the salt fixes the feature order inside
+    a tile; partial builds (streaming ingest) shuffle on it to spread a hot
+    tile, and the line/polygon build's two-phase aggregation salts too.
 
 Scale notes (100 TB / 10^12 docs):
   * `html` (the huge column) is never referenced here — Catalyst prunes it
@@ -19,6 +22,9 @@ Scale notes (100 TB / 10^12 docs):
     design rule: UDFs only where built-ins cannot express the semantics).
   * salting is data-independent (hash of url) so it needs no skew statistics;
     AQE skew-join splitting is enabled in the session conf as the backstop.
+    The one-stage point build does not spread a hot tile over salts: its
+    vectorized encode leaves that task bound by the tile's gzip, which is
+    serial per tile anyway.
 """
 
 from __future__ import annotations
@@ -70,7 +76,8 @@ def quadkey_col(z: Column, x: Column, y: Column) -> Column:
 
 
 def with_salt(df: DataFrame, n_salts: int = 16, key_col: str = "url") -> DataFrame:
-    """Deterministic salt for two-phase aggregation over hot tiles."""
+    """Deterministic salt: orders features inside a point tile and spreads
+    hot tiles in the partial and two-phase salted builds."""
     return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salts)))
 
 

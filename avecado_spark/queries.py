@@ -789,7 +789,8 @@ def mvt_build_z16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("mvt_build_z14", f"SELECT * FROM {_mvt_build_oracle(14)} t")
 def mvt_build_z14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/S4 (SURVEY §2.4/§2.1): the full two-phase salted MVT tile build.
+    """A1/S4 (SURVEY §2.4/§2.1): the full MVT tile build (one exchange on
+    the tile key, one encode-and-gzip mapInPandas).
     (z, x, y, n_features, interesting) are oracle-checked against an
     independent re-derivation; the tile BYTES are pinned separately by the
     golden-snapshot pytest (tests/test_mvt.py::test_tile_md5_golden) since

@@ -1,28 +1,30 @@
 """Streaming tile ingest: crawl slices arrive as new parquet files under a
 directory; tiles build INCREMENTALLY without re-reading history.
 
-The two-phase salted point build (operators/encode.py) extends across time
-unchanged: a micro-batch is just another salt slice. Each batch runs
-phase 1 only (geometry → quantized protobuf feature blocks keyed by pkey),
-appending PARTIAL rows tagged with batch_id; finalization runs phase 2
-(byte-concatenation merge per tile) over all partials. Feature blocks
-index the FIXED global key/value vocabulary, so partials from different
-batches merge exactly like salt partials within one job.
+The point build (operators/encode.py) makes whole tiles in one stage; its
+partial form, build_point_tiles(partials_only=True), stops at one row per
+(x, y, salt) holding the quantized protobuf feature blocks, and
+merge_point_partials turns any union of such rows into tiles through the
+same tile writer. A micro-batch is just another salt slice: each batch
+appends PARTIAL rows tagged with batch_id, and finalization merges them
+per tile by byte concatenation. Feature blocks index the FIXED global
+key/value vocabulary, so partials from different batches merge exactly
+like salt slices within one job.
 
   streaming_tile_counts   — per-tile doc counts maintained incrementally
       (update mode): the streaming face of tile_assign; availableNow
       parity with the batch query is tested.
-  incremental_tile_build  — foreachBatch phase-1 ingest with exactly-once
+  incremental_tile_build  — foreachBatch partial-row ingest with exactly-once
       semantics: the partial table is partitioned by batch_id and written
       with dynamic partition overwrite, so a replayed batch (restart from
       the streaming checkpoint) REPLACES its own partition instead of
       duplicating it.
-  finalize_tiles          — phase-2 merge over the partial table →
+  finalize_tiles          — merge over the partial table →
       (z, x, y, tile_pbf, n_features, interesting). Rows with the same
       pkey across batches are ordered by batch_id for deterministic bytes.
 
 Scale shape: per batch the work is map-side geometry + one shuffle on
-pkey (phase 1); history is never rescanned. Finalize shuffles only the
+pkey; history is never rescanned. Finalize shuffles only the
 already-encoded blocks (≈100 bytes/feature). A serving deployment
 finalizes per region (part_key pruning) or on a schedule.
 """
@@ -61,7 +63,7 @@ def streaming_tile_counts(spark: SparkSession, pages_path: str,
 def incremental_tile_build(spark: SparkSession, pages_path: str, z: int,
                            out_path: str, n_salts: int = 16,
                            max_files_per_trigger: int | None = 1) -> int:
-    """Run the phase-1 ingest over all currently-available crawl slices
+    """Run the partial-row ingest over all currently-available crawl slices
     (Trigger.AvailableNow) and append batch-tagged partials to
     {out_path}/partials. Returns the number of micro-batches processed.
     Restart-safe: the streaming checkpoint ({out_path}/_checkpoint)
@@ -98,7 +100,7 @@ def incremental_tile_build(spark: SparkSession, pages_path: str, z: int,
 def finalize_tiles(spark: SparkSession, out_path: str, z: int,
                    n_salts: int = 16,
                    compression_level: int = 6) -> DataFrame:
-    """Phase-2 merge over every partial batch → final tiles. batch_id
+    """Merge every partial batch → final tiles. batch_id
     orders same-pkey rows so tile bytes are deterministic across runs."""
     partial = spark.read.parquet(os.path.join(out_path, "partials"))
     return merge_point_partials(partial, z, n_salts=n_salts,

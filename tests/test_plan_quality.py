@@ -94,8 +94,9 @@ def test_pip_probe_is_slim_and_map_side(spark):
 
 
 def test_salting_spreads_hot_tiles(spark):
-    """Two-phase design check: a hot city tile's features arrive in phase 2
-    as MULTIPLE partial rows (one per salt) — the skew spread is real."""
+    """Salt check: a hot city tile's rows carry all 16 salt keys, which
+    order its features inside the one-stage build, and the built tile
+    still holds every one of them."""
     from avecado_spark.operators.encode import build_point_tiles
     from avecado_spark.operators.keys import geocode, with_salt, with_tile_keys
     from avecado_spark.sources.pages import pages_df
@@ -115,6 +116,22 @@ def test_salting_spreads_hot_tiles(spark):
     tiles = build_point_tiles(salted, 14)
     t = tiles.where((F.col("x") == hot.x) & (F.col("y") == hot.y)).first()
     assert t.n_features == hot.n
+
+
+def test_point_build_is_one_exchange_one_python_stage(spark):
+    """The point build shuffles once, on the tile key, and crosses into
+    Python once: encode and tile writing share one mapInPandas."""
+    from avecado_spark.operators.encode import build_point_tiles
+    df = spark.createDataFrame(
+        [(8, 8, s, 100000 * (s + 1), 100000, s, "de") for s in range(4)],
+        "x long, y long, salt int, mx_mm long, my_mm long, "
+        "feature_id long, lang string")
+    tiles = build_point_tiles(df, 4, n_salts=4)
+    assert _python_nodes(tiles) == ["MapInPandas"]
+    physical = tiles._jdf.queryExecution().executedPlan().toString()
+    hashed = [l for l in physical.splitlines()
+              if "Exchange hashpartitioning" in l]
+    assert len(hashed) == 1, physical
 
 
 def test_text_operators_are_shuffle_free(spark):
