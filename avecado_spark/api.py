@@ -59,14 +59,12 @@ def spark_session(master: str | None = None, app: str = "avecado_spark",
           .config("spark.sql.execution.arrow.pyspark.enabled", "true")
           .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
           .config("spark.sql.parquet.filterPushdown", "true"))
-    # The sandbox's test tables are a few MB per file, so bench/tests opt
-    # into a tiny maxPartitionBytes (4m) to parallelize the scan. The
+    # Small test tables (a few MB per file) want a tiny maxPartitionBytes
+    # (4m) to parallelize the scan, so bench/tests pass one. The
     # UNCONFIGURED path keeps Spark's 128m default — a 100 TB deployment
     # must not inherit a 32x task-count inflation by accident.
-    mpb = max_partition_bytes or os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if mpb:
-        b = b.config("spark.sql.files.maxPartitionBytes", mpb)
+    if max_partition_bytes:
+        b = b.config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return b.getOrCreate()

@@ -54,24 +54,10 @@ def bbox_of_rings(rings) -> tuple[float, float, float, float]:
     return bbox(np.vstack(rings))
 
 
-def boxes_intersect(a, b) -> bool:
-    return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
-
-
 def ring_area2(ring: np.ndarray) -> float:
     """Twice signed area (CCW positive)."""
     x, y = ring[:, 0], ring[:, 1]
     return float(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
-
-
-def is_convex(ring: np.ndarray) -> bool:
-    r = ring[:-1] if np.array_equal(ring[0], ring[-1]) else ring
-    n = len(r)
-    if n < 4:
-        return True
-    v = np.diff(np.vstack([r, r[:2]]), axis=0)
-    cross = v[:-1, 0] * v[1:, 1] - v[:-1, 1] * v[1:, 0]
-    return bool(np.all(cross >= -EPS) or np.all(cross <= EPS))
 
 
 # ---------------------------------------------------------------------------
@@ -295,10 +281,6 @@ def polygon_within_polygon(rings_a, rings_b) -> bool:
             if not points_cover(m[None, :], rings_b)[0]:
                 return False
     return True
-
-
-def line_disjoint_polygon(line: np.ndarray, rings) -> bool:
-    return not line_intersects_polygon(line, rings)
 
 
 # ---------------------------------------------------------------------------

@@ -11,10 +11,11 @@ Semantics from the reference:
 
 Two parallel implementations are provided:
   * numpy kernels (used inside pandas UDFs for the encode path), and
-  * Spark Column expressions (used in declarative plans so Catalyst can
-    push filters down to the parquet scan).
+  * the integer tile assignment as Spark Column expressions
+    (`tile_x_expr`/`tile_y_expr`) with DuckDB SQL twins (`tile_x_sql`/
+    `tile_y_sql`).
 
-The *integer* tile-assignment path (`tile_x_col`/`tile_y_col` over
+The *integer* tile-assignment path (`tile_x_expr`/`tile_y_expr` over
 millimeter-precision mercator integers) is deliberately transcendental-free:
 floor of a bigint division. That makes the result bit-identical across Spark,
 numpy, and the DuckDB correctness oracle.
@@ -30,7 +31,6 @@ WORLD_SIZE = 40075016.68  # meters (reference src/util.cpp:3)
 HALF_WORLD = 0.5 * WORLD_SIZE
 WORLD_MM = 40075016680  # integer millimeters
 HALF_WORLD_MM = WORLD_MM // 2
-MAX_ZOOM = 30  # reference mapnik_request_handler.cpp:133 rejects z > 30
 
 
 # ---------------------------------------------------------------------------
@@ -172,38 +172,3 @@ def tile_x_sql(mx_mm_expr: str, z: int) -> str:
 
 def tile_y_sql(my_mm_expr: str, z: int) -> str:
     return _tile_div(f"({HALF_WORLD_MM} - ({my_mm_expr}))", z, "//", "%")
-
-
-def box_for_tile_cols(z: Column, x: Column, y: Column):
-    """Column version of box_for_tile (doubles; same op order as numpy/SQL)."""
-    scale = F.lit(WORLD_SIZE) / F.pow(F.lit(2.0), z.cast("double"))
-    return (
-        x.cast("double") * scale - F.lit(HALF_WORLD),
-        F.lit(HALF_WORLD) - (y.cast("double") + F.lit(1.0)) * scale,
-        (x.cast("double") + F.lit(1.0)) * scale - F.lit(HALF_WORLD),
-        F.lit(HALF_WORLD) - y.cast("double") * scale,
-    )
-
-
-def meters_per_pixel_col(z: Column, tile_px: int = 256) -> Column:
-    return F.lit(WORLD_SIZE) / F.lit(float(tile_px)) / F.pow(F.lit(2.0), z.cast("double"))
-
-
-def valid_tile_col(z: Column, x: Column, y: Column) -> Column:
-    """Range validation (reference mapnik_request_handler.cpp:127-140)."""
-    n = F.shiftleft(F.lit(1).cast("long"), z.cast("int"))
-    return (
-        (z >= 0) & (z <= MAX_ZOOM)
-        & (x >= 0) & (x < n)
-        & (y >= 0) & (y < n)
-    )
-
-
-def ancestor_cols(z: Column, x: Column, y: Column, max_z: int):
-    """Overzoom ancestor key as columns (reference overzoom.cpp:14-23)."""
-    dz = F.greatest(z - F.lit(max_z), F.lit(0))
-    return (
-        F.least(z, F.lit(max_z)),
-        F.shiftright(x.cast("long"), dz.cast("int")),
-        F.shiftright(y.cast("long"), dz.cast("int")),
-    )

@@ -278,79 +278,8 @@ def xyz_from_face_uv(face, u, v):
 
 
 # ---------------------------------------------------------------------------
-# cell rect bounds + bbox covering — the cell-cover index for polygon joins
+# bbox covering — the cell-cover index for polygon joins
 # ---------------------------------------------------------------------------
-
-def _cell_rect_bound(face: int, u0: float, u1: float, v0: float, v1: float):
-    """EXACT lon/lat bounding rect of the sphere region a face (u,v)-rect
-    maps to, as (lon_lo, lon_hi, lat_lo, lat_hi); lon may be "unwrapped"
-    (outside ±π) so an interval never straddles the antimeridian cut —
-    intersection tests shift by 2π.
-
-    Equatorial faces: lon = base + atan(p) is monotonic in one axis (p),
-    and lat = atan(w/sqrt(1+p²)) attains extrema at w-endpoints with the
-    p-endpoint nearest/farthest 0 — closed forms, no sampling.  Polar
-    faces: lat from the radial min/max of the rect (pole if it contains
-    the origin), lon from the corner-direction arc (the support directions
-    of a convex region not containing the origin lie at its vertices)."""
-    import math
-
-    if face in (0, 1, 3, 4):
-        if face in (0, 1):
-            p0, p1, w0, w1 = u0, u1, v0, v1
-        else:  # faces 3/4: lon along v, lat numerator is -u
-            p0, p1, w0, w1 = v0, v1, -u1, -u0
-        base = {0: 0.0, 1: math.pi / 2, 3: math.pi, 4: -math.pi / 2}[face]
-        lon_lo, lon_hi = base + math.atan(p0), base + math.atan(p1)
-        p_near = 0.0 if p0 <= 0.0 <= p1 else min(abs(p0), abs(p1))
-        p_far = max(abs(p0), abs(p1))
-
-        def lat_at(w, favor_near):
-            p = p_near if favor_near else p_far
-            return math.atan(w / math.sqrt(1.0 + p * p))
-
-        lat_hi = lat_at(w1, w1 > 0)
-        lat_lo = lat_at(w0, w0 < 0)
-        return lon_lo, lon_hi, lat_lo, lat_hi
-
-    # polar faces: face 2 xyz=(-u,-v,1), face 5 xyz=(v,u,-1)
-    contains_origin = u0 <= 0.0 <= u1 and v0 <= 0.0 <= v1
-    du = 0.0 if u0 <= 0.0 <= u1 else min(abs(u0), abs(u1))
-    dv = 0.0 if v0 <= 0.0 <= v1 else min(abs(v0), abs(v1))
-    r2min = du * du + dv * dv
-    r2max = max(u0 * u0, u1 * u1) + max(v0 * v0, v1 * v1)
-    top = math.atan(1.0 / math.sqrt(r2min)) if r2min > 0 else math.pi / 2
-    bot = math.atan(1.0 / math.sqrt(r2max)) if r2max > 0 else math.pi / 2
-    lat_lo, lat_hi = (bot, top) if face == 2 else (-top, -bot)
-    if contains_origin:
-        return -math.pi, math.pi, lat_lo, lat_hi
-    corners = [(cu, cv) for cu in (u0, u1) for cv in (v0, v1)]
-    if face == 2:
-        angs = [math.atan2(-cv, -cu) for cu, cv in corners]
-    else:
-        angs = [math.atan2(cu, cv) for cu, cv in corners]
-    ref = angs[0]
-    rel = [math.remainder(a - ref, 2.0 * math.pi) for a in angs]
-    return ref + min(rel), ref + max(rel), lat_lo, lat_hi
-
-
-def _lon_overlap(lo0, hi0, lo1, hi1) -> bool:
-    """Interval overlap on the circle for possibly-unwrapped intervals."""
-    import math
-    for shift in (-2.0 * math.pi, 0.0, 2.0 * math.pi):
-        if lo0 + shift <= hi1 and lo1 <= hi0 + shift:
-            return True
-    return False
-
-
-def _lon_within(lo0, hi0, lo1, hi1) -> bool:
-    """[lo0,hi0] ⊆ [lo1,hi1] on the circle (unwrapped intervals)."""
-    import math
-    for shift in (-2.0 * math.pi, 0.0, 2.0 * math.pi):
-        if lo0 + shift >= lo1 and hi0 + shift <= hi1:
-            return True
-    return False
-
 
 def cover_bbox_rad(lon_lo: float, lat_lo: float, lon_hi: float, lat_hi: float,
                    level: int, max_cells: int = 200_000,
@@ -602,123 +531,16 @@ def cover_bboxes_rad_batch(lon_lo, lat_lo, lon_hi, lat_hi, level: int,
     return ids.view(np.int64), owner
 
 
-def cover_mercator_bboxes_mm_batch(minx, miny, maxx, maxy, level: int,
-                                   adaptive: bool = True):
-    """Batch covers of web-mercator-mm bboxes (see cover_bboxes_rad_batch)."""
+def cover_mercator_bboxes_mm_batch(minx, miny, maxx, maxy, level: int):
+    """Batch ADAPTIVE covers (max level `level`) of web-mercator-mm bboxes
+    (see cover_bboxes_rad_batch)."""
     r = EARTH_RADIUS_M * 1000.0
     minx = np.asarray(minx, dtype=np.float64)
     maxx = np.asarray(maxx, dtype=np.float64)
     return cover_bboxes_rad_batch(
         minx / r, np.arctan(np.sinh(np.asarray(miny, np.float64) / r)),
         maxx / r, np.arctan(np.sinh(np.asarray(maxy, np.float64) / r)),
-        level, adaptive=adaptive)
-
-
-def cover_mercator_bbox_mm(minx: int, miny: int, maxx: int, maxy: int,
-                           level: int, max_cells: int = 200_000,
-                           adaptive: bool = False) -> np.ndarray:
-    """Cover of a web-mercator-mm bbox: the mercator→lon/lat transform is
-    monotonic per axis, so the bbox maps to a lon/lat bbox exactly."""
-    r = EARTH_RADIUS_M * 1000.0
-    lon_lo, lon_hi = minx / r, maxx / r
-    lat_lo = float(np.arctan(np.sinh(miny / r)))
-    lat_hi = float(np.arctan(np.sinh(maxy / r)))
-    return cover_bbox_rad(lon_lo, lat_lo, lon_hi, lat_hi, level, max_cells,
-                          adaptive=adaptive)
-
-
-def cover_polygon_mm(ring_mm, max_level: int, max_cells: int = 200_000,
-                     adaptive: bool = True) -> np.ndarray:
-    """Cover of the polygon REGION itself (mercator-mm ring), not its bbox —
-    for thin or diagonal polygons this prunes the bbox's dead corners, the
-    difference between a candidate set proportional to the polygon and one
-    proportional to its bounding box.
-
-    Cell → lon/lat rect bound → mercator rect (both axis transforms are
-    monotonic; latitude clamps at the mercator world edge).  A cell is
-    PRUNED only when the exact rect/polygon intersection test says disjoint
-    (rect bound ⊇ cell region, so pruning can never lose a candidate);
-    it COLLAPSES (adaptive) when all rect corners are covered and no
-    polygon edge crosses a rect edge — exact for simple polygons.  Face-3
-    cells carry unwrapped longitudes, so the rect is tested at ±world
-    shifts as well."""
-    from . import geometry as G
-
-    ring = np.asarray(ring_mm, dtype=np.float64)
-    rc = G.close_ring(ring)
-    edges = list(zip(rc[:-1], rc[1:]))
-    rmm = EARTH_RADIUS_M * 1000.0
-    world = float(np.pi) * rmm
-
-    def merc_y(lat: float) -> float:
-        s = np.sin(min(max(lat, -1.5707), 1.5707))
-        if abs(s) >= 1.0:
-            return np.sign(s) * 2.0 * world
-        return float(np.arctanh(s)) * rmm
-
-    def rect_vs_poly(x0, x1, y0, y1):
-        """(intersects, within) under the three world shifts."""
-        inter = within = False
-        for shift in (-2.0 * world, 0.0, 2.0 * world):
-            a, b = x0 + shift, x1 + shift
-            rect = np.array([[a, y0], [b, y0], [b, y1], [a, y1]])
-            if not G.boxes_intersect((a, y0, b, y1), G.bbox(ring)):
-                continue
-            if G.points_cover(rect, [ring]).all():
-                crossed = False
-                rrc = G.close_ring(rect)
-                for i in range(4):
-                    p0, p1 = tuple(rrc[i]), tuple(rrc[i + 1])
-                    for q0, q1 in edges:
-                        if G._seg_seg_params(p0, p1, tuple(q0), tuple(q1)):
-                            crossed = True
-                            break
-                    if crossed:
-                        break
-                inter = True
-                if not crossed:
-                    within = True
-                continue
-            if G.polygon_intersects_polygon([rect], [ring]):
-                inter = True
-        return inter, within
-
-    out: list[tuple[int, int, int, int]] = []
-    stack: list[tuple[int, int, int, int]] = [(f, 0, 0, 0) for f in range(6)]
-    while stack:
-        face, lvl, ci, cj = stack.pop()
-        scale = 1.0 / (1 << lvl)
-        u0, u1 = (float(uv_from_st(np.float64(ci * scale))),
-                  float(uv_from_st(np.float64((ci + 1) * scale))))
-        v0, v1 = (float(uv_from_st(np.float64(cj * scale))),
-                  float(uv_from_st(np.float64((cj + 1) * scale))))
-        g_lo, g_hi, la_lo, la_hi = _cell_rect_bound(face, u0, u1, v0, v1)
-        pad = 1e-12
-        inter, within = rect_vs_poly((g_lo - pad) * rmm, (g_hi + pad) * rmm,
-                                     merc_y(la_lo - pad), merc_y(la_hi + pad))
-        if not inter:
-            continue
-        if lvl == max_level or (adaptive and within):
-            out.append((face, lvl, ci, cj))
-            if len(out) > max_cells:
-                raise ValueError(
-                    f"s2 polygon cover exceeds {max_cells} cells at level "
-                    f"{max_level}; choose a coarser level")
-            continue
-        for di in (0, 1):
-            for dj in (0, 1):
-                stack.append((face, lvl + 1, ci * 2 + di, cj * 2 + dj))
-    if not out:
-        return np.zeros(0, dtype=np.int64)
-    faces = np.array([f for f, _, _, _ in out], dtype=np.int64)
-    lvls = np.array([l for _, l, _, _ in out], dtype=np.int64)
-    ii = np.array([i << (MAX_LEVEL - l) for _, l, i, _ in out], dtype=np.int64)
-    jj = np.array([j << (MAX_LEVEL - l) for _, l, _, j in out], dtype=np.int64)
-    leaf = cellid_from_face_ij(faces, ii, jj)
-    lsb = np.uint64(1) << (np.uint64(2)
-                           * (np.uint64(MAX_LEVEL) - lvls.astype(np.uint64)))
-    ids = (leaf & ((~lsb) + np.uint64(1))) | lsb
-    return ids.view(np.int64)
+        level)
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,13 @@ Surfaces:
     to ~10^5 entries): driver ships the table as a Spark broadcast, probes
     inside Arrow-batched mapInPandas with vectorized numpy candidate
     tests. No shuffle: the admin side is broadcast, the probe map-side.
+    `adminize_points_rings` takes its candidates from a dense bbox matrix.
+  * `adminize_points_s2index` — the same first-match PIP contract as
+    `adminize_points_rings`, with candidates from one broadcast S2
+    leaf-range index instead of the bbox matrix (the shape for 10^4+
+    polygons).
+  * `adminize_points_s2join` — the same contract as a shuffle join on S2
+    cells, for polygon tables too large to broadcast.
   * `adminize_points_knn_rings` — exact k-nearest-polygon classification
     (the J2 STRtree.nearest contract) via the packed tree's certified beam
     descent; see its docstring for the bound/pruning math.
@@ -34,7 +41,6 @@ Surfaces:
 from __future__ import annotations
 
 import heapq
-import os
 
 import numpy as np
 import pandas as pd
@@ -49,6 +55,19 @@ from ..functions.wkt import Geom
 # s2index probe: candidate (point, polygon) pairs per vectorized
 # crossing-number pass — bounds the expanded (pair x edge) temporaries
 _PAIR_CHUNK = 65536
+
+# kNN probe points per chunk and beam width. r04 tuning (10^4-polygon
+# probe, measured BOTH ways): beam 4 halves the slate the bound pass walks
+# vs beam 8, and chunk size trades per-polygon numpy call overhead against
+# slate memory traffic (3 × chunk×4·beam float64 live per task).
+# Single-core the optimum is large chunks (32k: 124 us/pt vs 500 at 4k),
+# but under 32 concurrent workers the 50 MB slates thrash memory bandwidth
+# and 32k is 6-8x SLOWER than 8k (interleaved A/B in one run: 8192/4
+# = 5.7-7.4s, 32768/4 = 42-60s, 4096/8 = 9-26s on 3.65M points).
+# 8192/beam-4 is the concurrent sweet spot. Certificate failures (dense
+# rescans) stay ~0 either way — exactness is never traded.
+_KNN_CHUNK = 8192
+_KNN_BEAM = 4
 
 
 # ---------------------------------------------------------------------------
@@ -87,12 +106,6 @@ def make_index(entries: list[AdminEntry]) -> STRtree:
 # ---------------------------------------------------------------------------
 # exact geometry predicates per path (reference trichotomy + intersects)
 # ---------------------------------------------------------------------------
-
-def _path_points(geom: Geom, part) -> np.ndarray | None:
-    if geom.base_type() == "POINT":
-        return part[0]
-    return None
-
 
 def _intersects(geom_type: str, part, rings) -> bool:
     if geom_type == "POINT":
@@ -379,171 +392,6 @@ def adminize_points_rings(df: DataFrame, polygons: list[tuple[int, list, str]],
     return df.mapInPandas(probe, schema=schema)
 
 
-def adminize_points_s2cover(df: DataFrame,
-                            polygons: list[tuple[int, list, str]],
-                            level: int = 8,
-                            x_col: str = "mx_mm", y_col: str = "my_mm",
-                            out_col: str = "admin") -> DataFrame:
-    """adminize_points_rings semantics via an S2 CELL-COVER index (north
-    star: "admin-boundary polygon tables broadcast as packed STRtree/S2
-    cell-cover indexes").  Same output contract as the bbox-prefilter
-    version — the two paths are pinned against each other and against the
-    crossing-number SQL oracle.
-
-    Index build (driver-side, once): each polygon's mercator bbox → a
-    conservative level-`level` cell cover (functions/s2.cover_bbox_rad),
-    flattened to a sorted cell→polygon-list table and BROADCAST.  Probe
-    (map-side, no shuffle): each point computes its level-`level` cell with
-    the vectorized Hilbert walk, binary-searches the cover table, and runs
-    the exact crossing-number test only on cover hits.  Versus the dense
-    bbox matrix in adminize_points_rings this scales as O(points·log cover)
-    instead of O(points·polygons) per batch — at 10^4+ admin polygons the
-    cover probe is the index you want; covers are a superset of true
-    bbox-intersecting cells, so candidate recall is exact by construction."""
-    from ..functions import s2
-
-    polys = sorted(polygons)
-    rings = [np.asarray(r, dtype=np.float64) for _, r, _ in polys]
-    values = [v for _, _, v in polys]
-    # all fixed-level covers in one batched BFS; group owners by cell
-    bbs = np.array([G.bbox(r) for r in rings], dtype=np.float64)
-    ids, owner = s2.cover_mercator_bboxes_mm_batch(
-        bbs[:, 0], bbs[:, 1], bbs[:, 2], bbs[:, 3], level, adaptive=False)
-    order = np.lexsort((owner, ids))
-    ids_s, owner_s = ids[order], owner[order]
-    keys, starts = np.unique(ids_s, return_index=True)
-    vals = np.split(owner_s, starts[1:])
-    bc = df.sparkSession.sparkContext.broadcast((rings, values, keys, vals))
-
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType(list(df.schema.fields) + [StructField(out_col, StringType())])
-
-    def probe(batches):
-        rings, values, keys, vals = bc.value
-        for pdf in batches:
-            mx = pdf[x_col].to_numpy(dtype=np.int64)
-            my = pdf[y_col].to_numpy(dtype=np.int64)
-            pts = np.stack([mx.astype(np.float64),
-                            my.astype(np.float64)], axis=1)
-            n = len(pts)
-            best = np.full(n, len(rings), dtype=np.int64)
-            if n and len(keys):
-                cells = s2.cellid_from_mercator_mm(mx, my, level)
-                pos = np.searchsorted(keys, cells)
-                posc = np.minimum(pos, len(keys) - 1)
-                hit = keys[posc] == cells
-                # per-polygon candidate lists from the cover hits
-                cand: dict[int, list[np.ndarray]] = {}
-                uniq, inv = np.unique(posc[hit], return_inverse=True)
-                hit_idx = np.nonzero(hit)[0]
-                for k, key_pos in enumerate(uniq.tolist()):
-                    sel = hit_idx[inv == k]
-                    for j in vals[key_pos].tolist():
-                        cand.setdefault(j, []).append(sel)
-                for j in sorted(cand):
-                    sel = np.concatenate(cand[j])
-                    sel = sel[best[sel] > j]
-                    if len(sel) == 0:
-                        continue
-                    ins = G.points_in_ring(pts[sel], rings[j])
-                    best[sel[ins]] = np.minimum(best[sel[ins]], j)
-            pdf[out_col] = [values[b] if b < len(rings) else None
-                            for b in best]
-            yield pdf
-
-    return df.mapInPandas(probe, schema=schema)
-
-
-def adminize_points_s2ranges(df: DataFrame,
-                             polygons: list[tuple[int, list, str]],
-                             max_level: int = 12,
-                             cover: str = "bbox",
-                             x_col: str = "mx_mm", y_col: str = "my_mm",
-                             out_col: str = "admin") -> DataFrame:
-    """adminize_points_rings semantics via ADAPTIVE S2 covers joined on
-    LEAF-ID RANGES — the canonical S2 join shape at corpus scale.
-
-    Versus the fixed-level cover (adminize_points_s2cover) the adaptive
-    cover collapses subtrees fully inside the polygon bbox, so its size is
-    O(perimeter) cells at mixed levels (measured: level-12 precision costs
-    ~12k cells where the fixed-level cover needs ~1.6M) — cover precision
-    no longer trades 4×-per-level against broadcast size.  Each cover cell
-    is the leaf range [range_min, range_max]; the probe computes every
-    point's LEAF id once (no level choice on the doc side at all) and
-    binary-searches each polygon's sorted disjoint ranges.  Exact
-    crossing-number PIP confirms candidates; output contract identical to
-    adminize_points_rings (pinned by tests + the j1d oracle family).
-
-    cover="polygon" covers the polygon REGION itself (s2.cover_polygon_mm)
-    instead of its bbox: for thin or diagonal polygons the candidate set
-    shrinks from O(bbox area) to O(polygon area + perimeter) while staying
-    a strict superset of the truth (pruning uses the exact rect/polygon
-    disjointness test), so recall is unchanged by construction.
-
-    Scale note: the per-polygon searchsorted loop is the right shape up to
-    ~10^3 polygons; at ADM2 scale (10^4+) flatten all covers into one
-    globally sorted laminar range table and resolve the containment chain
-    once per point."""
-    from ..functions import s2
-
-    if cover not in ("bbox", "polygon"):
-        raise ValueError(f"unknown cover kind: {cover!r}")
-    polys = sorted(polygons)
-    rings = [np.asarray(r, dtype=np.float64) for _, r, _ in polys]
-    values = [v for _, _, v in polys]
-    if cover == "polygon":
-        ranges = []
-        for ring in rings:
-            cu = s2.cover_polygon_mm(ring, max_level).view(np.uint64)
-            rmin, rmax = s2.range_min(cu), s2.range_max(cu)
-            order = np.argsort(rmin)
-            ranges.append((rmin[order], rmax[order]))
-    else:
-        # all bbox covers in one batched BFS, split back by owner
-        bbs = np.array([G.bbox(r) for r in rings], dtype=np.float64)
-        ids, owner = s2.cover_mercator_bboxes_mm_batch(
-            bbs[:, 0], bbs[:, 1], bbs[:, 2], bbs[:, 3],
-            max_level, adaptive=True)
-        cu = ids.view(np.uint64)
-        rmin, rmax = s2.range_min(cu), s2.range_max(cu)
-        order = np.lexsort((rmin, owner))
-        owner_s, rmin_s, rmax_s = owner[order], rmin[order], rmax[order]
-        cuts = np.searchsorted(owner_s, np.arange(len(rings) + 1))
-        ranges = [(rmin_s[cuts[k]:cuts[k + 1]], rmax_s[cuts[k]:cuts[k + 1]])
-                  for k in range(len(rings))]
-    bc = df.sparkSession.sparkContext.broadcast((rings, values, ranges))
-
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType(list(df.schema.fields) + [StructField(out_col, StringType())])
-
-    def probe(batches):
-        rings, values, ranges = bc.value
-        for pdf in batches:
-            mx = pdf[x_col].to_numpy(dtype=np.int64)
-            my = pdf[y_col].to_numpy(dtype=np.int64)
-            pts = np.stack([mx.astype(np.float64),
-                            my.astype(np.float64)], axis=1)
-            n = len(pts)
-            best = np.full(n, len(rings), dtype=np.int64)
-            if n:
-                leaf = s2.cellid_from_mercator_mm(mx, my).view(np.uint64)
-                for j, (rmin, rmax) in enumerate(ranges):
-                    if len(rmin) == 0:
-                        continue
-                    pos = np.searchsorted(rmin, leaf, side="right") - 1
-                    cand = (pos >= 0) & (leaf <= rmax[np.maximum(pos, 0)])
-                    sel = np.nonzero(cand & (best > j))[0]
-                    if len(sel) == 0:
-                        continue
-                    ins = G.points_in_ring(pts[sel], rings[j])
-                    best[sel[ins]] = np.minimum(best[sel[ins]], j)
-            pdf[out_col] = [values[b] if b < len(rings) else None
-                            for b in best]
-            yield pdf
-
-    return df.mapInPandas(probe, schema=schema)
-
-
 def _box_candidates(pts: np.ndarray, boxes: np.ndarray,
                     chunk_cells: int = 8_000_000):
     """(point_idx, box_idx) pairs where the point lies in the box — the
@@ -634,19 +482,6 @@ def adminize_points_knn_rings(df: DataFrame,
                         + [StructField(out_col, StringType()),
                            StructField(rank_col, LongType())])
 
-    # r04 tuning (10^4-polygon probe, measured BOTH ways): beam 4 halves
-    # the slate the bound pass walks vs beam 8, and chunk size trades
-    # per-polygon numpy call overhead against slate memory traffic
-    # (3 × chunk×4·beam float64 live per task). Single-core the optimum
-    # is large chunks (32k: 124 us/pt vs 500 at 4k), but under 32
-    # concurrent workers the 50 MB slates thrash memory bandwidth and
-    # 32k is 6-8x SLOWER than 8k (interleaved A/B, same session: 8192/4
-    # = 5.7-7.4s, 32768/4 = 42-60s, 4096/8 = 9-26s on 3.65M points).
-    # 8192/beam-4 is the concurrent sweet spot; env-tunable for other
-    # hosts. Certificate failures (dense rescans) stay ~0 either way —
-    # exactness is never traded.
-    _CHUNK = int(os.environ.get("SPARK_GRAFT_KNN_CHUNK", "8192"))
-    _BEAM = int(os.environ.get("SPARK_GRAFT_KNN_BEAM", "4"))
     _DENSE_M = 64          # below this, dense exact beats the tree
 
     acc = None
@@ -667,16 +502,16 @@ def adminize_points_knn_rings(df: DataFrame,
          cls_of, pos_in_class, class_stacks) = bc.value
         m = len(rings)
         kk = min(k, m)
-        beam = max(_BEAM, kk)
+        beam = max(_KNN_BEAM, kk)
         BIG = np.iinfo(np.int64).max
         for pdf in batches:
             xall = pdf[x_col].to_numpy(dtype=np.float64)
             yall = pdf[y_col].to_numpy(dtype=np.float64)
             n = len(xall)
             order_out = np.empty((n, kk), dtype=np.int64)
-            for s in range(0, n, _CHUNK):
-                x = xall[s:s + _CHUNK]
-                y = yall[s:s + _CHUNK]
+            for s in range(0, n, _KNN_CHUNK):
+                x = xall[s:s + _KNN_CHUNK]
+                y = yall[s:s + _KNN_CHUNK]
                 pts = np.stack([x, y], axis=1)
                 if m <= _DENSE_M:
                     order_out[s:s + len(x)] = _dense_topk(pts, rings, m, kk)
@@ -750,7 +585,6 @@ def polygons_to_df(spark, polygons: list[tuple[int, list, str]]):
 def adminize_points_s2join(df: DataFrame, polys_df: DataFrame,
                            id_col: str = "url",
                            max_level: int = 12,
-                           cover: str = "bbox",
                            x_col: str = "mx_mm", y_col: str = "my_mm",
                            out_col: str = "admin") -> DataFrame:
     """adminize_points_rings semantics as a DISTRIBUTED SHUFFLE join — the
@@ -760,7 +594,8 @@ def adminize_points_s2join(df: DataFrame, polys_df: DataFrame,
 
     Shape (the canonical S2 join at corpus scale):
       1. polygon side: one map-side pass computes each polygon's ADAPTIVE
-         mixed-level cover (bbox or region, s2.cover_*) → (cell, pid) rows.
+         mixed-level bbox cover (s2.cover_mercator_bboxes_mm_batch) →
+         (cell, pid) rows.
       2. point side: one vectorized map-side pass computes the LEAF id;
          ancestors at the cover's distinct levels are pure JVM bit math
          (mask/or on the long), exploded to (cell, point) rows.
@@ -779,39 +614,19 @@ def adminize_points_s2join(df: DataFrame, polys_df: DataFrame,
 
     from ..functions import s2
 
-    if cover not in ("bbox", "polygon"):
-        raise ValueError(f"unknown cover kind: {cover!r}")
-    spark = df.sparkSession
-
     # -- 1. polygon covers ---------------------------------------------------
     def gen_covers(batches):
         for pdf in batches:
+            if not len(pdf):
+                continue
             pids = pdf["pid"].to_numpy(dtype=np.int64)
-            rings_np = [np.asarray(c, dtype=np.float64).reshape(-1, 2)
-                        for c in pdf["coords"]]
-            if cover == "bbox" and rings_np:
-                # whole Arrow batch of bbox covers in one batched BFS
-                bbs = np.array([G.bbox(r) for r in rings_np])
-                ids, owner = s2.cover_mercator_bboxes_mm_batch(
-                    bbs[:, 0], bbs[:, 1], bbs[:, 2], bbs[:, 3],
-                    max_level, adaptive=True)
-                cells = ids
-                lvls = s2.cell_level(ids.view(np.uint64)).astype(np.int64)
-                opids = pids[owner]
-            else:
-                out_cell, out_lvl, out_pid = [], [], []
-                for pid, ring in zip(pids.tolist(), rings_np):
-                    cells = s2.cover_polygon_mm(ring, max_level)
-                    out_cell.append(cells)
-                    out_lvl.append(s2.cell_level(cells.view(np.uint64)))
-                    out_pid.append(np.full(len(cells), pid, dtype=np.int64))
-                cells = (np.concatenate(out_cell) if out_cell
-                         else np.zeros(0, np.int64))
-                lvls = (np.concatenate(out_lvl).astype(np.int64) if out_lvl
-                        else np.zeros(0, np.int64))
-                opids = (np.concatenate(out_pid) if out_pid
-                         else np.zeros(0, np.int64))
-            yield pd.DataFrame({"cell": cells, "lvl": lvls, "pid": opids})
+            # whole Arrow batch of bbox covers in one batched BFS
+            bbs = np.array([G.bbox(np.asarray(c, dtype=np.float64)
+                                   .reshape(-1, 2)) for c in pdf["coords"]])
+            ids, owner = s2.cover_mercator_bboxes_mm_batch(
+                bbs[:, 0], bbs[:, 1], bbs[:, 2], bbs[:, 3], max_level)
+            lvls = s2.cell_level(ids.view(np.uint64)).astype(np.int64)
+            yield pd.DataFrame({"cell": ids, "lvl": lvls, "pid": pids[owner]})
 
     from .dedup import persist_latest
     covers = polys_df.mapInPandas(gen_covers, schema="cell long, lvl long, pid long")
@@ -928,16 +743,24 @@ def _leaf_interval_index(ranges: list[tuple[np.ndarray, np.ndarray]]):
 def adminize_points_s2index(df: DataFrame,
                             polygons: list[tuple[int, list, str]],
                             max_level: int = 12,
-                            cover: str = "bbox",
                             x_col: str = "mx_mm", y_col: str = "my_mm",
                             out_col: str = "admin",
                             metrics: dict | None = None) -> DataFrame:
     """adminize_points_rings semantics via the FLATTENED elementary-interval
-    S2 index (_leaf_interval_index): one broadcast table, one searchsorted
-    per batch for ALL polygons — probe cost O(points · (log R + depth)),
-    independent of the polygon count, vs the per-polygon searchsorted loop
-    in adminize_points_s2ranges.  This is the broadcast path sized for
-    10^4+ admin polygons (ADM2 planet scale).
+    S2 index (_leaf_interval_index) — the one broadcast S2 probe.
+
+    Index build (driver-side, once): each polygon's mercator bbox gets an
+    ADAPTIVE cover (cells fully inside the bbox stay coarse, boundary cells
+    go down to `max_level`), so its size is O(perimeter) cells; every cover
+    cell is the leaf-id range [range_min, range_max], and all polygons'
+    ranges flatten into one sorted table that is BROADCAST.  Probe
+    (map-side, no shuffle): each point's LEAF id, one searchsorted per
+    batch for ALL polygons, then the exact crossing-number test on the
+    candidates only — probe cost O(points · (log R + depth)), independent
+    of the polygon count.  Covers are supersets of the bboxes, so candidate
+    recall is exact by construction.  This is the broadcast path sized for
+    10^4+ admin polygons (ADM2 planet scale); adminize_points_s2join is the
+    shuffle shape for polygon tables too large to broadcast.
 
     Pass `metrics={}` to instrument the probe (same contract as the kNN
     probe): `index_build_s` (driver-side cover+index build, a plain float)
@@ -951,36 +774,26 @@ def adminize_points_s2index(df: DataFrame,
 
     from ..functions import s2
 
-    if cover not in ("bbox", "polygon"):
-        raise ValueError(f"unknown cover kind: {cover!r}")
     t_build0 = _time.time()
     polys = sorted(polygons)
     rings = [np.asarray(r, dtype=np.float64) for _, r, _ in polys]
     values = [v for _, _, v in polys]
-    if cover == "polygon":
-        ranges = []
-        for ring in rings:
-            cu = s2.cover_polygon_mm(ring, max_level).view(np.uint64)
-            ranges.append((np.sort(s2.range_min(cu)),
-                           np.sort(s2.range_max(cu))))
-    else:
-        # ALL bbox covers in one batched BFS (cover_bboxes_rad_batch):
-        # per-owner cells equal the per-ring scalar cover (test-pinned),
-        # built in a handful of full-width numpy passes instead of one
-        # Python recursion per polygon — the index-build side of the
-        # "10^4+ admin polygons" sizing, not just the probe side.
-        bbs = np.array([G.bbox(r) for r in rings], dtype=np.float64)
-        ids, owner = s2.cover_mercator_bboxes_mm_batch(
-            bbs[:, 0], bbs[:, 1], bbs[:, 2], bbs[:, 3],
-            max_level, adaptive=True)
-        cu = ids.view(np.uint64)
-        lo, hi = s2.range_min(cu), s2.range_max(cu)
-        order = np.argsort(owner, kind="stable")
-        owner, lo, hi = owner[order], lo[order], hi[order]
-        cuts = np.searchsorted(owner, np.arange(len(rings) + 1))
-        ranges = [(np.sort(lo[cuts[k]:cuts[k + 1]]),
-                   np.sort(hi[cuts[k]:cuts[k + 1]]))
-                  for k in range(len(rings))]
+    # ALL bbox covers in one batched BFS (cover_bboxes_rad_batch):
+    # per-owner cells equal the per-ring scalar cover (test-pinned),
+    # built in a handful of full-width numpy passes instead of one
+    # Python recursion per polygon — the index-build side of the
+    # "10^4+ admin polygons" sizing, not just the probe side.
+    bbs = np.array([G.bbox(r) for r in rings], dtype=np.float64)
+    ids, owner = s2.cover_mercator_bboxes_mm_batch(
+        bbs[:, 0], bbs[:, 1], bbs[:, 2], bbs[:, 3], max_level)
+    cu = ids.view(np.uint64)
+    lo, hi = s2.range_min(cu), s2.range_max(cu)
+    order = np.argsort(owner, kind="stable")
+    owner, lo, hi = owner[order], lo[order], hi[order]
+    cuts = np.searchsorted(owner, np.arange(len(rings) + 1))
+    ranges = [(np.sort(lo[cuts[k]:cuts[k + 1]]),
+               np.sort(hi[cuts[k]:cuts[k + 1]]))
+              for k in range(len(rings))]
     bounds, off, gap_pids, _ = _leaf_interval_index(ranges)
     # packed ring edges (a->b per edge, rings closed) so the probe can run
     # ONE vectorized crossing-number pass over ALL candidate (point, pid)

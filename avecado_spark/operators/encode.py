@@ -385,9 +385,10 @@ def build_point_tiles(df: DataFrame, z: int,
     One exchange on the tile key, one sort on pkey (x, y, salt) and one
     mapInPandas that encodes every feature with _encode_point_blocks and
     writes each tile from one slice of that buffer. The salt only orders
-    features inside a tile. A null feature_id, mx_mm, my_mm, x, y or salt
-    fails the job with the tile's z/x/y, on the JVM side, before the
-    exchange.
+    features inside a tile. A null feature_id, mx_mm, my_mm, x, y or salt,
+    or a point whose mx_mm/my_mm lies outside its (x, y) tile (tile-local
+    px/py outside [0, extent]), fails the job with the tile's z/x/y, on
+    the JVM side, before the exchange.
 
     partials_only: stop at one PARTIAL row per (x, y, salt) — pkey, its
     concatenated feature blocks, n_features, inside1 — hash-partitioned on
@@ -492,12 +493,21 @@ def build_point_tiles(df: DataFrame, z: int,
     null_key = (F.col("feature_id").isNull() | F.col("mx_mm").isNull()
                 | F.col("my_mm").isNull() | F.col("x").isNull()
                 | F.col("y").isNull() | F.col("salt").isNull())
+    # a point keyed to a tile it does not lie in has px/py outside
+    # [0, extent]; packed into pv, a negative or wider-than-13-bit value
+    # corrupts both its geometry and its tag
+    off_tile = ((px < 0) | (px > extent) | (py < 0) | (py > extent))
     pkey = (F.col("x") * F.lit(1 << (z + salt_bits))
             + F.col("y") * F.lit(1 << salt_bits) + F.col("salt"))
+
+    def fail(msg):
+        return F.raise_error(F.format_string(
+            "point tile %s/%s/%s: " + msg, F.lit(z), F.col("x"), F.col("y")))
+
     slim = df.select(
-        F.when(null_key, F.raise_error(F.format_string(
-            "point tile %s/%s/%s: null feature_id, mx_mm, my_mm, x, y or salt",
-            F.lit(z), F.col("x"), F.col("y")))).otherwise(pkey).alias("pkey"),
+        F.when(null_key, fail("null feature_id, mx_mm, my_mm, x, y or salt"))
+        .when(off_tile, fail("mx_mm, my_mm lie outside the tile"))
+        .otherwise(pkey).alias("pkey"),
         F.col("feature_id").alias("fid"),
         (combo_expr * F.lit(1 << 26) + px * F.lit(1 << 13) + py).alias("pv"))
 

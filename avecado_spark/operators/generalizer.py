@@ -16,10 +16,6 @@ Algorithms (mapnik names):
       rather than <=").
 
 Endpoints always survive. Geometry type is preserved.
-
-Spark surface: `simplify_lines` maps a DataFrame of (xs: array<double>,
-ys: array<double>) linestrings through an Arrow-batched UDF; per-vertex work
-is numpy inside each row's arrays.
 """
 
 from __future__ import annotations
@@ -27,10 +23,6 @@ from __future__ import annotations
 import heapq
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, StructField, StructType)
 
 from ..functions.wkt import Geom
 
@@ -201,30 +193,3 @@ def generalize_features(features: list[dict], algorithm: str = "douglas-peucker"
                                                 for r in rings] for rings in g.parts]))
         out.append({**feat, "geoms": new_geoms})
     return out
-
-
-_LINE_SCHEMA_FIELDS = [StructField("xs", ArrayType(DoubleType())),
-                       StructField("ys", ArrayType(DoubleType()))]
-
-
-def simplify_lines(df: DataFrame, tolerance: float,
-                   algorithm: str = "douglas-peucker",
-                   xs_col: str = "xs", ys_col: str = "ys") -> DataFrame:
-    """Spark surface: simplify (xs, ys) linestring arrays column-wise."""
-    out_schema = StructType(_LINE_SCHEMA_FIELDS)
-
-    @F.pandas_udf(out_schema)
-    def _simp(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        nxs, nys = [], []
-        for x, y in zip(xs, ys):
-            arr = np.column_stack([np.asarray(x, dtype=np.float64),
-                                   np.asarray(y, dtype=np.float64)])
-            s = simplify(arr, tolerance, algorithm)
-            nxs.append(s[:, 0])
-            nys.append(s[:, 1])
-        return pd.DataFrame({"xs": nxs, "ys": nys})
-
-    res = df.withColumn("_s", _simp(F.col(xs_col), F.col(ys_col)))
-    return (res.withColumn(xs_col, F.col("_s.xs"))
-               .withColumn(ys_col, F.col("_s.ys"))
-               .drop("_s"))

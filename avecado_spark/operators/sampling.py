@@ -47,13 +47,6 @@ def bucket(col: str, den: int, salt: str = "") -> Column:
         f"16, 10) AS BIGINT) % {den}")
 
 
-def bucket_sql(col: str, den: int, salt: str = "") -> str:
-    """The identical bucket as ANSI/DuckDB SQL (oracle side)."""
-    sfx = f" || ':{salt}'" if salt else ""
-    return (f"(('0x' || substr(md5(CAST({col} AS VARCHAR){sfx}), 1, 15))"
-            f"::BIGINT % {den})")
-
-
 def sample_fraction(df: DataFrame, key: str, num: int, den: int,
                     salt: str = "sample") -> DataFrame:
     """Keep exactly the rows whose bucket(key, den) < num — a

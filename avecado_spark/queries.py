@@ -314,17 +314,19 @@ def j1d_pip_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("j1e_pip_s2cover", _PIP_RINGS_SQL)
 def j1e_pip_s2cover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 via the S2 CELL-COVER broadcast index (north star's "S2 cell-cover
+    """J1 via the broadcast S2 leaf-range index (north star's "S2 cell-cover
     indexes"): same polygons and same answer as j1d_pip_polygon, but
-    candidates come from a cover-cell lookup (each point's level-8 Hilbert
-    cell binary-searched against the broadcast cover table) instead of the
-    dense bbox matrix — the O(points·log cover) shape that holds at 10^4+
-    admin polygons.  The oracle is the IDENTICAL crossing-number SQL as
-    j1d: a cover that missed any containing cell would drop rows and
-    hash-mismatch, so candidate recall is oracle-checked, not assumed."""
+    candidates come from adminize_points_s2index — each point's S2 leaf id
+    binary-searched against the flattened adaptive-cover range table
+    (max level 8) — instead of the dense bbox matrix: the
+    O(points·log cover) shape that holds at 10^4+ admin polygons.  The
+    oracle is the IDENTICAL crossing-number SQL as j1d: a cover that missed
+    any containing cell would drop rows and hash-mismatch, so candidate
+    recall is oracle-checked, not assumed."""
     g = _geo(spark, sf_dir).select("url", "mx_mm", "my_mm")
-    from .operators.adminizer import adminize_points_s2cover
-    return adminize_points_s2cover(g, ADMIN_RINGS, level=8).select("url", "admin")
+    from .operators.adminizer import adminize_points_s2index
+    return adminize_points_s2index(g, ADMIN_RINGS, max_level=8).select(
+        "url", "admin")
 
 
 @register("j2_knn_nearest", f"""

@@ -68,13 +68,3 @@ def tile_url(pattern: str, z: int, x: int, y: int) -> str:
     return (pattern.replace("{z}", str(z))
                    .replace("{x}", str(x))
                    .replace("{y}", str(y)))
-
-
-def export_pbf_tree_from_table(spark, table_path: str, out_dir: str, z: int,
-                               x0: int, x1: int, y0: int, y1: int) -> None:
-    """Serving export wired through the partitioned tile table: the
-    viewport read is partition-pruned (see manifest.read_tiles_bbox), so
-    exporting one region never scans the whole table."""
-    from .manifest import read_tiles_bbox
-    tiles = read_tiles_bbox(spark, table_path, z, x0, x1, y0, y1)
-    write_pbf_tree(tiles, out_dir)

@@ -382,3 +382,22 @@ def test_null_key_input_fails_naming_the_tile(spark, col):
     tile = f"4/{bad['x'] or 'null'}/{bad['y'] or 'null'}"
     with pytest.raises(Exception, match=f"point tile {tile}: null"):
         build_point_tiles(df, 4, n_salts=4).collect()
+
+
+@pytest.mark.parametrize("mx_mm,my_mm", [
+    (-1_000_000_000, 1_000_000_000),   # in 4/7/7: px, py < 0
+    (3_000_000_000, -1_000_000_000),   # in 4/9/8: px > extent
+    (1_000_000_000, -3_000_000_000),   # in 4/8/9: py > extent
+], ids=["northwest", "east", "south"])
+def test_point_outside_its_tile_fails_naming_the_tile(spark, mx_mm, my_mm):
+    """A point keyed to tile 4/8/8 that lies in another tile fails the build
+    with the tile's z/x/y instead of packing an out-of-range px/py into its
+    geometry and tag."""
+    from avecado_spark.operators.encode import build_point_tiles
+    df = spark.createDataFrame(
+        [(8, 8, 0, mx_mm, my_mm, 1, "de")],
+        "x long, y long, salt int, mx_mm long, my_mm long, "
+        "feature_id long, lang string")
+    with pytest.raises(Exception, match="point tile 4/8/8: mx_mm, my_mm lie "
+                                        "outside the tile"):
+        build_point_tiles(df, 4, n_salts=4).collect()

@@ -1,6 +1,7 @@
 """Every avecado_spark module is imported (transitively) from a non-test
 entry point, or is pinned below as test-only with a reason. A new module
-that nothing reaches fails here instead of growing unnoticed."""
+that nothing reaches fails here instead of growing unnoticed. Likewise
+every undecorated top-level function is referenced from some .py file."""
 
 import ast
 import pathlib
@@ -59,3 +60,40 @@ def test_every_module_is_reached_or_pinned():
     unreached = set(modules) - seen
     assert unreached == set(TEST_ONLY), (sorted(unreached - set(TEST_ONLY)),
                                          sorted(set(TEST_ONLY) - unreached))
+
+
+def _referenced_names(tree):
+    """Names a module uses as code, each top-level def's uses of its own
+    name (recursion) left out."""
+    for stmt in tree.body:
+        names = set()
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.alias):
+                names.add(node.name.rsplit(".", 1)[-1])
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            names.discard(stmt.name)
+        yield from names
+
+
+def test_every_function_is_referenced():
+    """An undecorated top-level def in avecado_spark/ whose name no .py file
+    of the repo (tests included) uses is dead code. Decorated defs register
+    themselves (queries, UDFs), so they are exempt. A name is "used" only
+    as code (a call, attribute or import), not in a docstring or comment."""
+    defs = {}
+    for p in ROOT.glob("avecado_spark/**/*.py"):
+        for node in ast.parse(p.read_text()).body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not node.decorator_list):
+                defs.setdefault(node.name, []).append(_name(p))
+    used = set()
+    for p in ROOT.rglob("*.py"):
+        if ".git" not in p.parts:
+            used.update(_referenced_names(ast.parse(p.read_text())))
+    dead = sorted(f"{mod}.{name}" for name, mods in defs.items()
+                  if name not in used for mod in mods)
+    assert not dead, dead

@@ -1,47 +1,12 @@
-"""S2 cell-cover index: rect-bound exactness, cover conservativeness
-(the candidate-recall contract of the cover join), and operator parity
-between the cover probe and the dense bbox probe."""
+"""S2 bbox covers: conservativeness (the candidate-recall contract of the
+cover join), the size cap, pruning, and batch/scalar parity."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from avecado_spark.functions import s2
 
 rng = np.random.default_rng(11)
-
-
-def _lonlat_of_st(face, s, t):
-    u, v = s2.uv_from_st(np.asarray(s)), s2.uv_from_st(np.asarray(t))
-    x, y, z = s2.xyz_from_face_uv(np.full_like(u, face, dtype=np.int64), u, v)
-    return np.arctan2(y, x), np.arctan2(z, np.hypot(x, y))
-
-
-def test_cell_rect_bound_contains_cell_samples():
-    """The claimed rect bound of a cell must contain every point of the
-    cell — sampled densely, on every face, at several levels."""
-    for face in range(6):
-        for level in (1, 3, 6):
-            n = 1 << level
-            for _ in range(8):
-                ci, cj = rng.integers(0, n, 2)
-                s0, s1 = ci / n, (ci + 1) / n
-                t0, t1 = cj / n, (cj + 1) / n
-                u0, u1 = float(s2.uv_from_st(np.float64(s0))), \
-                    float(s2.uv_from_st(np.float64(s1)))
-                v0, v1 = float(s2.uv_from_st(np.float64(t0))), \
-                    float(s2.uv_from_st(np.float64(t1)))
-                lon_lo, lon_hi, lat_lo, lat_hi = s2._cell_rect_bound(
-                    face, u0, u1, v0, v1)
-                ss = rng.uniform(s0, s1, 200)
-                tt = rng.uniform(t0, t1, 200)
-                lon, lat = _lonlat_of_st(face, ss, tt)
-                assert np.all(lat >= lat_lo - 1e-12), (face, level)
-                assert np.all(lat <= lat_hi + 1e-12), (face, level)
-                ok = ((lon[:, None] + np.array([-2 * np.pi, 0, 2 * np.pi]))
-                      .transpose())
-                hit = ((ok >= lon_lo - 1e-12) & (ok <= lon_hi + 1e-12)).any(axis=0)
-                assert hit.all(), (face, level, ci, cj)
 
 
 @pytest.mark.parametrize("case", [
@@ -82,29 +47,6 @@ def test_cover_prunes_far_cells():
     assert 1 <= len(cover) <= 60
     full_face = 256 * 256
     assert len(cover) < full_face / 100
-
-
-def test_s2cover_operator_matches_dense_probe(spark):
-    from avecado_spark.operators.adminizer import (adminize_points_rings,
-                                                   adminize_points_s2cover)
-    from avecado_spark.queries import ADMIN_RINGS
-
-    cx, cy = ADMIN_RINGS[0][1][0]
-    n = 3000
-    pdf = pd.DataFrame({
-        "url": [f"u{i}" for i in range(n)],
-        "mx_mm": np.concatenate([
-            rng.integers(cx - 4_000_000_000, cx + 4_000_000_000, n // 2),
-            rng.integers(-20_000_000_000, 20_000_000_000, n - n // 2)]),
-        "my_mm": np.concatenate([
-            rng.integers(cy - 4_000_000_000, cy + 4_000_000_000, n // 2),
-            rng.integers(-15_000_000_000, 15_000_000_000, n - n // 2)]),
-    })
-    df = spark.createDataFrame(pdf)
-    a = sorted(adminize_points_rings(df, ADMIN_RINGS).collect())
-    for level in (6, 9):
-        b = sorted(adminize_points_s2cover(df, ADMIN_RINGS, level=level).collect())
-        assert a == b, level
 
 
 def test_batch_cover_matches_scalar_per_owner():

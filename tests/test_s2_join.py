@@ -32,10 +32,9 @@ def test_s2join_matches_dense_probe(spark):
     polys = polygons_to_df(spark, ADMIN_RINGS)
     a = sorted(adminize_points_rings(df, ADMIN_RINGS)
                .select("url", "admin").collect())
-    for cover in ("bbox", "polygon"):
-        b = sorted(adminize_points_s2join(df, polys, max_level=8, cover=cover)
-                   .select("url", "admin").collect())
-        assert a == b, cover
+    b = sorted(adminize_points_s2join(df, polys, max_level=8)
+               .select("url", "admin").collect())
+    assert a == b
 
 
 def test_s2join_plan_is_shuffle_equijoin(spark):
@@ -62,11 +61,11 @@ def test_s2index_matches_dense_probe(spark):
     df = _points_df(spark)
     a = sorted(adminize_points_rings(df, ADMIN_RINGS)
                .select("url", "admin").collect())
-    for cover in ("bbox", "polygon"):
-        b = sorted(adminize_points_s2index(df, ADMIN_RINGS, max_level=8,
-                                           cover=cover)
+    for max_level in (6, 8, 9, 12):
+        b = sorted(adminize_points_s2index(df, ADMIN_RINGS,
+                                           max_level=max_level)
                    .select("url", "admin").collect())
-        assert a == b, cover
+        assert a == b, max_level
 
 
 def test_s2index_many_polygons_grid(spark):

@@ -1,8 +1,7 @@
-"""Adaptive S2 covers + leaf-range probe: collapse soundness, size bound,
-and operator parity with the dense probe."""
+"""Adaptive S2 covers: collapse soundness, disjoint leaf ranges and the
+perimeter size bound."""
 
 import numpy as np
-import pandas as pd
 
 from avecado_spark.functions import s2
 
@@ -42,89 +41,3 @@ def test_adaptive_cover_perimeter_scaling():
     n10 = len(s2.cover_bbox_rad(*box, 10, adaptive=True))
     n12 = len(s2.cover_bbox_rad(*box, 12, adaptive=True))
     assert n12 < 8 * n10
-
-
-def test_s2ranges_operator_matches_dense_probe(spark):
-    from avecado_spark.operators.adminizer import (adminize_points_rings,
-                                                   adminize_points_s2ranges)
-    from avecado_spark.queries import ADMIN_RINGS
-
-    cx, cy = ADMIN_RINGS[0][1][0]
-    n = 3000
-    pdf = pd.DataFrame({
-        "url": [f"u{i}" for i in range(n)],
-        "mx_mm": np.concatenate([
-            rng.integers(cx - 4_000_000_000, cx + 4_000_000_000, n // 2),
-            rng.integers(-20_000_000_000, 20_000_000_000, n - n // 2)]),
-        "my_mm": np.concatenate([
-            rng.integers(cy - 4_000_000_000, cy + 4_000_000_000, n // 2),
-            rng.integers(-15_000_000_000, 15_000_000_000, n - n // 2)]),
-    })
-    df = spark.createDataFrame(pdf)
-    a = sorted(adminize_points_rings(df, ADMIN_RINGS).collect())
-    for max_level in (8, 12):
-        b = sorted(adminize_points_s2ranges(df, ADMIN_RINGS,
-                                            max_level=max_level).collect())
-        assert a == b, max_level
-
-
-def test_polygon_cover_tighter_than_bbox_and_conservative():
-    """Region covers vs bbox covers on a thin diagonal strip: the covered
-    LEAF AREA (candidate hit rate) shrinks >10x while every interior point
-    still lands in a range — pruning uses the exact rect/polygon
-    disjointness test, so recall is structural."""
-    r = s2.EARTH_RADIUS_M * 1000.0
-    w = 0.01 * r
-    strip = np.array([[-0.5 * r, -0.5 * r], [0.5 * r, 0.5 * r],
-                      [0.5 * r - w, 0.5 * r + w], [-0.5 * r - w, -0.5 * r + w]])
-    pc = s2.cover_polygon_mm(strip, 8)
-    bb = (strip[:, 0].min(), strip[:, 1].min(),
-          strip[:, 0].max(), strip[:, 1].max())
-    bc = s2.cover_mercator_bbox_mm(int(bb[0]), int(bb[1]),
-                                   int(bb[2]), int(bb[3]), 8, adaptive=True)
-
-    def leaf_area(cells):
-        cu = cells.view(np.uint64)
-        return float((s2.range_max(cu) - s2.range_min(cu)
-                      + np.uint64(1)).astype(np.float64).sum())
-
-    assert leaf_area(bc) > 10 * leaf_area(pc)
-
-    cu = pc.view(np.uint64)
-    rmin, rmax = s2.range_min(cu), s2.range_max(cu)
-    order = np.argsort(rmin)
-    rmin, rmax = rmin[order], rmax[order]
-    assert np.all(rmax[:-1] < rmin[1:])  # disjoint
-    t = rng.uniform(0, 1, 4000)
-    s_ = rng.uniform(0, 1, 4000)
-    a = strip[0] + t[:, None] * (strip[1] - strip[0])
-    b = strip[3] + t[:, None] * (strip[2] - strip[3])
-    p = a + s_[:, None] * (b - a)
-    leaf = s2.cellid_from_mercator_mm(p[:, 0].astype(np.int64),
-                                      p[:, 1].astype(np.int64)).view(np.uint64)
-    pos = np.searchsorted(rmin, leaf, side="right") - 1
-    assert np.all(pos >= 0)
-    assert np.all(leaf <= rmax[pos])
-
-
-def test_s2ranges_polygon_cover_matches_dense_probe(spark):
-    from avecado_spark.operators.adminizer import (adminize_points_rings,
-                                                   adminize_points_s2ranges)
-    from avecado_spark.queries import ADMIN_RINGS
-
-    cx, cy = ADMIN_RINGS[0][1][0]
-    n = 2000
-    pdf = pd.DataFrame({
-        "url": [f"u{i}" for i in range(n)],
-        "mx_mm": np.concatenate([
-            rng.integers(cx - 4_000_000_000, cx + 4_000_000_000, n // 2),
-            rng.integers(-20_000_000_000, 20_000_000_000, n - n // 2)]),
-        "my_mm": np.concatenate([
-            rng.integers(cy - 4_000_000_000, cy + 4_000_000_000, n // 2),
-            rng.integers(-15_000_000_000, 15_000_000_000, n - n // 2)]),
-    })
-    df = spark.createDataFrame(pdf)
-    a = sorted(adminize_points_rings(df, ADMIN_RINGS).collect())
-    b = sorted(adminize_points_s2ranges(df, ADMIN_RINGS, max_level=8,
-                                        cover="polygon").collect())
-    assert a == b
