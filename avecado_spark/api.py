@@ -17,8 +17,8 @@ from .operators.adminizer import (adminize_points,  # noqa: F401
                                   adminize_points_knn_rings,
                                   adminize_points_rings)
 from .operators.encode import (build_feature_tiles,  # noqa: F401
-                               build_feature_tiles_salted, build_point_tiles,
-                               make_vector_tile, merge_point_partials)
+                               build_point_tiles, make_vector_tile,
+                               merge_point_partials)
 from .operators.keys import geocode, with_salt, with_tile_keys
 from .operators.raster import (render_tile_styled,  # noqa: F401
                                render_tiles_styled)

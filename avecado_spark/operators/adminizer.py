@@ -696,14 +696,15 @@ def adminize_points_s2join(df: DataFrame, polys_df: DataFrame,
 
 def _leaf_interval_index(ranges: list[tuple[np.ndarray, np.ndarray]]):
     """Flatten per-polygon cover ranges into ONE global elementary-interval
-    table: sorted leaf-id boundaries B plus, per gap [B[i], B[i+1]), the
-    flat list of polygon ids whose cover contains that gap.  S2 cell ranges
-    are laminar (two cell ranges are nested, equal, or disjoint), so the
-    sweep's active set only ever changes by whole ranges and the per-gap
-    lists stay small (nesting depth ~ admin hierarchy depth, not polygon
-    count).  Build is a driver-side one-time O(R log R) sweep over
-    R = total cover cells; the probe then costs O(log R) per point
-    independent of the polygon count — the ADM2-scale (10^4+) index."""
+    table → (bounds, off, pids): sorted leaf-id boundaries B, and per gap
+    [B[i], B[i+1]) the polygon ids pids[off[i]:off[i+1]] whose cover
+    contains that gap.  S2 cell ranges are laminar (two cell ranges are
+    nested, equal, or disjoint), so the sweep's active set only ever
+    changes by whole ranges and the per-gap lists stay small (nesting
+    depth ~ admin hierarchy depth, not polygon count).  Build is a
+    driver-side one-time O(R log R) sweep over R = total cover cells; the
+    probe then costs O(log R) per point independent of the polygon count —
+    the ADM2-scale (10^4+) index."""
     starts, ends, pids = [], [], []
     for pid, (rmin, rmax) in enumerate(ranges):
         if len(rmin) == 0:
@@ -714,7 +715,7 @@ def _leaf_interval_index(ranges: list[tuple[np.ndarray, np.ndarray]]):
     if not starts:
         z = np.zeros(0, dtype=np.uint64)
         zi = np.zeros(0, dtype=np.int64)
-        return z, zi, zi.copy(), zi.copy()
+        return z, zi, zi.copy()
     s = np.concatenate(starts)
     e = np.concatenate(ends)
     p = np.concatenate(pids)
@@ -737,7 +738,7 @@ def _leaf_interval_index(ranges: list[tuple[np.ndarray, np.ndarray]]):
     cnt = np.bincount(gap_idx[order], minlength=n_gaps)
     off = np.zeros(n_gaps + 1, dtype=np.int64)
     np.cumsum(cnt, out=off[1:])
-    return bounds, off, out_pids, p
+    return bounds, off, out_pids
 
 
 def adminize_points_s2index(df: DataFrame,
@@ -794,7 +795,7 @@ def adminize_points_s2index(df: DataFrame,
     ranges = [(np.sort(lo[cuts[k]:cuts[k + 1]]),
                np.sort(hi[cuts[k]:cuts[k + 1]]))
               for k in range(len(rings))]
-    bounds, off, gap_pids, _ = _leaf_interval_index(ranges)
+    bounds, off, gap_pids = _leaf_interval_index(ranges)
     # packed ring edges (a->b per edge, rings closed) so the probe can run
     # ONE vectorized crossing-number pass over ALL candidate (point, pid)
     # pairs instead of a python loop calling points_in_ring per pid — with

@@ -29,12 +29,20 @@ merge by byte concatenation: `partials_only=True` stops at one row per
 (x, y, salt), and `merge_point_partials` merges any union of partials (salt
 slices, streaming micro-batches) through the same tile writer.
 
+Distributed feature build (`build_feature_tiles`, lines/polygons/multi-*)
+has the same shape: one exchange on the tile key, a sort by (z, x, y,
+layer, id), and ONE mapInPandas that walks each tile run through the
+single-tile kernel (izers per layer, `make_layer`, `make_tile_bytes`) —
+the reference's "all features of one layer of one tile → izers → encode"
+(backend.cpp:15-44, izer_base.hpp:14-21).
+
 Why mapInPandas instead of groupBy().applyInPandas: at z14 most tiles hold a
 handful of pages, so there are O(number-of-tiles) groups; grouped-map pays
 per-group scheduling overhead, while repartition+sortWithinPartitions gives
 the same grouping as a byproduct of one shuffle and lets us walk contiguous
-key runs inside large Arrow batches. Tile groups never straddle partitions
-(hash repartition), and batch boundaries are handled with a carry buffer.
+key runs inside large Arrow batches (`_numpy_batches`). Tile groups never
+straddle partitions (hash repartition), and batch boundaries are handled
+with a carry buffer.
 """
 
 from __future__ import annotations
@@ -178,6 +186,19 @@ def make_vector_tile(features_by_layer: dict[str, list[dict]], z: int, x: int, y
     scaling_method / scale_denominator apply only to raster features in the
     reference; accepted here for signature parity (vector path ignores
     them, as the reference does for vector layers)."""
+    return _encode_tile(features_by_layer, z, x, y, tile_size,
+                        path_multiplier, buffer_size, tolerance, offset_x,
+                        offset_y, post_processor, compression_level)[0]
+
+
+def _encode_tile(features_by_layer: dict[str, list[dict]], z: int, x: int,
+                 y: int, tile_size: int, path_multiplier: int,
+                 buffer_size: int, tolerance: int, offset_x: int = 0,
+                 offset_y: int = 0, post_processor=None,
+                 compression_level: int = 6) -> tuple[bytes, int, bool]:
+    """One tile: izers per layer (PostProcessor.process_layer, zoom-gated
+    at z), make_layer, make_tile_bytes over the non-empty layers →
+    (tile bytes, feature count, interesting)."""
     layers = []
     for name, feats in features_by_layer.items():
         if post_processor is not None:
@@ -187,10 +208,13 @@ def make_vector_tile(features_by_layer: dict[str, list[dict]], z: int, x: int, y
                                                          tile_size)
             feats = [{"id": f["id"], "props": f["props"], "geom": g}
                      for f in izer_feats for g in f["geoms"]]
-        layers.append(make_layer(name, feats, z, x, y, tile_size,
-                                 path_multiplier, buffer_size, tolerance,
-                                 offset_x, offset_y))
-    return make_tile_bytes([l for l in layers if l.features], compression_level)
+        layer = make_layer(name, feats, z, x, y, tile_size, path_multiplier,
+                           buffer_size, tolerance, offset_x, offset_y)
+        if layer.features:
+            layers.append(layer)
+    return (make_tile_bytes(layers, compression_level),
+            sum(len(l.features) for l in layers),
+            any(mvt.is_interesting(l) for l in layers))
 
 
 # ---------------------------------------------------------------------------
@@ -599,7 +623,7 @@ def merge_point_partials(partial: DataFrame, z: int,
 
 
 # ---------------------------------------------------------------------------
-# distributed build for arbitrary WKT feature layers (lines/polygons too)
+# distributed feature-tile build (lines, polygons, multi-*)
 # ---------------------------------------------------------------------------
 
 def build_feature_tiles(df: DataFrame, izer_config: dict | None = None,
@@ -607,249 +631,51 @@ def build_feature_tiles(df: DataFrame, izer_config: dict | None = None,
                         path_multiplier: int = DEFAULT_PATH_MULT,
                         buffer_size: int = 0, tolerance: int = 1,
                         compression_level: int = 6) -> DataFrame:
-    """General tile build over (z, x, y, layer, id, props map, wkt) feature
-    rows — the Spark translation of `avecado vector-bulk` for non-point
-    layers (lines, polygons, multi-*), with an optional post-processor
-    pipeline applied per (tile, layer) before encoding (exactly
-    backend::stop_tile_layer → post_processor::process_layer →
+    """(z, x, y, layer, id, props map, wkt) feature rows → one row per
+    non-empty tile (z, x, y, tile_pbf, n_features, interesting) — the Spark
+    translation of `avecado vector-bulk` for non-point layers, with an
+    optional post-processor pipeline applied per (tile, layer) before
+    encoding (backend::stop_tile_layer → post_processor::process_layer →
     encode, reference src/backend.cpp:20-26).
 
-    One applyInPandas group per tile: feature layers are the heavy-geometry
-    case (few features, real vertex work) where per-group pandas overhead
-    is negligible relative to clipping/encoding; points use
-    build_point_tiles' vectorized one-stage path instead.
+    One exchange on the tile key, a sort by (z, x, y, layer, id) and one
+    mapInPandas that walks the sorted tile runs and encodes each through
+    the single-tile kernel (_encode_tile), so a tile's bytes equal
+    make_vector_tile over its layers in name order, features in id order,
+    whatever the input partitioning. Every izer sees whole (tile, layer)
+    groups, group-coupled ones (unionizer, collect-mode adminizer)
+    included. The exchange has no explicit partition count, so AQE
+    coalesces it to the data.
     """
     from ..functions import wkt as _wkt
     from ..plans.pipeline import PostProcessor
 
-    config = izer_config or {}
+    cols = ["z", "x", "y", "layer", "id", "props", "wkt"]
 
-    def encode_tile_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        proc = PostProcessor(config) if config else None
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        layers = []
-        nf = 0
-        for layer_name, g in pdf.groupby("layer", sort=True):
-            feats = [{"id": int(r.id),
-                      "props": dict(r.props) if r.props is not None else {},
-                      "geom": _wkt.loads(r.wkt)}
-                     for r in g.itertuples(index=False)]
-            if proc is not None:
-                izer_feats = [{"id": f["id"], "props": f["props"],
-                               "geoms": [f["geom"]]} for f in feats]
-                izer_feats, _ = proc.process_layer(izer_feats, layer_name, z,
-                                                   tile_size)
-                feats = [{"id": f["id"], "props": f["props"], "geom": gm}
-                         for f in izer_feats for gm in f["geoms"]]
-            layer = make_layer(layer_name, feats, z, x, y, tile_size,
-                               path_multiplier, buffer_size, tolerance)
-            if layer.features:
-                layers.append(layer)
-                nf += len(layer.features)
-        if not layers:
-            return pd.DataFrame({"z": [], "x": [], "y": [], "tile_pbf": [],
-                                 "n_features": [], "interesting": []})
-        tile_bytes = make_tile_bytes(layers, compression_level)
-        interesting = any(mvt.is_interesting(l) for l in layers)
-        return pd.DataFrame({"z": [z], "x": [x], "y": [y],
-                             "tile_pbf": [tile_bytes], "n_features": [nf],
-                             "interesting": [interesting]})
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        proc = PostProcessor(izer_config) if izer_config else None
+        for arrs, starts, ends in _numpy_batches(batches, cols,
+                                                 ["z", "x", "y"]):
+            zs, xs, ys, lays, ids, props, wkts = (arrs[c] for c in cols)
+            rows = []
+            for a, b in zip(starts.tolist(), ends.tolist()):
+                by_layer: dict[str, list[dict]] = {}
+                for i in range(a, b):
+                    by_layer.setdefault(lays[i], []).append({
+                        "id": int(ids[i]),
+                        "props": dict(props[i]) if props[i] is not None else {},
+                        "geom": _wkt.loads(wkts[i])})
+                z, x, y = int(zs[a]), int(xs[a]), int(ys[a])
+                pbf, nf, interesting = _encode_tile(
+                    by_layer, z, x, y, tile_size, path_multiplier,
+                    buffer_size, tolerance, post_processor=proc,
+                    compression_level=compression_level)
+                if nf:
+                    rows.append((z, x, y, pbf, nf, interesting))
+            yield pd.DataFrame(rows, columns=["z", "x", "y", "tile_pbf",
+                                              "n_features", "interesting"])
 
-    return (df.groupBy("z", "x", "y")
-              .applyInPandas(encode_tile_group, schema=_TILE_SCHEMA))
-
-
-# ---------------------------------------------------------------------------
-# salted two-phase build for FEATURE layers (lines / polygons) — the hot-tile
-# treatment build_point_tiles gives points, applied to heavy geometries.
-# Requires fixed global key/value tables (that is what makes partial tiles
-# mergeable by byte concatenation), so it covers the no-izer path; pipelines
-# that need every feature of a (tile, layer) together (unionizer joins
-# endpoints ACROSS features) must keep whole groups and use
-# build_feature_tiles.
-# ---------------------------------------------------------------------------
-
-_FPARTIAL_SCHEMA = ("z int, x long, y long, layer string, salt int, "
-                    "fblock binary, n_features long, inside1 boolean")
-
-
-def _global_prop_tables(df: DataFrame) -> tuple[list[str], list]:
-    """Fixed global key/value tables from the props map column, in ONE scan:
-    explode → a single agg with two collect_sets (map-side partial agg,
-    tiny result — same plan-time role as the point path's vocabulary).
-    At scale, pass key_table/val_table explicitly and skip the scan."""
-    kv = df.select(F.explode_outer("props").alias("k", "v"))
-    row = kv.agg(F.collect_set("k").alias("ks"),
-                 F.collect_set("v").alias("vs")).first()
-    return sorted(row["ks"]), sorted(row["vs"])
-
-
-def _izer_static_prop_tables(izer_config: dict) -> tuple[list[str], list]:
-    """Keys/values an izer pipeline can ADD to feature props, derived
-    statically from the config (no data scan): an adminizer writes
-    param_name → one of its datasource values. Raises for pipelines whose
-    additions are not statically enumerable or that need whole
-    (tile, layer) groups — those must use build_feature_tiles's fused
-    single-group path instead of the salted split:
-
-      * unionizer — joins endpoints ACROSS features (a salt slice only
-        sees its share of the group), and tag accumulation sums values;
-      * collect-mode adminizer — emits delimiter-joined value COMBINATIONS
-        (combinatorial, not a static table).
-    """
-    from ..plans.pipeline import parse_inline_csv
-    keys: set[str] = set()
-    vals: set = set()
-    for _layer, ranges in izer_config.items():
-        for rng in ranges:
-            for izer in rng["process"]:
-                t = izer["type"]
-                if t == "unionizer":
-                    raise ValueError(
-                        "unionizer needs whole (tile, layer) groups; use "
-                        "build_feature_tiles(izer_config=...) — the fused "
-                        "one-shuffle group path")
-                if t == "adminizer":
-                    if str(izer.get("collect", "false")) == "true":
-                        raise ValueError(
-                            "collect-mode adminizer emits joined value "
-                            "combinations (no static value table); use "
-                            "build_feature_tiles(izer_config=...)")
-                    keys.add(izer["param_name"])
-                    ds = izer.get("datasource", {})
-                    rows = (list(ds["inline_rows"]) if "inline_rows" in ds
-                            else parse_inline_csv(ds.get("inline", "")))
-                    vals.update(v for _w, v in rows)
-                # generalizer / labelizer: geometry-only, no prop additions
-    return sorted(keys), sorted(vals)
-
-
-def build_feature_tiles_salted(df: DataFrame,
-                               izer_config: dict | None = None,
-                               tile_size: int = DEFAULT_TILE_SIZE,
-                               path_multiplier: int = DEFAULT_PATH_MULT,
-                               buffer_size: int = 0, tolerance: int = 1,
-                               compression_level: int = 6,
-                               n_salts: int = 16,
-                               key_table: list[str] | None = None,
-                               val_table: list | None = None,
-                               num_partitions: int | None = None) -> DataFrame:
-    """(z, x, y, layer, id, props map, wkt) → (z, x, y, tile_pbf,
-    n_features, interesting), two-phase: a hot tile's features spread over
-    n_salts partial encodes (phase 1 does ALL geometry work — WKT parse,
-    clip, quantize, command encode, protobuf feature bytes), then partials
-    merge by byte concatenation per (tile, layer) in phase 2. Feature tags
-    index fixed GLOBAL key/value tables, so blocks are position-independent.
-
-    Skew math: the reference's hot urban tile holds ~p fraction of the
-    corpus; unsalted, one task gets p·N features. Salted, the max task is
-    p·N/n_salts + shuffle of already-encoded bytes (cheap relative to
-    geometry work, which is ~100 bytes/feature vs WKT's ~100 chars).
-
-    izer_config: FEATURE-LOCAL post-processors (generalizer, first/split
-    adminizer, labelizer) fuse INTO phase 1 — each processes features
-    independently, so running them per (tile, layer, salt) slice equals
-    running them per whole (tile, layer) group, and the izer+encode
-    pipeline costs the same two exchanges as the plain salted build (vs
-    three for apply_to_tiles → build). Prop keys/values the izers add are
-    derived statically from the config (no extra scan). Group-coupled
-    izers (unionizer, collect-mode adminizer) are rejected with a pointer
-    to build_feature_tiles's fused whole-group path."""
-    from ..functions import wkt as _wkt
-    from ..functions.mvt import gzip_bytes as _gzb
-
-    nparts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    nparts = int(nparts)
-    extent = tile_size * path_multiplier
-    izer_keys: list = []
-    izer_vals: list = []
-    if izer_config:
-        izer_keys, izer_vals = _izer_static_prop_tables(izer_config)
-    if key_table is None or val_table is None:
-        key_table, val_table = _global_prop_tables(df)
-    if izer_config:
-        key_table = sorted(set(key_table) | set(izer_keys))
-        val_table = sorted(set(val_table) | set(izer_vals))
-    kidx = {k: i for i, k in enumerate(key_table)}
-    vidx = {(type(v).__name__, v): i for i, v in enumerate(val_table)}
-
-    salted = df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("id")), F.lit(n_salts)).cast("int"))
-
-    def phase1(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, x, y, layer_name, salt = (int(key[0]), int(key[1]), int(key[2]),
-                                     str(key[3]), int(key[4]))
-        feats = [{"id": int(r.id),
-                  "props": dict(r.props) if r.props is not None else {},
-                  "geom": _wkt.loads(r.wkt)}
-                 for r in pdf.itertuples(index=False)]
-        if izer_config:
-            from ..plans.pipeline import PostProcessor
-            proc = PostProcessor(izer_config)
-            izer_feats = [{"id": f["id"], "props": f["props"],
-                           "geoms": [f["geom"]]} for f in feats]
-            izer_feats, _ = proc.process_layer(izer_feats, layer_name, z,
-                                               tile_size)
-            feats = [{"id": f["id"], "props": f["props"], "geom": gm}
-                     for f in izer_feats for gm in f["geoms"]]
-        layer = make_layer(layer_name, feats, z, x, y, tile_size,
-                           path_multiplier, buffer_size, tolerance)
-        if not layer.features:
-            return pd.DataFrame({c: [] for c in
-                                 ("z", "x", "y", "layer", "salt", "fblock",
-                                  "n_features", "inside1")})
-        blocks = []
-        for f in layer.features:
-            # remap local tag indices onto the global tables
-            f.tags = [
-                (kidx[layer.keys[t]] if i % 2 == 0
-                 else vidx[(type(layer.values[t]).__name__, layer.values[t])])
-                for i, t in enumerate(f.tags)]
-            blocks.append(_len_delim(2, mvt._encode_feature(f)))
-        single = mvt.is_interesting(layer) if len(layer.features) == 1 else True
-        return pd.DataFrame({
-            "z": [z], "x": [x], "y": [y], "layer": [layer_name],
-            "salt": [salt], "fblock": [b"".join(blocks)],
-            "n_features": [len(layer.features)], "inside1": [single]})
-
-    partial = (salted.groupBy("z", "x", "y", "layer", "salt")
-                     .applyInPandas(phase1, schema=_FPARTIAL_SCHEMA))
-
-    tail_common = (b"".join(_len_delim(3, k.encode("utf-8")) for k in key_table)
-                   + b"".join(_len_delim(4, mvt._encode_value(v)) for v in val_table)
-                   + _varint_field(5, extent)
-                   + _varint_field(15, mvt.MVT_VERSION))
-    p2cols = ["z", "x", "y", "layer", "fblock", "n_features", "inside1"]
-
-    def phase2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for arrs, starts, ends in _numpy_batches(batches, p2cols, ["z", "x", "y"]):
-            zs = arrs["z"]; xs = arrs["x"]; ys = arrs["y"]
-            lays = arrs["layer"]; fbl = arrs["fblock"]
-            nf = arrs["n_features"].astype(np.int64)
-            ins = arrs["inside1"]
-            out = {"z": [], "x": [], "y": [], "tile_pbf": [],
-                   "n_features": [], "interesting": []}
-            for st, e in zip(starts, ends):
-                tile = b""
-                i = st
-                while i < e:  # layers contiguous (sorted), salts in order
-                    j = i
-                    while j < e and lays[j] == lays[i]:
-                        j += 1
-                    body = (_len_delim(1, str(lays[i]).encode("utf-8"))
-                            + b"".join(fbl[i:j]) + tail_common)
-                    tile += _len_delim(3, body)
-                    i = j
-                if compression_level > 0:
-                    tile = _gzb(tile, compression_level)
-                total = int(nf[st:e].sum())
-                out["z"].append(int(zs[st])); out["x"].append(int(xs[st]))
-                out["y"].append(int(ys[st])); out["tile_pbf"].append(tile)
-                out["n_features"].append(total)
-                out["interesting"].append(True if total > 1 else bool(ins[st]))
-            yield pd.DataFrame(out)
-
-    return (partial
-            .repartition(nparts, "z", "x", "y")
-            .sortWithinPartitions("z", "x", "y", "layer", "salt")
-            .mapInPandas(phase2, schema=_TILE_SCHEMA))
+    return (df.select(*cols)
+              .repartition("z", "x", "y")
+              .sortWithinPartitions("z", "x", "y", "layer", "id")
+              .mapInPandas(encode, schema=_TILE_SCHEMA))

@@ -11,8 +11,8 @@ Pipeline position: pages(url, warc_ts, html, text, lang)
     which has the same containment-by-prefix property used for joins)
   → salt column: a data-independent sub-key under the tile key. The point
     build sorts on (x, y, salt), so the salt fixes the feature order inside
-    a tile; partial builds (streaming ingest) shuffle on it to spread a hot
-    tile, and the line/polygon build's two-phase aggregation salts too.
+    a tile, and partial builds (streaming ingest) shuffle on it to spread
+    a hot tile.
 
 Scale notes (100 TB / 10^12 docs):
   * `html` (the huge column) is never referenced here — Catalyst prunes it
@@ -77,7 +77,7 @@ def quadkey_col(z: Column, x: Column, y: Column) -> Column:
 
 def with_salt(df: DataFrame, n_salts: int = 16, key_col: str = "url") -> DataFrame:
     """Deterministic salt: orders features inside a point tile and spreads
-    hot tiles in the partial and two-phase salted builds."""
+    hot tiles in the partial point build."""
     return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salts)))
 
 

@@ -28,10 +28,10 @@ Semantics (opt-in):
     candidate within the radius (Chebyshev) of an accepted label is
     dropped. Greedy-stateful — the oracle configuration leaves it off.
 
-Spark shape: runs inside the per-(tile, layer) izer group
-(plans/pipeline.apply_to_tiles) or fused into the salted feature build —
-label generation is feature-local, so it rides phase 1 with no extra
-shuffle.
+Spark shape: runs inside the per-(tile, layer) izer group, either in
+plans/pipeline.apply_to_tiles or fused into the feature encode
+(encode.build_feature_tiles), which walks the same whole groups with no
+extra shuffle.
 """
 
 from __future__ import annotations

@@ -196,6 +196,7 @@ def apply_to_tiles(df, config: dict, tile_px: int = 256):
 
     from ..functions import wkt as _wkt
     from ..functions.wkt import Geom
+    from ..operators.encode import _numpy_batches
 
     packed = "coords" in df.columns
     proc = PostProcessor(config)
@@ -280,30 +281,16 @@ def apply_to_tiles(df, config: dict, tile_px: int = 256):
                 flats.append(np.asarray(arr, dtype=np.float64).ravel())
         return g.type, np.concatenate(flats), rings, part_rings
 
-    def _process_chunk(pdf: "pd.DataFrame", out: dict):
-        zs = pdf["z"].to_numpy()
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        lays = pdf["layer"].to_numpy()
-        ids = pdf["id"].to_numpy()
-        props_col = pdf["props_kv"].to_numpy(dtype=object)
+    walk_cols = ["z", "x", "y", "layer", "id", "props_kv"] + geom_cols
+
+    def _process_chunk(arrs: dict, starts, ends, out: dict):
+        zs, xs, ys, lays, ids, props_col = (arrs[c] for c in walk_cols[:6])
         if packed:
-            gtypes = pdf["gtype"].to_numpy(dtype=object)
-            coords_col = pdf["coords"].to_numpy(dtype=object)
-            rings_col = pdf["rings"].to_numpy(dtype=object)
-            pr_col = pdf["part_rings"].to_numpy(dtype=object)
+            gtypes, coords_col, rings_col, pr_col = (arrs[c]
+                                                     for c in geom_cols)
         else:
-            wkts = pdf["wkt"].to_numpy(dtype=object)
-        n = len(pdf)
-        # group run boundaries over the sorted key (vectorized)
-        if n > 1:
-            brk = ((zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1])
-                   | (ys[1:] != ys[:-1]) | (lays[1:] != lays[:-1]))
-            starts = [0] + list(np.flatnonzero(brk) + 1) + [n]
-        else:
-            starts = [0, n]
-        for si in range(len(starts) - 1):
-            a, b = starts[si], starts[si + 1]
+            wkts = arrs["wkt"]
+        for a, b in zip(starts.tolist(), ends.tolist()):
             z, x, y, layer_name = int(zs[a]), int(xs[a]), int(ys[a]), lays[a]
             feats = []
             for i in range(a, b):
@@ -337,34 +324,13 @@ def apply_to_tiles(df, config: dict, tile_px: int = 256):
                     else:
                         out["wkt"].append(_wkt.dumps(g))
 
-    def _empty_out():
-        return {c: [] for c in
-                ["z", "x", "y", "layer", "id", "props_kv"] + geom_cols}
-
     def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            # hold back the trailing run — its group may continue in the
-            # next Arrow batch of this partition
-            last = pdf.iloc[-1]
-            tail = pdf[(pdf["z"] == last["z"]) & (pdf["x"] == last["x"])
-                       & (pdf["y"] == last["y"])
-                       & (pdf["layer"] == last["layer"])]
-            head_end = tail.index[0]
-            carry = pdf.iloc[head_end:].reset_index(drop=True)
-            head = pdf.iloc[:head_end]
-            if len(head):
-                out = _empty_out()
-                _process_chunk(head, out)
-                yield pd.DataFrame(out)
-        if carry is not None and len(carry):
-            out = _empty_out()
-            _process_chunk(carry, out)
+        # sorted by (z, x, y, layer): _numpy_batches yields complete
+        # (tile, layer) runs, carrying a batch-split run to the next batch
+        for arrs, starts, ends in _numpy_batches(
+                batches, walk_cols, ["z", "x", "y", "layer"]):
+            out = {c: [] for c in walk_cols}
+            _process_chunk(arrs, starts, ends, out)
             yield pd.DataFrame(out)
 
     def _make_run_fast():
@@ -439,20 +405,22 @@ def apply_to_tiles(df, config: dict, tile_px: int = 256):
         # per-feature + stateless → no grouping needed; skip the shuffle
         walked = df.mapInPandas(_make_run_fast(), schema=out_schema)
     else:
-        # explicit partition count, 4x the session's shuffle
+        # explicit partition count, 2x the session's shuffle
         # partitions: an izer group is STATEFUL and cannot be split, so
         # a hot tile (r08: one z10 city tile holds ~94k features, a
         # multi-second serial unionize) is an irreducible straggler. A
         # count-less repartition let AQE size-coalesce partitions and
         # MERGE two hot tiles into one task (measured: a 144k-row
         # partition = two hot groups, 4.6s serial); an explicit count
-        # pins the layout, and the 4x bin factor drops the chance that
-        # two hot GROUPS hash into one bin and thins the non-hot load
-        # each hot bin also carries (guide §2.5: group-level skew needs
-        # more bins than byte-level balance suggests). Scales with the
-        # configured shuffle partitions, not the local core count;
-        # walk tasks are group-atomic so extra bins only shrink them.
-        nparts = 4 * int(
+        # pins the layout, and the 2x bin factor drops the chance that
+        # two hot GROUPS hash into one bin (guide §2.5: group-level skew
+        # needs more bins than byte-level balance suggests). Not more:
+        # each Python task pays a fixed worker round trip, so on many
+        # tiny groups extra bins cost more than they thin. Measured on 4
+        # vCPU, 8 shuffle partitions, sf0.1, 5 alternating runs: 2x beat
+        # 4x on all four izer leaves and 1x on three, and 3,000
+        # one-feature groups walked in 1.3-1.9 s at 2x, 2.4-2.6 s at 4x.
+        nparts = 2 * int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         walked = (df.repartition(nparts, "z", "x", "y", "layer")
                     .sortWithinPartitions("z", "x", "y", "layer")

@@ -465,13 +465,15 @@ def _city_line_features(spark: SparkSession, sf_dir: str) -> DataFrame:
   FROM d GROUP BY 1, 2
 """)
 def mvt_feature_salted_z12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The salted two-phase FEATURE (linestring) tile build, oracle-checked:
-    per-tile feature counts equal the deduped snapped-segment counts by
-    construction (buffer_size=8 px keeps every <=200 m snap displacement
-    inside the buffered clip box, so no feature is culled)."""
-    from .operators.encode import build_feature_tiles_salted
+    """The FEATURE (linestring) tile build over the hot city tiles,
+    oracle-checked: per-tile feature counts equal the deduped
+    snapped-segment counts by construction (buffer_size=8 px keeps every
+    <=200 m snap displacement inside the buffered clip box, so no feature
+    is culled). The name is historical: the build is one tile-key exchange
+    and one sorted-run mapInPandas, with no salt."""
+    from .operators.encode import build_feature_tiles
     feats = _city_line_features(spark, sf_dir)
-    tiles = build_feature_tiles_salted(feats, buffer_size=8)
+    tiles = build_feature_tiles(feats, buffer_size=8)
     return tiles.select("x", "y", "n_features")
 
 
@@ -498,15 +500,14 @@ _FUSE_EDGE = _FUSE_CX0 + 50
   FROM d GROUP BY 1, 2
 """)
 def mvt_izer_fused_z12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Izer pipeline FUSED into the salted two-phase encode — one job,
-    two exchanges total (phase-1 group, phase-2 merge; the unfused
-    apply_to_tiles → build pair costs three): a split-mode adminizer runs
-    inside phase 1 (feature-local, so per-salt slices are exact), its added
-    prop key/value enter the global tag tables statically from the config.
+    """Izer pipeline FUSED into the feature encode — one job, one exchange
+    (the unfused apply_to_tiles → build pair costs two): a split-mode
+    adminizer runs per whole (tile, layer) group inside the encode's
+    sorted-run walk, before make_layer.
     Oracle: a segment column crossing the admin edge splits into 2 features
     (inside+outside), everything else stays 1 — per-tile n_features is
     SQL-derivable from the snapped grid."""
-    from .operators.encode import build_feature_tiles_salted
+    from .operators.encode import build_feature_tiles
     feats = _city_line_features(spark, sf_dir)
     big = 30000000  # > mercator half-world in meters: the box spans all y
     box_wkt = (f"POLYGON(({_FUSE_EDGE} {-big}, {_FUSE_EDGE + 6000000} {-big}, "
@@ -515,7 +516,7 @@ def mvt_izer_fused_z12(spark: SparkSession, sf_dir: str) -> DataFrame:
     conf = {"roads": [{"minzoom": 0, "maxzoom": 22, "process": [
         {"type": "adminizer", "param_name": "region", "split": "true",
          "datasource": {"inline_rows": [(box_wkt, "core")]}}]}]}
-    tiles = build_feature_tiles_salted(feats, izer_config=conf, buffer_size=8)
+    tiles = build_feature_tiles(feats, izer_config=conf, buffer_size=8)
     return tiles.select("x", "y", "n_features")
 
 

@@ -269,11 +269,11 @@ def _run_sessionize_stream(spark, sf_dir):
 
 
 def _profile_stages(cpus: int):
-    """Per-stage wall time of the tile build via cumulative cut points:
-    T1 = scan+synth+geocode+quantize (slim.count, pre-shuffle),
-    T2 = + shuffle1 + phase1 encode (partial.count),
-    T3 = full build (+ shuffle2 + phase2 + gzip + agg).
-    Stage times are differences; run pinned for honest core accounting."""
+    """Wall time of the tile build split at one cut point:
+    pre_shuffle_sec = scan+synth+geocode+key packing up to the build's one
+    exchange (slim_probe.count); full_build_sec = the whole one-stage point
+    build (tile-key exchange + one mapInPandas encode + gzip, tiles.count).
+    Run pinned for honest core accounting."""
     from pyspark.sql import functions as F
     from avecado_spark.operators.keys import geocode, with_tile_keys, with_salt
     spark = _session(cpus)

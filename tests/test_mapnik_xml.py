@@ -158,9 +158,9 @@ def test_map_style_drives_the_styled_renderer():
 
 
 def test_features_from_map_to_tile_build(spark):
-    """XML inline-CSV layers → feature DataFrame → the salted feature
-    encode: the reference's `--map-file` bulk-export path end to end."""
-    from avecado_spark.operators.encode import build_feature_tiles_salted
+    """XML inline-CSV layers → feature DataFrame → the feature encode:
+    the reference's `--map-file` bulk-export path end to end."""
+    from avecado_spark.operators.encode import build_feature_tiles
     from avecado_spark.sources.mapnik_xml import features_from_map
 
     doc = parse_map_xml(STYLED_MAP)
@@ -172,7 +172,7 @@ def test_features_from_map_to_tile_build(spark):
     # keyed by the first WKT coordinate (-2e6, -2e6): west + south of the
     # z4 center tile boundary
     assert r.x == 7 and r.y == 8
-    tiles = build_feature_tiles_salted(feats).collect()
+    tiles = build_feature_tiles(feats).collect()
     assert len(tiles) == 1
     assert tiles[0].n_features >= 1 and len(tiles[0].tile_pbf) > 0
 

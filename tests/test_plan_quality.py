@@ -254,78 +254,23 @@ def _feature_df(spark):
 
 
 def test_izer_fused_single_shuffle(spark):
-    """Izer pipeline + encode in ONE shuffle: build_feature_tiles with an
-    izer_config groups once by tile and does post-process + encode inside
-    the group — exactly one Exchange between feature rows and tile bytes
-    (the unfused apply_to_tiles → build pair costs two)."""
+    """The feature build, with or without an izer pipeline, is ONE
+    exchange on the tile key and ONE Python stage (a sorted-run
+    mapInPandas): no per-group applyInPandas, and the izers fuse into the
+    encode instead of costing the unfused apply_to_tiles → build pair's
+    second shuffle."""
     from avecado_spark.operators.encode import build_feature_tiles
     conf = {"roads": [{"minzoom": 0, "maxzoom": 22, "process": [
         {"type": "generalizer", "algorithm": "douglas-peucker",
          "tolerance": 2.0}]}]}
     df, _cx, _cy = _feature_df(spark)
-    tiles = build_feature_tiles(df, izer_config=conf)
-    plan = tiles._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = sum("Exchange" in l for l in plan.splitlines())
-    assert n_exchanges == 1, plan
-    assert tiles.count() == 1
-
-
-def test_izer_fused_salted_two_shuffles(spark):
-    """The SALTED izer+encode build keeps the plain salted build's two
-    exchanges (phase-1 salt group, phase-2 merge) — fusing the feature-local
-    izers into phase 1 adds no shuffle; the unfused apply_to_tiles → salted
-    pair would cost three."""
-    from avecado_spark.operators.encode import build_feature_tiles_salted
-    conf = {"roads": [{"minzoom": 0, "maxzoom": 22, "process": [
-        {"type": "generalizer", "algorithm": "douglas-peucker",
-         "tolerance": 2.0}]}]}
-    df, _cx, _cy = _feature_df(spark)
-    tiles = build_feature_tiles_salted(df, izer_config=conf)
-    plan = tiles._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = sum("Exchange" in l for l in plan.splitlines())
-    assert n_exchanges == 2, plan
-    assert tiles.count() == 1
-
-
-def test_salted_izer_rejects_group_coupled_pipelines(spark):
-    """Group-coupled izers cannot run on salt slices: the salted build must
-    refuse them (pointing at the whole-group fused path), not silently
-    produce wrong unions."""
-    from avecado_spark.operators.encode import build_feature_tiles_salted
-    df, _cx, _cy = _feature_df(spark)
-    with pytest.raises(ValueError, match="unionizer"):
-        build_feature_tiles_salted(df, izer_config={
-            "roads": [{"minzoom": 0, "maxzoom": 22, "process": [
-                {"type": "unionizer", "union_heuristic": "greedy",
-                 "tag_strategy": "intersect", "max_iterations": 2,
-                 "match_tags": ["a"]}]}]})
-    with pytest.raises(ValueError, match="collect"):
-        build_feature_tiles_salted(df, izer_config={
-            "roads": [{"minzoom": 0, "maxzoom": 22, "process": [
-                {"type": "adminizer", "param_name": "region",
-                 "collect": "true",
-                 "datasource": {"inline_rows": [
-                     ("POLYGON((0 0, 1 0, 1 1, 0 1, 0 0))", "v")]}}]}]})
-
-
-def test_salted_izer_matches_whole_group_build(spark):
-    """Feature-local izers on salt slices must equal the whole-group fused
-    build: same per-tile feature counts and the same decoded layer content
-    for a split-adminizer pipeline."""
-    from avecado_spark.operators.encode import (build_feature_tiles,
-                                                build_feature_tiles_salted)
-    df, cx, cy = _feature_df(spark)
-    edge = cx + 145.0  # crosses segments i = 5..14 → 10 splits
-    box = (f"POLYGON(({edge} {cy - 50}, {edge + 6000} {cy - 50}, "
-           f"{edge + 6000} {cy + 50}, {edge} {cy + 50}, {edge} {cy - 50}))")
-    conf = {"roads": [{"minzoom": 0, "maxzoom": 22, "process": [
-        {"type": "adminizer", "param_name": "region", "split": "true",
-         "datasource": {"inline_rows": [(box, "core")]}}]}]}
-    a = {(r.z, r.x, r.y): r.n_features
-         for r in build_feature_tiles(df, izer_config=conf).collect()}
-    b = {(r.z, r.x, r.y): r.n_features
-         for r in build_feature_tiles_salted(df, izer_config=conf).collect()}
-    assert a == b and sum(a.values()) == 30  # 20 + 10 splits
+    for izer_config in (None, conf):
+        tiles = build_feature_tiles(df, izer_config=izer_config)
+        nodes = re.findall(r"(\w+) \(\d+\)", _plan(tiles).split("\n\n")[0])
+        assert (nodes.count("Exchange"), nodes.count("MapInPandas"),
+                nodes.count("FlatMapGroupsInPandas")) == (1, 1, 0), \
+            _plan(tiles)
+        assert tiles.count() == 1
 
 
 def test_knn_rings_probe_is_slim_and_map_side(spark):

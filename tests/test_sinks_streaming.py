@@ -189,15 +189,17 @@ def test_build_tiles_job_script(spark, tmp_path):
     assert g.glob(str(tmp_path / "pbf" / "*" / "*" / "*.pbf"))
 
 
-def test_build_feature_tiles_salted_parity_and_spread(spark):
-    """The two-phase salted feature build (hot line/polygon tiles) decodes
-    to the same features as the per-group path, and a hot tile's work is
-    spread over ~n_salts phase-1 partials."""
-    from pyspark.sql import functions as F
-    from avecado_spark.functions import mvt
+def test_build_feature_tiles_byte_golden(spark):
+    """Every tile of the distributed feature build is byte-identical to the
+    driver-side make_vector_tile over that tile's layers (name order),
+    features in id order — with no izers and with a unionizer, which needs
+    whole (tile, layer) groups — and does not depend on how the input is
+    partitioned. n_features and interesting match the decoded golden."""
+    from avecado_spark.functions import mvt, wkt
     from avecado_spark.functions.mercator import box_for_tile
     from avecado_spark.operators.encode import (build_feature_tiles,
-                                                build_feature_tiles_salted)
+                                                make_vector_tile)
+    from avecado_spark.plans.pipeline import PostProcessor
 
     minx, miny, maxx, maxy = box_for_tile(10, 300, 400)
     w = maxx - minx
@@ -209,43 +211,50 @@ def test_build_feature_tiles_salted_parity_and_spread(spark):
                      {"hw": "primary" if i % 2 else "secondary"},
                      f"LINESTRING({x0} {y0}, {x0 + w/50} {y0 + w/80})"))
     minx2, miny2, _, _ = box_for_tile(10, 301, 400)
-    for i in range(5):  # cold tile
-        x0 = minx2 + i / 10.0 * w
+    for i in range(5):  # cold tile: one chain of end-to-end segments
+        x0, x1 = minx2 + i / 10.0 * w, minx2 + (i + 1) / 10.0 * w
         rows.append((10, 301, 400, "roads", 1000 + i, {"hw": "primary"},
-                     f"LINESTRING({x0} {miny2 + w/4}, {x0 + w/30} {miny2 + w/3})"))
-    # a polygon layer in the hot tile exercises the ring clip + global tag
-    # remap on the salted path too
+                     f"LINESTRING({x0} {miny2 + w/4}, {x1} {miny2 + w/4})"))
+    # a polygon layer in the hot tile exercises the ring clip
     px0, py0 = minx + w / 4, miny + w / 4
     rows.append((10, 300, 400, "water", 5000, {"cls": "lake"},
                  f"POLYGON(({px0} {py0},{px0 + w/8} {py0},"
                  f"{px0 + w/8} {py0 + w/8},{px0} {py0 + w/8},{px0} {py0}))"))
+    # reversed, so the build's (layer, id) sort is what orders features
     df = spark.createDataFrame(
-        rows, "z int, x long, y long, layer string, id long, "
-              "props map<string,string>, wkt string")
+        rows[::-1], "z int, x long, y long, layer string, id long, "
+                    "props map<string,string>, wkt string")
 
-    def summarize(tile_rows):
+    def golden(conf):
+        tiles = {}
+        for z, x, y, layer, fid, props, text in sorted(
+                rows, key=lambda r: (r[1], r[2], r[3], r[4])):
+            tiles.setdefault((x, y), {}).setdefault(layer, []).append(
+                {"id": fid, "props": dict(props), "geom": wkt.loads(text)})
         out = {}
-        for r in tile_rows:
-            tile = mvt.decode_tile(bytes(r.tile_pbf))
-            feats = []
-            for l in tile.layers:
-                for f in l.features:
-                    props = {l.keys[f.tags[i]]: l.values[f.tags[i + 1]]
-                             for i in range(0, len(f.tags), 2)}
-                    feats.append((f.id, f.type, tuple(f.geometry),
-                                  tuple(sorted(props.items()))))
-            out[(r.x, r.y)] = (r.n_features, r.interesting, sorted(feats))
+        for (x, y), by_layer in tiles.items():
+            pbf = make_vector_tile(
+                by_layer, 10, x, y,
+                post_processor=PostProcessor(conf) if conf else None)
+            layers = mvt.decode_tile(pbf).layers
+            out[(x, y)] = (pbf, sum(len(l.features) for l in layers),
+                           any(mvt.is_interesting(l) for l in layers))
         return out
 
-    assert summarize(build_feature_tiles(df).collect()) == \
-        summarize(build_feature_tiles_salted(df).collect())
-
-    # salt spreading: the hot tile materializes ~n_salts phase-1 groups
-    n_groups = (df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("id")), F.lit(16)))
-        .where((F.col("x") == 300))
-        .select("salt").distinct().count())
-    assert n_groups >= 12, f"hot tile spread over only {n_groups} salts"
+    union = {"roads": [{"minzoom": 0, "maxzoom": 22, "process": [
+        {"type": "unionizer", "union_heuristic": "greedy",
+         "tag_strategy": "intersect", "max_iterations": 10,
+         "match_tags": ["hw"]}]}]}
+    for conf in (None, union):
+        want = golden(conf)
+        got = {(r.x, r.y): (bytes(r.tile_pbf), r.n_features, r.interesting)
+               for r in build_feature_tiles(df, izer_config=conf).collect()}
+        assert got == want
+        again = {(r.x, r.y): bytes(r.tile_pbf) for r in build_feature_tiles(
+            df.repartition(3), izer_config=conf).collect()}
+        assert again == {k: v[0] for k, v in want.items()}
+    # the unionizer joined the cold tile's chain: it saw the whole group
+    assert want[(301, 400)][1] < 5
 
 
 def test_fetch_tiles_request_shaping_no_network(spark):
