@@ -1,5 +1,5 @@
 """GIF codec (87a/89a) in pure numpy/stdlib — a real web image
-format beside PNG/WebP in the multimodal decode boundary.
+format beside PNG in the multimodal decode boundary.
 
 Decoder: logical screen descriptor, global/local color tables, LZW
 decompression with dynamic code sizes (clear/EOI, dictionary to 4095),

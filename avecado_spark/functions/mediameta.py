@@ -1,238 +1,13 @@
-"""Header-only media probing — metadata without decoding.
+"""MP4 (ISO-BMFF) sample addressing — byte ranges without decoding.
 
-At corpus scale the first media pass is a PROBE, not a decode: read a
-few hundred bytes per payload, classify the container, and extract the
-cheap facts (dimensions, sample rate, duration, codec id) that drive
-filtering and routing BEFORE any expensive decode runs. Everything here
-is pure byte parsing from the public container specs; no codec work.
-
-`probe_media(payload)` → dict with at least {"format": str}; per-format
-extras:
-  png/jpeg/gif/webp : width, height
-  wav               : sample_rate, channels, bits, duration_s, codec
-  y4m               : width, height, fps
-  mp3               : version, layer, bitrate_kbps, sample_rate,
-                      duration_s (exact frame-count from a Xing/Info VBR
-                      header when present, else size x bitrate estimate)
-                      — header parse only, the audio stays undecoded
-  flac              : sample_rate, channels, bits, exact duration_s
-                      (STREAMINFO total-samples field)
-  ogg (opus/vorbis) : codec, channels, sample_rate, exact duration_s
-                      (last-page granule position at the granule rate)
-  mp4/iso-bmff      : duration_s (mvhd), brand, and per-track records
-                      {handler, codec (stsd 4cc), sample_count (stsz),
-                      duration_s (mdhd, else exact stts sample-delta
-                      sum)} — box walk only, streams stay undecoded
-Unknown payloads → {"format": "unknown"}.
-
-The Spark surface (`media_probe`) runs the probe inside mapInPandas —
-one map-side pass, no shuffle, payload bytes never leave the executor.
+`mp4_sample_ranges(payload, track)` walks one track's sample tables
+(stsc, stco/co64, stsz, stts) to exact per-sample (offset, size, time_s)
+windows, so single frames or packets can be handed to an external decoder
+or a range fetch without shipping whole files. Pure box parsing from the
+public container spec; no codec work.
 """
 
 from __future__ import annotations
-
-import struct
-
-import numpy as np
-
-_MP3_BITRATES_V1L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160,
-                      192, 224, 256, 320, 0]
-_MP3_BITRATES_V2L3 = [0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96,
-                      112, 128, 144, 160, 0]
-_MP3_RATES = {3: [44100, 48000, 32000], 2: [22050, 24000, 16000],
-              0: [11025, 12000, 8000]}
-
-
-def _probe_mp3(p: bytes) -> dict | None:
-    """First MPEG audio frame header (11-bit sync); layer III only. A
-    Xing/Info VBR header in the first frame upgrades the size-estimated
-    duration to the exact frame-count one (frames x samples-per-frame)."""
-    i = 0
-    if p[:3] == b"ID3" and len(p) >= 10:      # skip ID3v2 tag
-        sz = ((p[6] & 0x7F) << 21) | ((p[7] & 0x7F) << 14) \
-            | ((p[8] & 0x7F) << 7) | (p[9] & 0x7F)
-        i = 10 + sz
-    if i + 4 > len(p) or p[i] != 0xFF or (p[i + 1] & 0xE0) != 0xE0:
-        return None
-    ver = (p[i + 1] >> 3) & 3                 # 3=MPEG1, 2=MPEG2, 0=2.5
-    layer = (p[i + 1] >> 1) & 3               # 1 = Layer III
-    if ver == 1 or layer != 1:
-        return None
-    br_idx = (p[i + 2] >> 4) & 0xF
-    sr_idx = (p[i + 2] >> 2) & 3
-    if sr_idx == 3 or br_idx in (0, 15):
-        return None
-    table = _MP3_BITRATES_V1L3 if ver == 3 else _MP3_BITRATES_V2L3
-    bitrate = table[br_idx]
-    rate = _MP3_RATES[ver][sr_idx]
-    out = {"format": "mp3",
-           "version": {3: "1", 2: "2", 0: "2.5"}[ver],
-           "layer": 3, "bitrate_kbps": bitrate, "sample_rate": rate}
-    # Xing ("Xing"/"Info") header: sits after the side info of the first
-    # frame — MPEG1: 32B stereo / 17B mono; MPEG2/2.5: 17B / 9B
-    chan_mode = (p[i + 3] >> 6) & 3
-    side = (32 if chan_mode != 3 else 17) if ver == 3 \
-        else (17 if chan_mode != 3 else 9)
-    x = i + 4 + side
-    if p[x:x + 4] in (b"Xing", b"Info") and x + 12 <= len(p) \
-            and (int.from_bytes(p[x + 4:x + 8], "big") & 1):
-        frames = int.from_bytes(p[x + 8:x + 12], "big")
-        spf = 1152 if ver == 3 else 576        # layer III samples/frame
-        out["duration_s"] = round(frames * spf / rate, 3)
-        out["vbr"] = True
-    else:
-        audio_bytes = len(p) - i
-        out["duration_s"] = round(audio_bytes * 8 / (bitrate * 1000.0), 3)
-    return out
-
-
-def _probe_flac(p: bytes) -> dict | None:
-    """fLaC STREAMINFO (always the first metadata block): sample rate
-    (20 bits), channels (3), bits-per-sample (5), total samples (36) —
-    exact duration with no frame decoding."""
-    if p[:4] != b"fLaC" or len(p) < 4 + 4 + 34:
-        return None
-    hdr = p[4]
-    if (hdr & 0x7F) != 0:                     # first block must be STREAMINFO
-        return None
-    b = p[8:8 + 34]
-    bits = int.from_bytes(b[10:18], "big")    # 64 bits spanning the fields
-    rate = (bits >> 44) & 0xFFFFF
-    channels = ((bits >> 41) & 0x7) + 1
-    sample_bits = ((bits >> 36) & 0x1F) + 1
-    total = bits & 0xFFFFFFFFF                # 36-bit total samples
-    out = {"format": "flac", "sample_rate": rate, "channels": channels,
-           "bits": sample_bits}
-    if rate and total:
-        out["duration_s"] = round(total / rate, 3)
-    return out
-
-
-def _probe_ogg(p: bytes) -> dict | None:
-    """Ogg container: codec from the first packet (OpusHead / vorbis),
-    exact duration from the LAST page's granule position (sample count at
-    the stream's granule rate — 48 kHz for Opus regardless of input
-    rate, the Vorbis sample rate otherwise)."""
-    if p[:4] != b"OggS" or len(p) < 28:
-        return None
-    out = {"format": "ogg"}
-    nseg = p[26]
-    body = 27 + nseg
-    first = p[body:body + 64]
-    rate = None
-    pre_skip = 0
-    if first[:8] == b"OpusHead" and len(first) >= 14:
-        out["codec"] = "opus"
-        out["channels"] = first[9]
-        pre_skip = int.from_bytes(first[10:12], "little")
-        out["sample_rate"] = int.from_bytes(first[12:16], "little")
-        rate = 48000                           # Opus granules are 48 kHz
-    elif first[:7] == b"\x01vorbis" and len(first) >= 16:
-        out["codec"] = "vorbis"
-        out["channels"] = first[11]
-        out["sample_rate"] = int.from_bytes(first[12:16], "little")
-        rate = out["sample_rate"]
-    # last page: scan backwards for the final OggS capture
-    tail = p.rfind(b"OggS")
-    if rate and tail > 0 and tail + 14 <= len(p):
-        granule = int.from_bytes(p[tail + 6:tail + 14], "little",
-                                 signed=True)
-        if granule > 0:
-            out["duration_s"] = round(max(granule - pre_skip, 0) / rate, 3)
-    return out
-
-
-def _probe_mp4(p: bytes) -> dict | None:
-    """ISO-BMFF box walk: ftyp brand, mvhd duration, and per-track sample
-    tables — mdhd timescale/duration, stsd codec id, stsz sample count,
-    stts exact sample-delta duration (the corpus-filtering fact set for
-    video: codec, frame/sample count, exact duration — no codec work)."""
-    if len(p) < 12 or p[4:8] != b"ftyp":
-        return None
-    out = {"format": "mp4", "brand": p[8:12].decode("latin1"),
-           "tracks": []}
-
-    def walk(lo: int, hi: int, depth: int = 0, trak: dict | None = None):
-        pos = lo
-        while pos + 8 <= hi and depth < 10:
-            size = int.from_bytes(p[pos:pos + 4], "big")
-            tag = p[pos + 4:pos + 8]
-            if size == 1:                      # 64-bit size
-                if pos + 16 > hi:
-                    return
-                size = int.from_bytes(p[pos + 8:pos + 16], "big")
-                body = pos + 16
-            else:
-                body = pos + 8
-            if size < 8 or pos + size > hi:
-                return
-            if tag == b"mvhd" and body + 20 <= hi:
-                v = p[body]
-                if v == 1 and body + 32 <= hi:
-                    ts = int.from_bytes(p[body + 20:body + 24], "big")
-                    dur = int.from_bytes(p[body + 24:body + 32], "big")
-                elif v == 0:
-                    ts = int.from_bytes(p[body + 12:body + 16], "big")
-                    dur = int.from_bytes(p[body + 16:body + 20], "big")
-                else:            # v1 truncated mid-field: skip, don't guess
-                    ts = dur = 0
-                if ts:
-                    out["duration_s"] = round(dur / ts, 3)
-            elif tag == b"mdhd" and trak is not None and body + 20 <= hi:
-                v = p[body]
-                if v == 1 and body + 32 <= hi:
-                    ts = int.from_bytes(p[body + 20:body + 24], "big")
-                    dur = int.from_bytes(p[body + 24:body + 32], "big")
-                elif v == 0:
-                    ts = int.from_bytes(p[body + 12:body + 16], "big")
-                    dur = int.from_bytes(p[body + 16:body + 20], "big")
-                else:
-                    ts = dur = 0
-                if ts:
-                    trak["_timescale"] = ts
-                    if dur:
-                        trak["duration_s"] = round(dur / ts, 3)
-            elif tag == b"hdlr" and trak is not None and body + 12 <= hi:
-                trak["handler"] = p[body + 8:body + 12].decode("latin1")
-            elif tag == b"stsd" and trak is not None and body + 16 <= hi:
-                # ver/flags(4) entry_count(4), then sample entries of
-                # size(4)+format-4cc(4): the first entry's 4cc IS the
-                # codec id (avc1, hvc1, mp4a, vp09, av01, ...)
-                if int.from_bytes(p[body + 4:body + 8], "big") >= 1:
-                    trak["codec"] = p[body + 12:body + 16].decode("latin1")
-            elif tag == b"stsz" and trak is not None and body + 12 <= hi:
-                trak["sample_count"] = int.from_bytes(
-                    p[body + 8:body + 12], "big")
-            elif tag == b"stts" and trak is not None and body + 8 <= hi:
-                n = int.from_bytes(p[body + 4:body + 8], "big")
-                total = cnt = 0
-                q = body + 8
-                for _ in range(min(n, 4096)):   # bounded header parse
-                    if q + 8 > hi:
-                        break
-                    c = int.from_bytes(p[q:q + 4], "big")
-                    d = int.from_bytes(p[q + 4:q + 8], "big")
-                    total += c * d
-                    cnt += c
-                    q += 8
-                trak["_stts_total"] = total
-                trak.setdefault("sample_count", cnt)
-            elif tag == b"trak":
-                rec: dict = {}
-                out["tracks"].append(rec)
-                walk(body, pos + size, depth + 1, rec)
-            elif tag in (b"moov", b"mdia", b"minf", b"stbl"):
-                walk(body, pos + size, depth + 1, trak)
-            pos += size
-
-    walk(0, len(p))
-    for rec in out["tracks"]:
-        ts = rec.pop("_timescale", 0)
-        total = rec.pop("_stts_total", 0)
-        if "duration_s" not in rec and ts and total:
-            # exact sample-delta duration when mdhd carries none
-            rec["duration_s"] = round(total / ts, 3)
-    return out
 
 
 def _mp4_boxes(p: bytes, lo: int, hi: int):
@@ -320,8 +95,8 @@ def mp4_sample_ranges(payload: bytes,
              [u32(stsz[0] + 12 + 4 * i) for i in range(n_samples)])
 
     # box layout is [size][tag][body]: the TAG is the 4 bytes just before
-    # the body (r08 advisor fix — reading [size] here left wide always
-    # False, silently mis-parsing 64-bit co64 offset tables as stco)
+    # the body (reading [size] here would leave wide always False,
+    # silently mis-parsing 64-bit co64 offset tables as stco)
     wide = p[stco[0] - 4:stco[0]] == b"co64" \
         if stco[0] >= 4 else False
     n_chunks = u32(stco[0] + 4)
@@ -365,171 +140,3 @@ def mp4_sample_ranges(payload: bytes,
     if s != n_samples:
         raise ValueError(f"sample walk covered {s} of {n_samples} samples")
     return out
-
-
-def probe_media(payload: bytes) -> dict:
-    p = bytes(payload)
-    if p[:8] == b"\x89PNG\r\n\x1a\n" and len(p) >= 24:
-        w, h = struct.unpack(">II", p[16:24])
-        return {"format": "png", "width": w, "height": h}
-    if p[:2] == b"\xff\xd8":
-        pos = 2
-        while pos + 9 < len(p):
-            if p[pos] != 0xFF:
-                break
-            marker = p[pos + 1]
-            if marker in (0xC0, 0xC1, 0xC2):
-                h, w = struct.unpack(">HH", p[pos + 5:pos + 9])
-                return {"format": "jpeg", "width": w, "height": h,
-                        "progressive": marker == 0xC2}
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                pos += 2
-                continue
-            pos += 2 + struct.unpack(">H", p[pos + 2:pos + 4])[0]
-        return {"format": "jpeg"}
-    if p[:6] in (b"GIF87a", b"GIF89a") and len(p) >= 10:
-        w, h = struct.unpack("<HH", p[6:10])
-        return {"format": "gif", "width": w, "height": h}
-    if p[:4] == b"RIFF" and p[8:12] == b"WEBP" and len(p) >= 30:
-        tag = p[12:16]
-        if tag == b"VP8 " and p[23:26] == b"\x9d\x01\x2a":
-            w = (p[26] | (p[27] << 8)) & 0x3FFF
-            h = (p[28] | (p[29] << 8)) & 0x3FFF
-            return {"format": "webp", "codec": "vp8", "width": w,
-                    "height": h}
-        if tag == b"VP8L" and p[20] == 0x2F:
-            bits = int.from_bytes(p[21:25], "little")
-            return {"format": "webp", "codec": "vp8l",
-                    "width": (bits & 0x3FFF) + 1,
-                    "height": ((bits >> 14) & 0x3FFF) + 1}
-        if tag == b"VP8X" and len(p) >= 30:
-            # extended container: canvas dims + flags; animations add
-            # ANIM (loop count) + per-ANMF durations — all header-only
-            meta = {"format": "webp",
-                    "width": (p[24] | (p[25] << 8) | (p[26] << 16)) + 1,
-                    "height": (p[27] | (p[28] << 8) | (p[29] << 16)) + 1,
-                    "has_alpha": bool(p[20] & 0x10)}
-            codec, frames, dur_ms = None, 0, 0
-            pos = 12
-            while pos + 8 <= len(p):
-                t4 = p[pos:pos + 4]
-                sz = int.from_bytes(p[pos + 4:pos + 8], "little")
-                body = p[pos + 8:pos + 8 + sz]
-                if t4 == b"ANIM" and len(body) >= 6:
-                    meta["loop_count"] = body[4] | (body[5] << 8)
-                elif t4 == b"ANMF" and len(body) >= 16:
-                    frames += 1
-                    dur_ms += (body[12] | (body[13] << 8)
-                               | (body[14] << 16))
-                    sub = 16            # frame data: own chunk sequence
-                    while codec is None and sub + 8 <= len(body):
-                        st = body[sub:sub + 4]
-                        ssz = int.from_bytes(body[sub + 4:sub + 8],
-                                             "little")
-                        if st in (b"VP8 ", b"VP8L"):
-                            codec = st
-                        sub += 8 + ssz + (ssz & 1)
-                elif t4 in (b"VP8 ", b"VP8L") and codec is None:
-                    codec = t4
-                pos += 8 + sz + (sz & 1)
-            if p[20] & 0x02:
-                meta["animated"] = True
-                meta["frame_count"] = frames
-                meta["duration_s"] = round(dur_ms / 1000.0, 3)
-            if codec in (b"VP8 ", b"VP8L"):
-                meta["codec"] = codec.decode("latin1").strip().lower()
-            return meta
-        return {"format": "webp", "codec": tag.decode("latin1").strip()}
-    if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        pos = 12
-        meta = {"format": "wav"}
-        while pos + 8 <= len(p):
-            tag = p[pos:pos + 4]
-            sz = int.from_bytes(p[pos + 4:pos + 8], "little")
-            body = p[pos + 8:pos + 8 + sz]
-            if tag == b"fmt " and len(body) >= 16:
-                code = int.from_bytes(body[0:2], "little")
-                meta["codec"] = {1: "pcm", 3: "float", 6: "alaw",
-                                 7: "mulaw"}.get(code, f"code{code}")
-                meta["channels"] = int.from_bytes(body[2:4], "little")
-                meta["sample_rate"] = int.from_bytes(body[4:8], "little")
-                meta["bits"] = int.from_bytes(body[14:16], "little")
-                meta["_brate"] = int.from_bytes(body[8:12], "little")
-            elif tag == b"data":
-                if meta.get("_brate"):
-                    meta["duration_s"] = round(sz / meta["_brate"], 3)
-            pos += 8 + sz + (sz & 1)
-        meta.pop("_brate", None)
-        return meta
-    if p[:9] == b"YUV4MPEG2":
-        hdr = p[:p.find(b"\n")].decode("latin1", "replace").split(" ")
-        meta = {"format": "y4m"}
-        for part in hdr[1:]:
-            if part.startswith("W"):
-                meta["width"] = int(part[1:])
-            elif part.startswith("H"):
-                meta["height"] = int(part[1:])
-            elif part.startswith("F"):
-                num, den = part[1:].split(":")
-                meta["fps"] = round(int(num) / int(den), 3)
-        return meta
-    flac = _probe_flac(p)
-    if flac is not None:
-        return flac
-    ogg = _probe_ogg(p)
-    if ogg is not None:
-        return ogg
-    mp4 = _probe_mp4(p)
-    if mp4 is not None:
-        return mp4
-    mp3 = _probe_mp3(p)
-    if mp3 is not None:
-        return mp3
-    return {"format": "unknown"}
-
-
-def media_probe(df, payload_col: str = "payload"):
-    """Spark surface: (…, payload binary) → + probe struct (format,
-    width, height, sample_rate, duration_s, codec — nulls where not
-    applicable). One map-side pass; bytes never shuffle."""
-    import pandas as pd
-
-    schema = ("format string, width int, height int, sample_rate int, "
-              "duration_s double, codec string, "
-              "track_handlers array<string>, track_codecs array<string>, "
-              "track_samples array<long>, track_durations array<double>")
-
-    def run(batches):
-        for pdf in batches:
-            cols = {k: [] for k in ("format", "width", "height",
-                                    "sample_rate", "duration_s", "codec",
-                                    "track_handlers", "track_codecs",
-                                    "track_samples", "track_durations")}
-            keep = {c: pdf[c] for c in pdf.columns if c != payload_col}
-            for b in pdf[payload_col]:
-                m = probe_media(bytes(b))
-                cols["format"].append(m.get("format"))
-                cols["width"].append(m.get("width"))
-                cols["height"].append(m.get("height"))
-                cols["sample_rate"].append(m.get("sample_rate"))
-                cols["duration_s"].append(m.get("duration_s"))
-                cols["codec"].append(m.get("codec"))
-                tr = m.get("tracks")
-                cols["track_handlers"].append(
-                    None if tr is None else [t.get("handler") for t in tr])
-                cols["track_codecs"].append(
-                    None if tr is None else [t.get("codec") for t in tr])
-                cols["track_samples"].append(
-                    None if tr is None else [t.get("sample_count")
-                                             for t in tr])
-                cols["track_durations"].append(
-                    None if tr is None else [t.get("duration_s")
-                                             for t in tr])
-            yield pd.DataFrame({**keep, **cols})
-
-    out_cols = [c for c in df.columns if c != payload_col]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name != payload_col)
-    full = (out_schema + ", " if out_schema else "") + schema
-    return df.mapInPandas(run, schema=full)

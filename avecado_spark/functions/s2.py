@@ -281,47 +281,23 @@ def xyz_from_face_uv(face, u, v):
 # bbox covering — the cell-cover index for polygon joins
 # ---------------------------------------------------------------------------
 
-def cover_bbox_rad(lon_lo: float, lat_lo: float, lon_hi: float, lat_hi: float,
-                   level: int, max_cells: int = 200_000,
-                   adaptive: bool = False) -> np.ndarray:
-    """Cells whose EXACT rect bound intersects the lon/lat bbox (radians) —
-    a conservative superset of the cells intersecting any region inside the
-    bbox, which is the candidate-generation contract for cover joins (a
-    contained point's cell can never be missed).  BFS over the cell tree
-    from the 6 face roots; returns signed int64 cell ids.
-
-    Fixed mode (adaptive=False): all cells at exactly `level` — the shape
-    for an EQUALITY join on a level-`level` doc column, but cover size
-    grows 4× per level (O(area)).  Adaptive mode: `level` is the MAX
-    level; a cell whose rect bound lies fully inside the bbox is emitted
-    where it is (its whole subtree is inside — collapsing is sound because
-    bound ⊇ region), so the cover is O(perimeter) cells at mixed levels —
-    the canonical S2 covering, joined via [range_min, range_max] leaf-id
-    ranges instead of equality.
-
-    Implementation: the batch-of-one case of cover_bboxes_rad_batch —
-    scalar and batch covers are the SAME code path, so per-owner parity
-    between them holds by construction."""
-    ids, _ = cover_bboxes_rad_batch(
-        np.array([lon_lo]), np.array([lat_lo]),
-        np.array([lon_hi]), np.array([lat_hi]),
-        level, max_total_cells=max_cells, adaptive=adaptive)
-    return ids
-
-
 def cover_bboxes_rad_batch(lon_lo, lat_lo, lon_hi, lat_hi, level: int,
-                           max_total_cells: int = 50_000_000,
-                           adaptive: bool = True):
-    """Adaptive covers for MANY bboxes in one BFS: the frontier carries an
-    owner index and every per-cell test gathers its owner's bbox, so the
+                           max_total_cells: int = 50_000_000):
+    """Adaptive covers of lon/lat bboxes (radians), the canonical S2
+    covering: for each bbox, the cells whose EXACT rect bound intersects
+    it — a conservative superset of the cells intersecting any region
+    inside the bbox, so a contained point's cell is never missed.  `level`
+    is the MAX level; a cell whose rect bound lies fully inside the bbox is
+    emitted where it is (its whole subtree is inside), so a cover is
+    O(perimeter) cells at mixed levels, joined via [range_min, range_max]
+    leaf-id ranges.  Returns (ids int64, owner int64).
+
+    MANY bboxes share one BFS from the 6 face roots: the frontier carries
+    an owner index and every per-cell test gathers its owner's bbox, so the
     whole 10^4-polygon index build is a few dozen full-width numpy passes
     per level instead of 10^4 independent traversals, with all trig folded
     into O(owners) threshold tables up front (measured at 10k polygons /
-    level-12 adaptive / 926k cover cells: 1.8s vs 47.3s for the
-    per-polygon loop).  Returns (ids int64, owner int64); emitted
-    cells per owner are exactly cover_bbox_rad(..., adaptive=...) of that
-    owner's bbox — parity is test-pinned
-    (tests/test_s2_cover.py::test_batch_cover_matches_scalar_per_owner).
+    level-12 / 926k cover cells: 1.8s vs 47.3s for the per-polygon loop).
 
     Owners are processed in chunks of _COVER_CHUNK_OWNERS so the deepest
     levels' frontier temporaries (~30 full-width arrays per level) stay
@@ -339,8 +315,7 @@ def cover_bboxes_rad_batch(lon_lo, lat_lo, lon_hi, lat_hi, level: int,
             ids_c, owner_c = cover_bboxes_rad_batch(
                 np.asarray(lon_lo)[i:j], np.asarray(lat_lo)[i:j],
                 np.asarray(lon_hi)[i:j], np.asarray(lat_hi)[i:j],
-                level, max_total_cells=max_total_cells - n_total,
-                adaptive=adaptive)
+                level, max_total_cells=max_total_cells - n_total)
             n_total += len(ids_c)
             ids_parts.append(ids_c)
             owner_parts.append(owner_c + i)
@@ -420,10 +395,9 @@ def cover_bboxes_rad_batch(lon_lo, lat_lo, lon_hi, lat_hi, level: int,
             TLr, THr = TL[pe], TH[pe]
             lat_ok = (w1 >= TLr * s_hi) & (w0 <= THr * s_lo)
             overlap[eq] = lon_ok & lat_ok
-            if adaptive:
-                lon_in = ((Lr <= p0[:, None]) & (p1[:, None] <= Ur)).any(axis=1)
-                lat_in = (w0 >= TLr * s_lo) & (w1 <= THr * s_hi)
-                inside[eq] = lon_in & lat_in
+            lon_in = ((Lr <= p0[:, None]) & (p1[:, None] <= Ur)).any(axis=1)
+            lat_in = (w0 >= TLr * s_lo) & (w1 <= THr * s_hi)
+            inside[eq] = lon_in & lat_in
 
         po = np.flatnonzero(is_polar)
         if len(po):
@@ -440,12 +414,9 @@ def cover_bboxes_rad_batch(lon_lo, lat_lo, lon_hi, lat_hi, level: int,
             lat_ok = np.where(is2,
                               (r2min <= C_lo[pp]) & (r2max >= D_hi[pp]),
                               (r2max >= E_lo[pp]) & (r2min <= F_hi[pp]))
-            if adaptive:
-                lat_in = np.where(is2,
-                                  (r2max <= C_lo[pp]) & (r2min >= D_hi[pp]),
-                                  (r2min >= E_lo[pp]) & (r2max <= F_hi[pp]))
-            else:
-                lat_in = np.zeros(len(po), dtype=bool)
+            lat_in = np.where(is2,
+                              (r2max <= C_lo[pp]) & (r2min >= D_hi[pp]),
+                              (r2min >= E_lo[pp]) & (r2max <= F_hi[pp]))
             # lon only matters for rows whose lat already passes (lat_in
             # implies lat_ok: the cell's lat interval sits inside the
             # query's, so it certainly overlaps it)
@@ -486,13 +457,11 @@ def cover_bboxes_rad_batch(lon_lo, lat_lo, lon_hi, lat_hi, level: int,
                     lon_ok[sub] = ((g_lo[:, None] + shifts <= qhi[:, None])
                                    & (qlo[:, None] <= g_hi[:, None] + shifts)
                                    ).any(axis=1)
-                    if adaptive:
-                        lon_in[sub] = ((g_lo[:, None] + shifts >= qlo[:, None])
-                                       & (g_hi[:, None] + shifts
-                                          <= qhi[:, None])).any(axis=1)
+                    lon_in[sub] = ((g_lo[:, None] + shifts >= qlo[:, None])
+                                   & (g_hi[:, None] + shifts
+                                      <= qhi[:, None])).any(axis=1)
             overlap[po] = lat_ok & lon_ok
-            if adaptive:
-                inside[po] = lat_in & lon_in
+            inside[po] = lat_in & lon_in
 
         emit = overlap & (inside if lvl < level else np.ones(n, bool))
         if emit.any():

@@ -4,11 +4,9 @@ A 100 TB training pipeline carries image/audio/video as `binary` columns
 with struct metadata; the Spark-side plumbing (schema, partitioning, Arrow
 batch shape, UDF signatures) is real and tested here. PNG images decode
 FOR REAL via the in-repo pure-numpy decoder (operators/raster.png_decode),
-lossless WebP via functions/webp.webp_decode (VP8L: prefix codes, color
-cache, LZ77, all four transforms), GIF via functions/gif.gif_decode,
-RIFF/WAVE PCM audio via wav_decode below,
-and YUV4MPEG2 video via y4m_decode_frame. Remaining codecs (JPEG, lossy
-WebP, mp3/aac, mp4/webm, AVIF) are STUBBED — those
+GIF via functions/gif.gif_decode, RIFF/WAVE PCM audio via wav_decode below,
+and YUV4MPEG2 video via y4m_decode_frame. Remaining codecs (JPEG, WebP,
+mp3/aac, mp4/webm, AVIF) are STUBBED — those
 libraries are not in this container — and raise NotImplementedError unless
 `deterministic_fake=True`, which produces a seeded fake decode so the
 downstream plumbing (resize → feature-extract shape) is exercised end to
@@ -52,13 +50,12 @@ def decode_image(payload: bytes, width: int, height: int,
     """Image decode → (h, w, 3) uint8. PNG payloads decode FOR REAL via the
     in-repo pure-numpy decoder (operators/raster.png_decode — IHDR/IDAT,
     filters 0-4; grayscale expanded, alpha dropped; the PNG's own header
-    dims win over the metadata). Lossless WebP decodes FOR REAL via the
-    full VP8L decoder (functions/webp.webp_decode); lossy WebP raises
-    NotImplementedError there. Remaining formats (JPEG, AVIF, HEIC, ...)
-    have no decoder: NotImplementedError unless deterministic_fake=True, which
+    dims win over the metadata). GIF (87a/89a incl. interlace + LZW)
+    decodes for real via functions/gif.gif_decode — first frame composed,
+    alpha dropped. Remaining formats (JPEG, WebP, AVIF, HEIC, ...) have no
+    decoder: NotImplementedError unless deterministic_fake=True, which
     derives a shape-correct array from a sha256 keystream of the
-    payload. GIF (87a/89a incl. interlace + LZW) decodes for real via
-    functions/gif.gif_decode — first frame composed, alpha dropped."""
+    payload."""
     if bytes(payload[:8]) == b"\x89PNG\r\n\x1a\n":
         from ..operators.raster import png_decode
         img = png_decode(bytes(payload))
@@ -67,15 +64,12 @@ def decode_image(payload: bytes, width: int, height: int,
         if img.shape[2] == 2:        # gray+alpha → RGB
             return np.repeat(img[:, :, :1], 3, axis=2)
         return img[:, :, :3]         # RGB / RGBA (alpha dropped)
-    if bytes(payload[:4]) == b"RIFF" and bytes(payload[8:12]) == b"WEBP":
-        from ..functions.webp import webp_decode
-        return webp_decode(bytes(payload))[:, :, :3]  # alpha dropped
     if bytes(payload[:6]) in (b"GIF87a", b"GIF89a"):
         from ..functions.gif import gif_decode
         return gif_decode(bytes(payload))[:, :, :3]  # alpha dropped
     if not deterministic_fake:
         raise NotImplementedError(
-            "non-PNG/lossless-WebP/GIF image decode requires PIL/opencv "
+            "non-PNG/GIF image decode requires PIL/opencv "
             "(not installed); pass deterministic_fake=True for the "
             "seeded stand-in")
     need = width * height * 3
@@ -107,7 +101,7 @@ def extract_features(img: np.ndarray) -> np.ndarray:
 
 
 def media_features(df: DataFrame, target: int = 32) -> DataFrame:
-    """mapInPandas plumbing: decode (REAL for PNG/WebP/GIF payloads, seeded
+    """mapInPandas plumbing: decode (REAL for PNG/GIF payloads, seeded
     fake otherwise) → resize → features. Arrow batches in,
     (media_id, features array<float>) out."""
 
@@ -218,8 +212,9 @@ def decode_video_frame(payload: bytes, frame_idx: int, width: int, height: int,
                        deterministic_fake: bool = False) -> np.ndarray:
     """Video frame extraction → (h, w, 3) uint8. YUV4MPEG2 payloads
     decode FOR REAL (y4m_decode_frame — uncompressed planar YUV, no codec
-    needed; the container's own dims win over the metadata). Compressed
-    containers (mp4/webm/...) need libraries not in this container:
+    needed; the container's own dims win over the metadata); animated GIF
+    decodes via functions/gif.gif_decode_frame. Compressed containers
+    (mp4/webm/WebP/...) need libraries not in this container:
     NotImplementedError unless deterministic_fake=True (deterministic
     frame from the payload digest + frame index, so downstream plumbing —
     sampling stride, per-frame features — is exercised end to end)."""
@@ -229,11 +224,6 @@ def decode_video_frame(payload: bytes, frame_idx: int, width: int, height: int,
         # animated GIF: disposal-composited frame (functions/gif.py)
         from ..functions.gif import gif_decode_frame
         return gif_decode_frame(bytes(payload), frame_idx)[:, :, :3]
-    if (bytes(payload[:4]) == b"RIFF"
-            and bytes(payload[8:12]) == b"WEBP"):
-        # animated WebP: blend/dispose-composited frame (functions/webp.py)
-        from ..functions.webp import webp_decode_frame
-        return webp_decode_frame(bytes(payload), frame_idx)[:, :, :3]
     if not deterministic_fake:
         raise NotImplementedError(
             "compressed video codec not available in this container; "

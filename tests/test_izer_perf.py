@@ -71,10 +71,10 @@ def test_sorted_run_walk_beats_per_group_apply(spark):
         assert apply_to_tiles(feats, conf).count() == N_GROUPS
         assert _apply_per_group(feats, conf).count() == N_GROUPS
 
-        # interleaved A/B pairs: host drift between measurements hits
-        # both sides of a pair equally, and the MEDIAN pair ratio is
-        # what gets pinned (this host moves 2x+ between minutes)
-        ratios = []
+        # two interleaved A/B pairs: host drift between measurements hits
+        # both sides of a pair equally, and the BEST pair ratio is what
+        # gets pinned (a shared host can move 2x+ between minutes)
+        pairs = []
         for _ in range(2):
             t0 = time.time()
             apply_to_tiles(feats, conf).count()
@@ -82,17 +82,18 @@ def test_sorted_run_walk_beats_per_group_apply(spark):
             t0 = time.time()
             _apply_per_group(feats, conf).count()
             per_group = time.time() - t0
-            ratios.append(per_group / max(sorted_run, 1e-9))
+            pairs.append((per_group / max(sorted_run, 1e-9),
+                          sorted_run, per_group))
     finally:
         feats.unpersist()
 
-    ratio = max(ratios)
+    ratio, sorted_run, per_group = max(pairs)
     # measured 7-20x at ~32k groups; 3k groups in CI measures lower but
     # still multiples — require >= 2x so host jitter can't flake it
     assert ratio >= 2.0, (
         f"sorted-run walk only {ratio:.1f}x faster than per-group "
-        f"applyInPandas ({sorted_run:.2f}s vs {per_group:.2f}s) — "
-        "the many-tiny-groups pathology is back")
+        f"applyInPandas ({sorted_run:.2f}s vs {per_group:.2f}s in the best "
+        "of 2 pairs) — the many-tiny-groups pathology is back")
 
 
 def _packed_zigzags(spark, n):

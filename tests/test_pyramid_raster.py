@@ -223,7 +223,7 @@ def test_decode_image_real_png_and_media_features(spark):
     # real decode prefers the PNG header dims over metadata
     d = decode_image(png_encode(imgs[0]), 1, 1)
     assert d.shape == (40, 30, 3)
-    # formats without a decoder (lossy VP8 WebP, JPEG) fail loudly...
+    # formats without a decoder (WebP, JPEG) fail loudly...
     lossy = (b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
              + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4)
     with pytest.raises(NotImplementedError):
@@ -231,8 +231,12 @@ def test_decode_image_real_png_and_media_features(spark):
     with pytest.raises(NotImplementedError):
         decode_image(b"\xff\xd8\xffJPEGish", 8, 8)
     # ...and malformed streams fail loudly, not silently
-    with pytest.raises(ValueError):
-        decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ", 8, 8)  # truncated
+    from avecado_spark.functions.gif import gif_encode
+    stripes = np.zeros((8, 8, 3), np.uint8)
+    stripes[::2] = 255
+    truncated = gif_encode(stripes)[:20]
+    with pytest.raises(ValueError, match="GIF: truncated image descriptor"):
+        decode_image(truncated, 8, 8)
 
 
 # ---------------------------------------------------------------------------

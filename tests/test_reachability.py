@@ -12,8 +12,7 @@ ENTRY_GLOBS = ["__spark_entry__.py", "bench*.py", "jobs/*.py", "perfbench/*.py",
 TEST_ONLY = {
     "avecado_spark.functions.flac": "media column codec (FLAC)",
     "avecado_spark.functions.gif": "media column codec (GIF)",
-    "avecado_spark.functions.mediameta": "header-only media probe",
-    "avecado_spark.functions.webp": "media column codec (lossless WebP)",
+    "avecado_spark.functions.mediameta": "MP4 sample byte ranges",
     "avecado_spark.sources.multimodal": "binary media columns",
     "avecado_spark.operators.pyramid": "reference overzoom + exporter pyramid",
     "avecado_spark.sources.mapnik_xml": "reference --map-file surface",

@@ -8,13 +8,20 @@ from avecado_spark.functions import s2
 rng = np.random.default_rng(13)
 
 
+def _cover(box, level):
+    ids, _ = s2.cover_bboxes_rad_batch(*([v] for v in box), level)
+    return ids
+
+
 def test_adaptive_cover_is_conservative_and_smaller():
     lon_lo, lat_lo, lon_hi, lat_hi = -0.3, 0.1, 0.2, 0.55
-    fixed = set(s2.cover_bbox_rad(lon_lo, lat_lo, lon_hi, lat_hi, 8).tolist())
-    adap = s2.cover_bbox_rad(lon_lo, lat_lo, lon_hi, lat_hi, 8, adaptive=True)
+    adap = _cover((lon_lo, lat_lo, lon_hi, lat_hi), 8)
     au = adap.view(np.uint64)
     rmin, rmax = s2.range_min(au), s2.range_max(au)
-    assert len(adap) < len(fixed) / 3
+    # each collapsed cell stands for its 4^(8 - level) level-8 descendants:
+    # the cover is 3x smaller than the level-8 cells it spans
+    spanned = (4 ** (8 - s2.cell_level(au).astype(np.int64))).sum()
+    assert len(adap) < spanned / 3
     # disjoint ranges
     order = np.argsort(rmin)
     assert np.all(rmax[order][:-1] < rmin[order][1:])
@@ -38,6 +45,6 @@ def test_adaptive_cover_perimeter_scaling():
     """Two extra levels of precision cost ~4x cells (perimeter), not ~16x
     (area) — the property that makes precision affordable."""
     box = (-0.35, 0.05, 0.35, 0.6)
-    n10 = len(s2.cover_bbox_rad(*box, 10, adaptive=True))
-    n12 = len(s2.cover_bbox_rad(*box, 12, adaptive=True))
+    n10 = len(_cover(box, 10))
+    n12 = len(_cover(box, 12))
     assert n12 < 8 * n10
