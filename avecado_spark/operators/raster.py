@@ -46,11 +46,6 @@ def png_encode(rgba: np.ndarray) -> bytes:
             + _chunk(b"IEND", b""))
 
 
-def png_decode_size(data: bytes) -> tuple[int, int]:
-    w, h = struct.unpack(">II", data[16:24])
-    return w, h
-
-
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
@@ -60,7 +55,8 @@ def png_decode(data: bytes) -> np.ndarray:
     five scanline filters (None/Sub/Up/Average/Paeth), no interlace.
     Returns (h, w, channels) uint8. Sub is a per-channel cumulative sum
     mod 256 (vectorized); Average/Paeth walk pixels with the channel axis
-    vectorized."""
+    vectorized. A malformed stream raises ValueError saying what is wrong;
+    a valid PNG this decoder does not cover raises NotImplementedError."""
     if data[:8] != PNG_MAGIC:
         raise ValueError("not a PNG")
     pos = 8
@@ -69,14 +65,24 @@ def png_decode(data: bytes) -> np.ndarray:
     while pos + 8 <= len(data):
         ln = struct.unpack(">I", data[pos:pos + 4])[0]
         tag = data[pos + 4:pos + 8]
+        if pos + 12 + ln > len(data):
+            raise ValueError(f"PNG: {tag!r} chunk of {ln} bytes at byte {pos} "
+                             f"runs past the end of the {len(data)}-byte "
+                             "stream (truncated)")
         payload = data[pos + 8:pos + 8 + ln]
         pos += 12 + ln
         if tag == b"IHDR":
+            if ln != 13:
+                raise ValueError(f"PNG: IHDR chunk is {ln} bytes, not 13")
             w, h, depth, ctype, _comp, _filt, inter = struct.unpack(
                 ">IIBBBBB", payload)
-            if depth != 8 or inter != 0:
+            if depth != 8 or inter != 0 or ctype == 3:
                 raise NotImplementedError(
-                    "png_decode supports 8-bit non-interlaced PNGs")
+                    "png_decode supports 8-bit non-interlaced PNGs of "
+                    f"colour type 0, 2, 4 or 6 (got depth {depth}, "
+                    f"colour type {ctype}, interlace {inter})")
+            if ctype not in (0, 2, 4, 6):
+                raise ValueError(f"PNG: invalid colour type {ctype}")
             channels = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
         elif tag == b"IDAT":
             idat.append(payload)
@@ -84,7 +90,10 @@ def png_decode(data: bytes) -> np.ndarray:
             break
     if w is None:
         raise ValueError("missing IHDR")
-    raw = zlib.decompress(b"".join(idat))
+    try:
+        raw = zlib.decompress(b"".join(idat))
+    except zlib.error as e:
+        raise ValueError(f"PNG: corrupt IDAT stream ({e})") from e
     stride = w * channels
     if len(raw) != h * (stride + 1):
         raise ValueError("IDAT size mismatch")
@@ -517,7 +526,10 @@ def vectorize_tiles(df, background: tuple = (0x8C, 0xC6, 0x3F, 0xFF)):
             rs, gs, bs = [], [], []
             for z, x, y, png in zip(pdf["z"], pdf["x"], pdf["y"],
                                     pdf["png"]):
-                img = png_decode(bytes(png))
+                try:
+                    img = png_decode(bytes(png))
+                except (ValueError, NotImplementedError) as e:
+                    raise type(e)(f"raster tile {z}/{x}/{y}: {e}") from e
                 if img.shape[2] < 4:
                     img = np.concatenate(
                         [img] + [np.full(img.shape[:2] + (1,), 255,

@@ -207,6 +207,17 @@ def test_varint_roundtrip():
         assert out == v and pos == len(buf)
 
 
+@given(st.integers(0, 10**6))
+@settings(max_examples=30, deadline=None)
+def test_random_bytes_never_hang_mvt(seed):
+    rng = np.random.default_rng(seed)
+    blob = bytes(rng.integers(0, 256, 400, dtype=np.uint8))
+    try:
+        mvt.decode_tile(blob)
+    except Exception as e:
+        assert not isinstance(e, (MemoryError, RecursionError))
+
+
 def test_make_vector_tile_full_signature_with_post_processor():
     """Reference binding parity (python_module.cpp:203-212): all kwargs
     accepted; post_processor izers run per layer before encoding."""

@@ -6,7 +6,7 @@ import numpy as np
 from avecado_spark.functions import mvt
 from avecado_spark.operators.pyramid import (NOT_FOUND, OK, SERVER_ERROR,
                                              Overzoom)
-from avecado_spark.operators.raster import (png_decode_size, png_encode,
+from avecado_spark.operators.raster import (png_decode, png_encode,
                                             render_tile, render_tile_png)
 
 
@@ -107,7 +107,7 @@ def test_png_roundtrip_size():
     img = render_tile(None, {}, BACKGROUND)
     data = png_encode(img)
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
-    assert png_decode_size(data) == (256, 256)
+    assert png_decode(data).shape[:2] == (256, 256)
 
 
 def test_render_tile_png_deterministic():
@@ -135,7 +135,7 @@ def test_raster_digest_golden(spark):
 
 
 # ---------------------------------------------------------------------------
-# PNG decoder (the real half of the multimodal image path)
+# PNG decoder (the matching half of png_encode, run by vectorize_tiles)
 # ---------------------------------------------------------------------------
 
 def test_png_decode_roundtrip_rgba():
@@ -196,47 +196,36 @@ def test_png_decode_all_filters():
     assert np.array_equal(png_decode(data), img)
 
 
-def test_decode_image_real_png_and_media_features(spark):
-    """decode_image is REAL for PNG payloads: media_features over PNGs
-    produced by png_encode matches the driver-side decode→resize→features
-    pipeline; non-PNG payloads still raise without the fake flag."""
-    import numpy as np
+def test_png_decode_malformed_fails_loudly(spark):
+    """Malformed PNGs raise a ValueError that says what is wrong, a palette
+    PNG the same NotImplementedError as an interlaced one, and a bad tile
+    inside vectorize_tiles names its z/x/y."""
+    import struct
+    import zlib
     import pytest
-    from avecado_spark.sources.multimodal import (decode_image,
-                                                  extract_features,
-                                                  media_features,
-                                                  resize_nearest)
-    rng = np.random.default_rng(3)
-    imgs = {i: rng.integers(0, 256, size=(40 + i, 30 + i, 4), dtype=np.uint8)
-            for i in range(4)}
-    rows = [(i, "image", bytearray(png_encode(imgs[i])),
-             (30 + i, 40 + i, "image/png")) for i in range(4)]
-    df = spark.createDataFrame(
-        rows, schema="media_id long, kind string, payload binary, "
-                     "meta struct<width:int, height:int, mime:string>")
-    got = {r.media_id: np.asarray(r.features, dtype=np.float32)
-           for r in media_features(df, target=16).collect()}
-    assert len(got) == 4
-    for i in range(4):
-        want = extract_features(resize_nearest(imgs[i][:, :, :3], 16, 16))
-        assert np.allclose(got[i], want)
-    # real decode prefers the PNG header dims over metadata
-    d = decode_image(png_encode(imgs[0]), 1, 1)
-    assert d.shape == (40, 30, 3)
-    # formats without a decoder (WebP, JPEG) fail loudly...
-    lossy = (b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
-             + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4)
-    with pytest.raises(NotImplementedError):
-        decode_image(lossy, 8, 8)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xffJPEGish", 8, 8)
-    # ...and malformed streams fail loudly, not silently
-    from avecado_spark.functions.gif import gif_encode
-    stripes = np.zeros((8, 8, 3), np.uint8)
-    stripes[::2] = 255
-    truncated = gif_encode(stripes)[:20]
-    with pytest.raises(ValueError, match="GIF: truncated image descriptor"):
-        decode_image(truncated, 8, 8)
+    from avecado_spark.operators.raster import _chunk, vectorize_tiles
+    good = png_encode(np.zeros((4, 4, 4), np.uint8))
+    with pytest.raises(ValueError, match="IHDR.*truncated"):
+        png_decode(good[:30])
+    magic = good[:8]
+    palette = (magic
+               + _chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 3, 0, 0, 0))
+               + _chunk(b"PLTE", b"\x00\x00\x00")
+               + _chunk(b"IDAT", zlib.compress(bytes(4 * 5)))
+               + _chunk(b"IEND", b""))
+    with pytest.raises(NotImplementedError, match="colour type 3"):
+        png_decode(palette)
+    short_ihdr = (magic + _chunk(b"IHDR", b"\x00\x00\x00\x04")
+                  + _chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="IHDR chunk is 4 bytes, not 13"):
+        png_decode(short_ihdr)
+    bad_zlib = good[:41] + b"\x00" + good[42:]  # zlib header of the IDAT
+    with pytest.raises(ValueError, match="corrupt IDAT stream"):
+        png_decode(bad_zlib)
+    df = spark.createDataFrame([(6, 33, 21, bytearray(good[:30]))],
+                               "z int, x long, y long, png binary")
+    with pytest.raises(Exception, match="tile 6/33/21: PNG: .*truncated"):
+        vectorize_tiles(df).collect()
 
 
 # ---------------------------------------------------------------------------

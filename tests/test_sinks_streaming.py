@@ -1,6 +1,6 @@
 """Sinks (z/x/y.pbf tree, TileJSON), checkpoint/resume manifest,
-Structured Streaming batch-parity, multimodal plumbing, overzoom join,
-pyramid rollup / copy-down — the Spark-integration layer."""
+Structured Streaming batch-parity, overzoom join, pyramid rollup /
+copy-down — the Spark-integration layer."""
 
 import glob
 import os
@@ -81,22 +81,6 @@ def test_streaming_batch_parity(spark):
     canon = lambda rows: sorted((r.wstart, r.event_type, r.n, r.value_cents) for r in rows)
     assert canon(stream_rows) == canon(batch)
     assert len(stream_rows) > 0
-
-
-def test_multimodal_plumbing(spark):
-    from avecado_spark.sources.multimodal import (decode_image, media_features,
-                                                  synth_media_df)
-    media = synth_media_df(spark, 32)
-    feats = media_features(media).collect()
-    assert len(feats) == 16  # images only (every other row)
-    assert all(len(r.features) == 16 for r in feats)
-    # deterministic across runs
-    feats2 = media_features(media).collect()
-    assert sorted((r.media_id, tuple(r.features)) for r in feats) == \
-           sorted((r.media_id, tuple(r.features)) for r in feats2)
-    # the real decode path is stubbed
-    with pytest.raises(NotImplementedError):
-        decode_image(b"x", 4, 4)
 
 
 def test_overzoom_join(spark, tiles):
@@ -336,29 +320,6 @@ def test_sessionize_stream_matches_batch(spark):
     assert stream == batch
 
 
-def test_video_frame_sampling(spark):
-    """Video frame-sample plumbing: one video row fans out to k frame rows
-    map-side (stride-derived indices), deterministic fake decode, real
-    resize + feature shapes; the codec itself is stubbed."""
-    import pytest as _pytest
-    from avecado_spark.sources.multimodal import (decode_video_frame,
-                                                  sample_frames,
-                                                  synth_media_df)
-    media = synth_media_df(spark, 32)
-    n_videos = media.where(F.col("kind") == "video").count()
-    assert n_videos == 8
-    frames = sample_frames(media, stride_s=2.0, fps=24.0, duration_s=10.0)
-    rows = frames.collect()
-    assert len(rows) == n_videos * 5          # 10s / 2s stride
-    assert sorted({r.frame_idx for r in rows}) == [0, 48, 96, 144, 192]
-    assert all(len(r.features) == 16 for r in rows)
-    rows2 = frames.collect()                   # deterministic
-    assert sorted((r.media_id, r.frame_idx, tuple(r.features)) for r in rows) \
-        == sorted((r.media_id, r.frame_idx, tuple(r.features)) for r in rows2)
-    with _pytest.raises(NotImplementedError):
-        decode_video_frame(b"x", 0, 4, 4)
-
-
 def test_fetch_tiles_overzoom(spark):
     """Overzoom fetch semantics (reference fetch/overzoom.cpp): z>max_zoom
     zooms out to max_zoom; a 404 above mask_zoom retries at mask_zoom."""
@@ -386,25 +347,6 @@ def test_fetch_tiles_overzoom(spark):
     assert out[(10, 1400, 1000)].served_z == 6
     assert out[(10, 1400, 1000)].served_x == 1400 >> 4
     assert out[(8, 100, 100)].served_z == 8
-
-
-def test_audio_features(spark):
-    """Audio leg of the multimodal plumbing: stubbed codec, deterministic
-    fake waveform, RMS frame energies with a fixed feature shape."""
-    import pytest as _pytest
-    from avecado_spark.sources.multimodal import (audio_features, decode_audio,
-                                                  synth_media_df)
-    media = synth_media_df(spark, 32)
-    n_audio = media.where(F.col("kind") == "audio").count()
-    rows = audio_features(media).collect()
-    assert len(rows) == n_audio
-    assert all(len(r.features) == 16 for r in rows)
-    assert all(f >= 0 for r in rows for f in r.features)
-    rows2 = audio_features(media).collect()
-    assert sorted((r.media_id, tuple(r.features)) for r in rows) == \
-        sorted((r.media_id, tuple(r.features)) for r in rows2)
-    with _pytest.raises(NotImplementedError):
-        decode_audio(b"x")
 
 
 def test_deep_zoom_packed_key_layout(spark):
