@@ -67,11 +67,16 @@ def spark_session(master: str | None = None, app: str = "avecado_spark",
         b = b.config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    # listing a partitioned table (the tile table has up to 4096 part_key
+    # directories) runs one task per directory, up to this setting's
+    # default of 10,000 tasks; a task per core lists them as fast
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+                   str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
-def build_tiles(pages: DataFrame, z: int, n_salts: int = 16,
-                **encode_kwargs) -> DataFrame:
+def build_tiles(pages: DataFrame, z: int, **encode_kwargs) -> DataFrame:
     """Bulk tile build: pages table → (z, x, y, tile_pbf, n_features,
     interesting). The Spark translation of `avecado vector-bulk`: tile keys
     are derived from the data, so empty tiles are pruned for free
@@ -81,5 +86,4 @@ def build_tiles(pages: DataFrame, z: int, n_salts: int = 16,
     keyed = keyed.withColumn(
         "feature_id",
         keyed["url"].substr(32, 20).cast("long"))  # trailing page number
-    salted = with_salt(keyed, n_salts=n_salts)
-    return build_point_tiles(salted, z, n_salts=n_salts, **encode_kwargs)
+    return build_point_tiles(with_salt(keyed), z, **encode_kwargs)

@@ -12,22 +12,22 @@ goldens in /root/reference/test/make_vector_tile.cpp:55-59 and
 
 Distributed point build (`build_point_tiles`) is one Spark stage boundary:
 
-  repartition by the tile key (pkey >> salt_bits) → sortWithinPartitions by
-  pkey (x, y, salt) → ONE mapInPandas that encodes every feature of the
-  batch at once (`_encode_point_blocks`, numpy-vectorized, against a fixed
-  per-layer key/value table) and writes each tile from one slice of that
-  buffer: layer header + feature blocks + key/value tail, gzip. This is the
-  reference's per-layer accumulation, serialized once per tile (reference
-  src/backend.cpp:15-44). The salt only orders features inside a tile.
-  Every Python stage pays a fixed per-task boundary cost, so the build
-  runs one stage, not a salted encode stage plus a merge stage; with the
-  vectorized encode a hot tile's task is bound by its gzip, which is
-  serial per tile in either shape.
+  repartition by the tile key tkey = x·2^z + y → sortWithinPartitions by
+  (tkey, salt) → ONE mapInPandas that encodes every feature of the batch
+  at once (`_encode_point_blocks`, numpy-vectorized, against the fixed
+  key/value table of the pages layer) and writes each tile from one slice
+  of that buffer: layer header + feature blocks + key/value tail, gzip.
+  This is the reference's per-layer accumulation, serialized once per tile
+  (reference src/backend.cpp:15-44). The salt only orders features inside
+  a tile. Every Python stage pays a fixed per-task boundary cost, so the
+  build runs one stage whose exchange has no explicit partition count
+  (AQE coalesces it to the data); with the vectorized encode a hot tile's
+  task is bound by its gzip, which is serial per tile in any shape.
 
 Fixed tables make feature blocks position-independent, so partial tiles
 merge by byte concatenation: `partials_only=True` stops at one row per
-(x, y, salt), and `merge_point_partials` merges any union of partials (salt
-slices, streaming micro-batches) through the same tile writer.
+(tkey, salt), and `merge_point_partials` merges any union of partials
+(salt slices, streaming micro-batches) through the same tile writer.
 
 Distributed feature build (`build_feature_tiles`, lines/polygons/multi-*)
 has the same shape: one exchange on the tile key, a sort by (z, x, y,
@@ -221,10 +221,16 @@ def _encode_tile(features_by_layer: dict[str, list[dict]], z: int, x: int,
 # distributed point-tile build
 # ---------------------------------------------------------------------------
 
-# fixed value table for the pages layer → feature blocks merge by concat
+# fixed value table of the pages layer's one property, lang: feature blocks
+# index it, so partial tiles merge by byte concatenation
 PAGES_VALUES = ["en", "de", "fr", "es", "zh", "ru", "pt"]
+# packed tags of a feature whose lang is PAGES_VALUES[i]; the last entry (a
+# null lang or one not in PAGES_VALUES) emits no tag, the reference's
+# untagged feature, instead of borrowing the first value's tag
+_LANG_TAGS = ([mvt._packed_uint32(2, (0, i)) for i in range(len(PAGES_VALUES))]
+              + [b""])
 
-_PARTIAL_SCHEMA = ("pkey long, fblock binary, "
+_PARTIAL_SCHEMA = ("tkey long, salt long, fblock binary, "
                    "n_features long, inside1 boolean")
 _TILE_SCHEMA = "z int, x long, y long, tile_pbf binary, n_features long, interesting boolean"
 
@@ -298,20 +304,6 @@ def _encode_point_blocks(fid: np.ndarray, px: np.ndarray, py: np.ndarray,
     return buf, off
 
 
-def _salt_bits(z: int, n_salts: int) -> int:
-    """Low bits of the packed key pkey = x << (z + s) | y << s | salt that
-    hold the salt: log2(n_salts), capped by the 63 - 2z bits z leaves."""
-    bits = max(1, int(np.ceil(np.log2(max(n_salts, 2)))))
-    if 2 * z + bits > 63:
-        bits = 63 - 2 * z
-        if bits < 1:
-            raise ValueError(f"z={z} > 30 exceeds the packed-key layout")
-        if n_salts > (1 << bits):
-            raise ValueError(
-                f"z={z} leaves {bits} salt bits; use n_salts <= {1 << bits}")
-    return bits
-
-
 def _group_starts(*keys: np.ndarray) -> np.ndarray:
     n = len(keys[0])
     change = np.zeros(n, dtype=bool)
@@ -347,28 +339,18 @@ def _numpy_batches(batches: Iterator[pd.DataFrame], cols: list[str],
         yield carry, starts, np.append(starts[1:], len(carry[cols[0]]))
 
 
-def _with_tkey(batches: Iterator[pd.DataFrame],
-               salt_bits: int) -> Iterator[pd.DataFrame]:
-    """Add each batch's tile key: the packed pkey without its salt bits."""
-    for pdf in batches:
-        pdf["tkey"] = pdf["pkey"].to_numpy() >> salt_bits
-        yield pdf
-
-
-def _point_tile_writer(z: int, layer_name: str, props_cols: tuple,
-                       vocab: dict[str, list], extent: int,
-                       compression_level: int):
+def _point_tile_writer(z: int, extent: int, compression_level: int):
     """The tile half shared by build_point_tiles and merge_point_partials:
-    wrap each tile's concatenated feature blocks in the layer name, the
-    fixed key/value tables, extent and version, then gzip. The
-    one-feature interestingness flag (inside1) was taken at encode time
-    from the quantized coords: for a one-point layer the reference
-    classifier reduces to "some coordinate strictly inside (0, extent)"
-    (util_tile.cpp:44-105), so no tile is ever decoded."""
-    head = _len_delim(1, layer_name.encode("utf-8"))
-    tail = (b"".join(_len_delim(3, k.encode("utf-8")) for k in props_cols)
+    wrap each tile's concatenated feature blocks in the layer name
+    ("pages"), the fixed key/value tables (lang, PAGES_VALUES), extent and
+    version, then gzip. The one-feature interestingness flag (inside1) was
+    taken at encode time from the quantized coords: for a one-point layer
+    the reference classifier reduces to "some coordinate strictly inside
+    (0, extent)" (util_tile.cpp:44-105), so no tile is ever decoded."""
+    head = _len_delim(1, b"pages")
+    tail = (_len_delim(3, b"lang")
             + b"".join(_len_delim(4, mvt._encode_value(v))
-                       for c in props_cols for v in vocab[c])
+                       for v in PAGES_VALUES)
             + _varint_field(5, extent)
             + _varint_field(15, mvt.MVT_VERSION))
     fixed = len(head) + len(tail)
@@ -396,116 +378,43 @@ def _point_tile_writer(z: int, layer_name: str, props_cols: tuple,
 def build_point_tiles(df: DataFrame, z: int,
                       tile_size: int = DEFAULT_TILE_SIZE,
                       path_multiplier: int = DEFAULT_PATH_MULT,
-                      layer_name: str = "pages",
-                      n_salts: int = 16,
                       compression_level: int = 6,
-                      num_partitions: int | None = None,
-                      props_cols: tuple = ("lang",),
-                      vocab: dict[str, list] | None = None,
                       partials_only: bool = False) -> DataFrame:
-    """pages with (x, y, salt, mx_mm, my_mm, feature_id, <props_cols>) → one
-    row per tile (z, x, y, tile_pbf, n_features, interesting).
+    """pages with (x, y, salt, mx_mm, my_mm, feature_id, lang) → one row per
+    tile (z, x, y, tile_pbf, n_features, interesting). Each tile has one
+    layer, "pages", whose one property is lang; a null lang or one not in
+    PAGES_VALUES leaves its feature untagged.
 
-    One exchange on the tile key, one sort on pkey (x, y, salt) and one
-    mapInPandas that encodes every feature with _encode_point_blocks and
-    writes each tile from one slice of that buffer. The salt only orders
-    features inside a tile. A null feature_id, mx_mm, my_mm, x, y or salt,
-    or a point whose mx_mm/my_mm lies outside its (x, y) tile (tile-local
-    px/py outside [0, extent]), fails the job with the tile's z/x/y, on
-    the JVM side, before the exchange.
+    One exchange on the tile key tkey = x·2^z + y, with no explicit
+    partition count so AQE coalesces it to the data, one sort on (tkey,
+    salt) and one mapInPandas that encodes every feature with
+    _encode_point_blocks and writes each tile from one slice of that
+    buffer. The salt, any long, only orders features inside a tile. A
+    null feature_id, mx_mm, my_mm, x, y or salt, or a point whose
+    mx_mm/my_mm lies outside its (x, y) tile (tile-local px/py outside
+    [0, extent]), fails the job with the tile's z/x/y, on the JVM side,
+    before the exchange. z <= 30, the deepest zoom the reference serves
+    (mapnik_request_handler.cpp:133).
 
-    partials_only: stop at one PARTIAL row per (x, y, salt) — pkey, its
-    concatenated feature blocks, n_features, inside1 — hash-partitioned on
-    pkey; merge_point_partials turns any union of such rows into tiles.
-
-    props_cols: categorical string columns carried as MVT tags. vocab maps
-    each to its value list; when None it is computed with one distinct()
-    per column (map-side partial agg, tiny result — a plan-time decision
-    like AQE stats, valid because the fixed global key/value table is what
-    makes partial tiles mergeable by byte concatenation).
-
-    Zoom range: z <= 29 with 16 salts, z = 30 with 8 (the packed key spends
-    2z + log2(n_salts) bits of the 63 available — reference serves up to
-    z=30, mapnik_request_handler.cpp:133).
+    partials_only: stop at one PARTIAL row per (tkey, salt) — its
+    concatenated feature blocks, n_features, inside1 — after the same
+    exchange; merge_point_partials turns any union of such rows into tiles.
     """
+    if z > 30:
+        raise ValueError(f"z={z} > 30, the deepest zoom the point build "
+                         "serves")
     extent = tile_size * path_multiplier
-    nparts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    nparts = int(nparts)
-    salt_bits = _salt_bits(z, n_salts)
     if extent > 8191:
         raise ValueError("payload layout supports extent <= 8191 (13 bits)")
 
-    if vocab is None:
-        if tuple(props_cols) == ("lang",):
-            vocab = {"lang": PAGES_VALUES}  # pinned order: byte-stable tiles
-        else:
-            # cardinality-guarded (r07 verdict): never materialize an
-            # unbounded vocabulary on the driver — a single column past
-            # the combo-space cap can't produce a valid vocab anyway, so
-            # collect at most cap+1 values and raise the same "split
-            # props" error the combo check below would, BEFORE the
-            # driver holds the full distinct set
-            cap = 1 << 20
-            vocab = {}
-            for c in props_cols:
-                vals = [r[0] for r in
-                        df.select(c).distinct().limit(cap + 1).collect()]
-                if len(vals) > cap:
-                    raise ValueError(
-                        "categorical combo space too large to tabulate; "
-                        "split props into separate layers")
-                vocab[c] = sorted(v for v in vals if v is not None)
-    sizes = [len(vocab[c]) for c in props_cols]
-    # each column gets one extra SENTINEL digit (== size) for null /
-    # out-of-vocab values: the sentinel emits NO tag bytes for that column
-    # (the reference's untagged feature), instead of silently borrowing the
-    # first vocab value's tag
-    radixes = [s + 1 for s in sizes]
-    n_combos = int(np.prod(radixes)) if radixes else 1
-    if n_combos > (1 << 20):
-        raise ValueError("categorical combo space too large to tabulate; "
-                         "split props into separate layers")
-    if n_combos > (1 << (63 - 26)):
-        raise ValueError("combo id does not fit the payload layout")
-
-    # combo id: mixed-radix over props_cols (JVM map-literal lookups)
-    combo_expr = F.lit(0).cast("long")
-    stride = 1
-    for c, size, radix in zip(reversed(props_cols), reversed(sizes),
-                              reversed(radixes)):
-        m = F.create_map(*[x for i, v in enumerate(vocab[c])
-                           for x in (F.lit(v), F.lit(i))])
-        idx = F.coalesce(F.element_at(m, F.col(c)),
-                         F.lit(size)).cast("long")  # sentinel = size
-        combo_expr = combo_expr + idx * F.lit(stride)
-        stride *= radix
-
-    # tag bytes per combo: field 2 packed [k0, v0, k1, v1, ...] with value
-    # indices into the concatenated per-column value table; sentinel digits
-    # contribute no (k, v) pair
-    voffs = np.cumsum([0] + sizes[:-1]).tolist() if sizes else []
-    tag_table = []
-    for combo in range(n_combos):
-        rem, payload = combo, b""
-        digits = []
-        for radix in reversed(radixes):
-            digits.append(rem % radix)
-            rem //= radix
-        digits.reverse()
-        for k, d in enumerate(digits):
-            if d == sizes[k]:  # sentinel → untagged for this column
-                continue
-            payload += _varint(k) + _varint(voffs[k] + d)
-        tag_table.append(b"\x12" + _varint(len(payload)) + payload
-                         if payload else b"")
-
     # JVM-side preparation: quantize to tile-local ints with floor(v+0.5)
-    # (the reference encoder's rounding) and pack (x, y, salt) into ONE long
-    # key — the shuffle then moves 3 longs per row instead of 7 columns, and
-    # sortWithinPartitions radix-sorts a single long. The bit layout keeps
-    # lexicographic (x, y, salt) order:
-    #   pkey = x << (z + salt_bits) | y << salt_bits | salt
-    # Payload pv packs combo<<26 | px<<13 | py (px, py <= extent fit 13 bits).
+    # (the reference encoder's rounding) and pack each feature's payload
+    # into one long, pv = lang index << 26 | px << 13 | py (px, py <=
+    # extent fit 13 bits), so the shuffle moves 4 longs per row
+    lang = F.create_map(*[x for i, v in enumerate(PAGES_VALUES)
+                          for x in (F.lit(v), F.lit(i))])
+    lang_idx = F.coalesce(F.element_at(lang, F.col("lang")),
+                          F.lit(len(PAGES_VALUES))).cast("long")
     H = 0.5 * WORLD_SIZE_ENC
     scale = WORLD_SIZE_ENC / float(1 << z)
     mxm = F.col("mx_mm") / F.lit(1000.0)
@@ -521,8 +430,6 @@ def build_point_tiles(df: DataFrame, z: int,
     # [0, extent]; packed into pv, a negative or wider-than-13-bit value
     # corrupts both its geometry and its tag
     off_tile = ((px < 0) | (px > extent) | (py < 0) | (py > extent))
-    pkey = (F.col("x") * F.lit(1 << (z + salt_bits))
-            + F.col("y") * F.lit(1 << salt_bits) + F.col("salt"))
 
     def fail(msg):
         return F.raise_error(F.format_string(
@@ -531,24 +438,23 @@ def build_point_tiles(df: DataFrame, z: int,
     slim = df.select(
         F.when(null_key, fail("null feature_id, mx_mm, my_mm, x, y or salt"))
         .when(off_tile, fail("mx_mm, my_mm lie outside the tile"))
-        .otherwise(pkey).alias("pkey"),
+        .otherwise(F.col("x") * F.lit(1 << z) + F.col("y")).alias("tkey"),
+        F.col("salt").cast("long").alias("salt"),
         F.col("feature_id").alias("fid"),
-        (combo_expr * F.lit(1 << 26) + px * F.lit(1 << 13) + py).alias("pv"))
+        (lang_idx * F.lit(1 << 26) + px * F.lit(1 << 13) + py).alias("pv"))
 
-    write = _point_tile_writer(z, layer_name, props_cols, vocab, extent,
-                               compression_level)
-    group = "pkey" if partials_only else "tkey"
+    write = _point_tile_writer(z, extent, compression_level)
+    group = ["tkey", "salt"] if partials_only else ["tkey"]
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # sorted by pkey → tiles contiguous, each tile's rows in salt order
+        # sorted by (tkey, salt) → tiles contiguous, each in salt order
         for arrs, starts, ends in _numpy_batches(
-                _with_tkey(batches, salt_bits),
-                ["pkey", "tkey", "fid", "pv"], [group]):
+                batches, [*group, "fid", "pv"], group):
             pv = arrs["pv"]
             px = (pv >> 13) & 0x1FFF
             py = pv & 0x1FFF
             buf, off = _encode_point_blocks(arrs["fid"], px, py, pv >> 26,
-                                            tag_table)
+                                            _LANG_TAGS)
             mv = memoryview(buf)
             blocks = [mv[a:b] for a, b in zip(off[starts].tolist(),
                                               off[ends].tolist())]
@@ -556,17 +462,16 @@ def build_point_tiles(df: DataFrame, z: int,
             n = (ends - starts).astype(np.int64)
             if partials_only:
                 yield pd.DataFrame({
-                    "pkey": arrs["pkey"][starts],
+                    "tkey": arrs["tkey"][starts],
+                    "salt": arrs["salt"][starts],
                     "fblock": [bytes(b) for b in blocks],
                     "n_features": n, "inside1": inside[starts]})
             else:
                 yield write(arrs["tkey"][starts], blocks, n, inside[starts])
 
-    part = (F.col("pkey") if partials_only
-            else F.shiftright("pkey", salt_bits))
     return (slim
-            .repartition(nparts, part)
-            .sortWithinPartitions("pkey")
+            .repartition("tkey")
+            .sortWithinPartitions("tkey", "salt")
             .mapInPandas(encode, schema=(_PARTIAL_SCHEMA if partials_only
                                          else _TILE_SCHEMA)))
 
@@ -574,39 +479,25 @@ def build_point_tiles(df: DataFrame, z: int,
 def merge_point_partials(partial: DataFrame, z: int,
                          tile_size: int = DEFAULT_TILE_SIZE,
                          path_multiplier: int = DEFAULT_PATH_MULT,
-                         layer_name: str = "pages",
-                         n_salts: int = 16,
                          compression_level: int = 6,
-                         num_partitions: int | None = None,
-                         props_cols: tuple = ("lang",),
-                         vocab: dict[str, list] | None = None,
                          extra_sort_cols: tuple = ()) -> DataFrame:
-    """Merge PARTIAL rows (pkey, fblock, n_features, inside1) from
+    """Merge PARTIAL rows (tkey, salt, fblock, n_features, inside1) from
     build_point_tiles(partials_only=True) into final gzipped tiles by byte
     concatenation, through the same tile writer as the one-stage build.
     Partials merge from ANY partition of the feature set — salt slices, or
     MICRO-BATCHES across a streaming ingest (streaming/tiles.py uses
     batch_id as a time-salt) — because feature blocks index the fixed
-    global key/value tables. Rows with the same pkey from different sources
-    are ordered by extra_sort_cols (e.g. ("batch_id",)) for deterministic
-    tile bytes."""
-    extent = tile_size * path_multiplier
-    nparts = (num_partitions
-              or int(partial.sparkSession.conf.get("spark.sql.shuffle.partitions")))
-    salt_bits = _salt_bits(z, n_salts)
-    if vocab is None:
-        if tuple(props_cols) != ("lang",):
-            raise ValueError("merge_point_partials needs the vocab the "
-                             "partials were built with")
-        vocab = {"lang": PAGES_VALUES}
-    write = _point_tile_writer(z, layer_name, props_cols, vocab, extent,
+    global key/value tables. Rows with the same (tkey, salt) from
+    different sources are ordered by extra_sort_cols (e.g. ("batch_id",))
+    for deterministic tile bytes."""
+    write = _point_tile_writer(z, tile_size * path_multiplier,
                                compression_level)
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # sorted by pkey → tiles contiguous, partial blocks in salt order
+        # sorted by (tkey, salt) → tiles contiguous, blocks in salt order
         for arrs, starts, ends in _numpy_batches(
-                _with_tkey(batches, salt_bits),
-                ["tkey", "fblock", "n_features", "inside1"], ["tkey"]):
+                batches, ["tkey", "fblock", "n_features", "inside1"],
+                ["tkey"]):
             fbl = arrs["fblock"]
             # per-tile totals in one reduceat: anything per TILE in Python
             # must stay O(1) Python ops (about one tile per 1.5 features)
@@ -617,8 +508,8 @@ def merge_point_partials(partial: DataFrame, z: int,
                         totals, arrs["inside1"][starts].astype(bool))
 
     return (partial
-            .repartition(nparts, F.shiftright("pkey", salt_bits))
-            .sortWithinPartitions("pkey", *extra_sort_cols)
+            .repartition("tkey")
+            .sortWithinPartitions("tkey", "salt", *extra_sort_cols)
             .mapInPandas(merge, schema=_TILE_SCHEMA))
 
 

@@ -10,9 +10,9 @@ Pipeline position: pages(url, warc_ts, html, text, lang)
     container, so the hierarchical cell index is the z-interleaved quadkey,
     which has the same containment-by-prefix property used for joins)
   → salt column: a data-independent sub-key under the tile key. The point
-    build sorts on (x, y, salt), so the salt fixes the feature order inside
-    a tile, and partial builds (streaming ingest) shuffle on it to spread
-    a hot tile.
+    build sorts on (tile key, salt), so the salt fixes the feature order
+    inside a tile, and partial builds (streaming ingest) keep one row per
+    (tile key, salt).
 
 Scale notes (100 TB / 10^12 docs):
   * `html` (the huge column) is never referenced here — Catalyst prunes it
@@ -76,8 +76,10 @@ def quadkey_col(z: Column, x: Column, y: Column) -> Column:
 
 
 def with_salt(df: DataFrame, n_salts: int = 16, key_col: str = "url") -> DataFrame:
-    """Deterministic salt: orders features inside a point tile and spreads
-    hot tiles in the partial point build."""
+    """Deterministic salt in [0, n_salts): orders features inside a point
+    tile (the point build sorts each tile on it, so any long is valid) and
+    keys the partial rows of build_point_tiles(partials_only=True). The
+    only place the salt's range is chosen."""
     return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salts)))
 
 

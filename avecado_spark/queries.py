@@ -782,8 +782,8 @@ def _mvt_build_oracle(z: int = 14, extent: int = 4096) -> str:
 
 @register("mvt_build_z16", f"SELECT * FROM {_mvt_build_oracle(16)} t")
 def mvt_build_z16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deep-zoom leg of the distributed build (packed key spends 2z+4 bits,
-    good to z=29/16 salts, z=30/8 — reference serves z up to 30,
+    """Deep-zoom leg of the distributed build (the tile key x·2^z + y holds
+    any z the point build takes, up to z=30 — reference serves z up to 30,
     mapnik_request_handler.cpp:133). Same oracle shape as z14."""
     from .api import build_tiles
     tiles = build_tiles(pages_df(spark, sf_dir), z=16)

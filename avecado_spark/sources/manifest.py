@@ -85,25 +85,34 @@ def run_resumable_build(spark: SparkSession, tiles: DataFrame, z: int,
     new work is written to parquet partitioned by part_key and recorded
     in the manifest afterwards (write-then-record: a crash between the two
     re-does at most one batch — idempotent because the data write is
-    partition-overwrite)."""
+    partition-overwrite). The tile build runs once, in the write: the
+    manifest rows and n_tiles come from one JVM-only scan of the part_key
+    directories this lineage has not recorded (at most 4096), so the
+    tiles table is assumed to hold this lineage's tiles only."""
     keyed = with_part_key(tiles, z)
     manifest = read_manifest(spark, out_path, lineage)
-    done_keys = {r.part_key for r in manifest.select("part_key").distinct().collect()}
+    done_keys = [r.part_key for r in
+                 manifest.select("part_key").distinct().collect()]
     pend = pending_tiles(keyed, manifest)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     data_path = os.path.join(out_path, "tiles")
     pend.write.mode("overwrite").partitionBy("part_key").parquet(data_path)
 
-    completed = (pend.groupBy("part_key")
-                 .agg(F.count("*").alias("n_tiles"),
-                      F.sum("n_features").alias("n_features"),
-                      F.sum(F.length("tile_pbf")).alias("bytes")))
-    n_new = completed.count()
+    written = spark.read.schema(keyed.schema).parquet(data_path)
+    if done_keys:
+        written = written.where(~F.col("part_key").isin(done_keys))
+    rows = (written.groupBy("part_key")
+            .agg(F.count("*").alias("n_tiles"),
+                 F.sum("n_features").alias("n_features"),
+                 F.sum(F.length("tile_pbf")).alias("bytes"))
+            .collect())
+    completed = spark.createDataFrame(
+        rows, "part_key long, n_tiles long, n_features long, bytes long")
     write_manifest_rows(spark, out_path, lineage, completed)
-    return {"written_partitions": n_new,
+    return {"written_partitions": len(rows),
             "skipped_partitions": len(done_keys),
-            "n_tiles": pend.count()}
+            "n_tiles": sum(r.n_tiles for r in rows)}
 
 
 def read_tiles(spark: SparkSession, out_path: str,

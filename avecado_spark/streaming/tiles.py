@@ -3,7 +3,7 @@ directory; tiles build INCREMENTALLY without re-reading history.
 
 The point build (operators/encode.py) makes whole tiles in one stage; its
 partial form, build_point_tiles(partials_only=True), stops at one row per
-(x, y, salt) holding the quantized protobuf feature blocks, and
+(tkey, salt) holding the quantized protobuf feature blocks, and
 merge_point_partials turns any union of such rows into tiles through the
 same tile writer. A micro-batch is just another salt slice: each batch
 appends PARTIAL rows tagged with batch_id, and finalization merges them
@@ -21,10 +21,11 @@ like salt slices within one job.
       duplicating it.
   finalize_tiles          — merge over the partial table →
       (z, x, y, tile_pbf, n_features, interesting). Rows with the same
-      pkey across batches are ordered by batch_id for deterministic bytes.
+      (tkey, salt) across batches are ordered by batch_id for deterministic
+      bytes.
 
 Scale shape: per batch the work is map-side geometry + one shuffle on
-pkey; history is never rescanned. Finalize shuffles only the
+the tile key; history is never rescanned. Finalize shuffles only the
 already-encoded blocks (≈100 bytes/feature). A serving deployment
 finalizes per region (part_key pruning) or on a schedule.
 """
@@ -61,7 +62,7 @@ def streaming_tile_counts(spark: SparkSession, pages_path: str,
 
 
 def incremental_tile_build(spark: SparkSession, pages_path: str, z: int,
-                           out_path: str, n_salts: int = 16,
+                           out_path: str,
                            max_files_per_trigger: int | None = 1) -> int:
     """Run the partial-row ingest over all currently-available crawl slices
     (Trigger.AvailableNow) and append batch-tagged partials to
@@ -75,8 +76,7 @@ def incremental_tile_build(spark: SparkSession, pages_path: str, z: int,
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..api import build_tiles
-        partial = build_tiles(batch_df, z=z, n_salts=n_salts,
-                              partials_only=True)
+        partial = build_tiles(batch_df, z=z, partials_only=True)
         # dynamic overwrite is scoped to THIS writer (only the replayed
         # batch_id partition is replaced) — never set on the shared
         # session, where it would silently change later static
@@ -98,11 +98,10 @@ def incremental_tile_build(spark: SparkSession, pages_path: str, z: int,
 
 
 def finalize_tiles(spark: SparkSession, out_path: str, z: int,
-                   n_salts: int = 16,
                    compression_level: int = 6) -> DataFrame:
-    """Merge every partial batch → final tiles. batch_id
-    orders same-pkey rows so tile bytes are deterministic across runs."""
+    """Merge every partial batch → final tiles. batch_id orders rows of the
+    same (tkey, salt) so tile bytes are deterministic across runs."""
     partial = spark.read.parquet(os.path.join(out_path, "partials"))
-    return merge_point_partials(partial, z, n_salts=n_salts,
+    return merge_point_partials(partial, z,
                                 compression_level=compression_level,
                                 extra_sort_cols=("batch_id",))

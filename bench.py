@@ -5,8 +5,8 @@
 Headline queries over $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] (default 16 — see CPUS note).
 
-  tile_build_z14 — full pipeline: pages synth → geocode (Arrow UDF) →
-                   integer tile keys → two-phase salted MVT encode → bytes.
+  tile_build_z14 — full pipeline: pages synth → geocode (JVM) → integer
+                   tile keys → one-stage MVT encode → bytes.
   tile_assign    — declarative key-assign + count (pure JVM path).
   pip_first      — broadcast point-in-polygon join, first-match mode.
   dedup/sim/text/events — training-data suite representatives.
@@ -268,40 +268,6 @@ def _run_sessionize_stream(spark, sf_dir):
     return len(rows)
 
 
-def _profile_stages(cpus: int):
-    """Wall time of the tile build split at one cut point:
-    pre_shuffle_sec = scan+synth+geocode+key packing up to the build's one
-    exchange (slim_probe.count); full_build_sec = the whole one-stage point
-    build (tile-key exchange + one mapInPandas encode + gzip, tiles.count).
-    Run pinned for honest core accounting."""
-    from pyspark.sql import functions as F
-    from avecado_spark.operators.keys import geocode, with_tile_keys, with_salt
-    spark = _session(cpus)
-    _run_tile_assign(spark, SF_DIR)  # warm-up
-    pages = spark.read.parquet(_pages_table(spark, SF_DIR))
-    p = geocode(pages)
-    p = with_tile_keys(p, 14).withColumn(
-        "feature_id", F.col("url").substr(32, 20).cast("long"))
-    p = with_salt(p, 16)
-
-    from avecado_spark.operators import encode as E
-    t0 = time.time()
-    # T1: everything before the first exchange
-    slim_probe = p.select(
-        (F.col("x") * F.lit(1 << 18) + F.col("y") * F.lit(1 << 4)
-         + F.col("salt")).alias("pkey"),
-        F.col("feature_id"), F.col("mx_mm"), F.col("my_mm"), F.col("lang"))
-    n_rows = slim_probe.count()
-    t1 = time.time()
-    tiles = E.build_point_tiles(p, 14)
-    n_tiles = tiles.count()
-    t3 = time.time()
-    spark.stop()
-    print(json.dumps({"cpus": cpus, "rows": n_rows, "tiles": n_tiles,
-                      "pre_shuffle_sec": round(t1 - t0, 2),
-                      "full_build_sec": round(t3 - t1, 2)}))
-
-
 def _control_inline(spark):
     """Same-session pure-JVM control (md5 + hash-agg over spark.range, no
     python workers, no parquet), timed INSIDE the bench run so each
@@ -338,8 +304,6 @@ def _jvm_control(cpus: int):
 def main():
     if "--jvm-control" in sys.argv:
         return _jvm_control(int(sys.argv[sys.argv.index("--jvm-control") + 1]))
-    if "--profile-stages" in sys.argv:
-        return _profile_stages(int(sys.argv[sys.argv.index("--profile-stages") + 1]))
     if "--measure-one" in sys.argv:
         cpus = int(sys.argv[sys.argv.index("--measure-one") + 1])
         dt, n_tiles, n_docs = _measure(cpus)

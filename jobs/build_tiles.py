@@ -3,7 +3,7 @@
 
     spark-submit --py-files avecado_spark.zip jobs/build_tiles.py \
         --input /root/testdata/sf0.1 --zoom 14 --out /tmp/tiles \
-        --lineage job-2026-08-16 [--pbf-tree] [--salts 16]
+        --lineage job-2026-08-16 [--pbf-tree]
 
 Resumable: re-running with the same --out/--lineage anti-joins completed
 partitions from the checkpoint manifest (per-partition lineage + metrics,
@@ -24,7 +24,6 @@ def main():
     ap.add_argument("--zoom", type=int, default=14)
     ap.add_argument("--out", required=True)
     ap.add_argument("--lineage", default=None)
-    ap.add_argument("--salts", type=int, default=16)
     ap.add_argument("--multiplier", type=int, default=1)
     ap.add_argument("--pbf-tree", action="store_true",
                     help="also export the literal z/x/y.pbf directory tree")
@@ -38,7 +37,7 @@ def main():
     spark = spark_session(app="build_tiles")
     lineage = args.lineage or f"{args.input}@z{args.zoom}x{args.multiplier}"
     tiles = build_tiles(pages_df(spark, args.input, args.multiplier),
-                        z=args.zoom, n_salts=args.salts)
+                        z=args.zoom)
     metrics = run_resumable_build(spark, tiles, args.zoom, args.out, lineage)
     if args.pbf_tree:
         write_pbf_tree(spark.read.parquet(os.path.join(args.out, "tiles")),

@@ -269,37 +269,31 @@ def test_tile_md5_golden(spark):
 
 
 def test_tile_bytes_golden_z16_and_multiprop(spark):
-    """Deep-zoom (z>14) and multi-property builds produce decodable,
-    deterministic tiles: two runs byte-identical; decoded tag pairs map
-    into the concatenated global value table."""
+    """Deep-zoom (z>14) builds produce decodable, deterministic tiles: two
+    runs byte-identical; each feature's one tag pair is lang, the pages
+    layer's one property, pointing into the fixed value table."""
     from pyspark.sql import functions as F
     from avecado_spark.functions import mvt
     from avecado_spark.operators.keys import geocode, with_tile_keys, with_salt
-    from avecado_spark.operators.encode import build_point_tiles
+    from avecado_spark.operators.encode import PAGES_VALUES, build_point_tiles
     from avecado_spark.sources.pages import pages_df
 
     def build():
         p = geocode(pages_df(spark, "/root/testdata/sf0.001"))
         p = with_tile_keys(p, 16).withColumn(
             "feature_id", F.col("url").substr(32, 20).cast("long"))
-        p = p.withColumn("tier",
-                         F.when(F.col("mx_mm") > 0, "east").otherwise("west"))
-        p = with_salt(p, 16)
-        t = build_point_tiles(p, 16, props_cols=("lang", "tier"))
+        t = build_point_tiles(with_salt(p, 16), 16)
         return {(r.x, r.y): bytes(r.tile_pbf) for r in t.collect()}
 
     a, b = build(), build()
-    assert a == b, "deep-zoom multi-prop build must be deterministic"
+    assert a == b, "deep-zoom build must be deterministic"
     big = next(v for v in a.values() if len(v) > 200)
     layer = mvt.decode_tile(big).layers[0]
-    assert layer.keys == ["lang", "tier"]
-    assert layer.values[-2:] == ["east", "west"]
+    assert layer.keys == ["lang"]
+    assert layer.values == PAGES_VALUES
     for f in layer.features:
-        ks = f.tags[0::2]
-        vs = f.tags[1::2]
-        assert ks == [0, 1]
-        assert layer.values[vs[0]] in ("en", "de", "fr", "es", "zh", "ru", "pt")
-        assert layer.values[vs[1]] in ("east", "west")
+        assert len(f.tags) == 2 and f.tags[0] == 0
+        assert layer.values[f.tags[1]] in PAGES_VALUES
 
 
 def test_out_of_vocab_lang_is_untagged(spark):
@@ -319,7 +313,7 @@ def test_out_of_vocab_lang_is_untagged(spark):
     df = spark.createDataFrame(
         rows, "x long, y long, salt int, mx_mm long, my_mm long, "
               "feature_id long, lang string")
-    tiles = build_point_tiles(df, z, n_salts=4).collect()
+    tiles = build_point_tiles(df, z).collect()
     assert len(tiles) == 1
     tile = M.decode_tile(bytes(tiles[0].tile_pbf))
     layer = tile.layers[0]
@@ -331,6 +325,25 @@ def test_out_of_vocab_lang_is_untagged(spark):
     # out-of-vocab and null: NO tags at all
     assert tags_by_id[2] == []
     assert tags_by_id[3] == []
+
+
+def test_salt_value_never_moves_a_point(spark):
+    """The salt only orders features inside a tile: points keyed to 4/8/8
+    with salts 0, 17 and -1 all land in 4/8/8, whatever the salt's width
+    (a salt packed into the tile key's low bits would carry into y)."""
+    from avecado_spark.functions import mvt as M
+    from avecado_spark.operators.encode import build_point_tiles
+
+    df = spark.createDataFrame(
+        [(8, 8, salt, 100_000_000 * (i + 1), -500_000_000, i + 1, "de")
+         for i, salt in enumerate((0, 17, -1))],
+        "x long, y long, salt long, mx_mm long, my_mm long, "
+        "feature_id long, lang string")
+    tiles = build_point_tiles(df, 4).collect()
+    assert [(t.z, t.x, t.y) for t in tiles] == [(4, 8, 8)]
+    layer = M.decode_tile(bytes(tiles[0].tile_pbf)).layers[0]
+    assert sorted(f.id for f in layer.features) == [1, 2, 3]
+    assert tiles[0].n_features == 3
 
 
 # tag lists per combo: untagged (the sentinel combo), one pair, a two-byte
@@ -392,7 +405,7 @@ def test_null_key_input_fails_naming_the_tile(spark, col):
         "feature_id long, lang string")
     tile = f"4/{bad['x'] or 'null'}/{bad['y'] or 'null'}"
     with pytest.raises(Exception, match=f"point tile {tile}: null"):
-        build_point_tiles(df, 4, n_salts=4).collect()
+        build_point_tiles(df, 4).collect()
 
 
 @pytest.mark.parametrize("mx_mm,my_mm", [
@@ -411,4 +424,4 @@ def test_point_outside_its_tile_fails_naming_the_tile(spark, mx_mm, my_mm):
         "feature_id long, lang string")
     with pytest.raises(Exception, match="point tile 4/8/8: mx_mm, my_mm lie "
                                         "outside the tile"):
-        build_point_tiles(df, 4, n_salts=4).collect()
+        build_point_tiles(df, 4).collect()

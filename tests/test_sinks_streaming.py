@@ -62,6 +62,36 @@ def test_manifest_resume(spark, tiles):
         assert row.n_tiles > 0 and row.bytes > 0
 
 
+def test_resumable_build_runs_the_build_once(spark, tmp_path):
+    """run_resumable_build evaluates the tile build once, in the write: an
+    accumulator behind the build counts each tile once, and the manifest
+    rows read back from the written files equal the per-part_key totals
+    of the tiles."""
+    from avecado_spark.api import build_tiles
+    from avecado_spark.sources.manifest import (read_manifest,
+                                                run_resumable_build,
+                                                with_part_key)
+    from avecado_spark.sources.pages import pages_df
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            seen.add(len(b))
+            yield b
+
+    tiles = build_tiles(pages_df(spark, SF), z=2)
+    counted = tiles.mapInPandas(count, schema=tiles.schema)
+    m = run_resumable_build(spark, counted, 2, str(tmp_path), lineage="t")
+    assert m["n_tiles"] > 0 and seen.value == m["n_tiles"]
+    want = {(r.part_key, r.n, r.nf, r.b) for r in
+            with_part_key(tiles, 2).groupBy("part_key").agg(
+                F.count("*").alias("n"), F.sum("n_features").alias("nf"),
+                F.sum(F.length("tile_pbf")).alias("b")).collect()}
+    got = {(r.part_key, r.n_tiles, r.n_features, r.bytes)
+           for r in read_manifest(spark, str(tmp_path), "t").collect()}
+    assert got == want and len(got) == m["written_partitions"]
+
+
 def test_streaming_batch_parity(spark):
     """Streaming windowed agg over availableNow == batch twin."""
     import shutil
@@ -160,8 +190,9 @@ def test_build_feature_tiles_lines_and_polygons(spark):
 def test_build_tiles_job_script(spark, tmp_path):
     """jobs/build_tiles.py end-to-end via its main() (spark-submit surface)."""
     import subprocess, sys, json
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/build_tiles.py",
+        [sys.executable, os.path.join(repo, "jobs", "build_tiles.py"),
          "--input", SF, "--zoom", "6", "--out", str(tmp_path),
          "--lineage", "t", "--pbf-tree"],
         capture_output=True, text=True, timeout=600)
@@ -350,9 +381,10 @@ def test_fetch_tiles_overzoom(spark):
 
 
 def test_deep_zoom_packed_key_layout(spark):
-    """z=29 (and z=30 with 8 salts) packed keys reconstruct exact tile
-    coordinates: the build's (x, y, n_features) equals the declarative
-    integer tile assignment at the same zoom."""
+    """At z=29 and z=30 with 16 salts the tile key x·2^z + y reconstructs
+    exact tile coordinates: the build's (x, y, n_features) equals the
+    declarative integer tile assignment at the same zoom. z=31 is past the
+    deepest zoom the reference serves and raises."""
     from pyspark.sql import functions as F
     from avecado_spark.functions.mercator import tile_x_expr, tile_y_expr
     from avecado_spark.operators.encode import build_point_tiles
@@ -362,23 +394,21 @@ def test_deep_zoom_packed_key_layout(spark):
 
     pages = pages_df(spark, "/root/testdata/sf0.001").limit(2000)
     g = geocode(pages)
-    for z, n_salts in ((29, 16), (30, 8)):
+    for z in (29, 30):
         p = with_tile_keys(g, z).withColumn(
             "feature_id", F.col("url").substr(32, 20).cast("long"))
-        p = with_salt(p, n_salts)
+        p = with_salt(p, 16)
         built = {(r.x, r.y): r.n_features
-                 for r in build_point_tiles(p, z, n_salts=n_salts).collect()}
+                 for r in build_point_tiles(p, z).collect()}
         expect = {(r.x, r.y): r.n for r in
                   g.select(tile_x_expr("mx_mm", z).alias("x"),
                            tile_y_expr("my_mm", z).alias("y"))
                    .groupBy("x", "y").agg(F.count("*").alias("n")).collect()}
         assert built == expect, f"z={z} layout broken"
-    # z=30 with 16 salts does not fit 63 bits → explicit error
-    p = with_tile_keys(g, 30).withColumn(
+    p = with_tile_keys(g, 31).withColumn(
         "feature_id", F.col("url").substr(32, 20).cast("long"))
-    p = with_salt(p, 16)
-    with _pytest.raises(ValueError):
-        build_point_tiles(p, 30, n_salts=16)
+    with _pytest.raises(ValueError, match="z=31"):
+        build_point_tiles(with_salt(p, 16), 31)
 
 
 def test_fetch_from_tilejson(spark):
