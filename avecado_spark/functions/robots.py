@@ -66,10 +66,9 @@ def parse_robots(text: str) -> dict[str, list[tuple[bool, str]]]:
 def robots_sitemaps(text: str) -> list[str]:
     """The `Sitemap:` directives of one robots.txt — absolute sitemap
     urls, file order preserved, duplicates dropped. Per the sitemaps.org
-    protocol this is how a host ADVERTISES its sitemaps; feed the fetch
-    results to functions/sitemap.sitemap_urls and the urls to
-    crawl_round's seeds. Sitemap lines are group-independent (they apply
-    to every crawler, wherever they appear in the file)."""
+    protocol this is how a host ADVERTISES its sitemaps (the engine
+    parses no sitemap documents). Sitemap lines are group-independent
+    (they apply to every crawler, wherever they appear in the file)."""
     out: list[str] = []
     for raw in text.splitlines():
         line = raw.split("#", 1)[0].strip()

@@ -123,8 +123,7 @@ def _minhash_sigs_expr(sh) -> "F.Column":
 
 def minhash_bands_from_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, text, …) → (doc_id, band, band_key): the whole signature +
-    banding pipeline as row-local expressions — works identically on a
-    static frame, a foreachBatch micro-batch, or a streaming frame."""
+    banding pipeline as row-local expressions."""
     sh = _shingle_arr(_tok_arr())
     sig = (docs.where(F.size(_tok_arr()) >= SHINGLE)
                .select("doc_id", _minhash_sigs_expr(sh).alias("sigs")))

@@ -358,7 +358,7 @@ def render_tile_styled(tile_bytes: bytes | None, style: dict,
     OVERZOOM (reference render_vector_tile.cpp:43-47: the tile_datasource
     carries the DATA tile's z/x/y while the Map renders the REQUEST's
     coords): pass request_zxy=(z,x,y) and data_zxy for the ancestor tile
-    that served it (fetch_tiles_overzoom's eff_z/eff_x/eff_y). When
+    that served it (fetch_tiles_overzoom's served_z/x/y). When
     request z > data z the renderer scales the ancestor's geometry up
     2^dz and shifts to the requested quadrant — the request viewport is
     the extent/2^dz sub-square of the data tile at offset

@@ -236,8 +236,8 @@ def apply_to_tiles(df, config: dict, tile_px: int = 256):
                     lambda e: F.concat(e["key"], F.lit("\x01"), e["value"])),
         "\x02")
     # a key/value containing a reserved byte would silently corrupt the
-    # rebuilt map — fail loudly instead (same stance as the mapnik_xml
-    # WKT guard); JVM-side, so the check costs one exists() per row
+    # rebuilt map — fail loudly instead; JVM-side, so the check costs one
+    # exists() per row
     has_reserved = F.exists(
         entries,
         lambda e: e["key"].contains("\x01") | e["key"].contains("\x02")

@@ -242,9 +242,10 @@ def fetch_tiles_overzoom(coords: DataFrame, url_pattern: str,
     """Overzoom fetch (reference fetch/overzoom.cpp:14-47): requests above
     max_zoom are zoomed OUT to max_zoom (x, y right-shifted); a 404 at an
     effective z above mask_zoom retries once at mask_zoom. Output carries
-    the requested (z, x, y) plus the effective (eff_z, eff_x, eff_y) that
-    served it — the distributed twin of the serving-side ancestor
-    fallback (pyramid.overzoom_join is the table-side analog)."""
+    the requested (z, x, y), the status and bytes, and the tile
+    (served_z, served_x, served_y) that answered it. The engine's one
+    overzoom: tests/test_pyramid_raster.py runs the reference truth
+    tables (test/overzoom.cpp:38-101) through it."""
     eff = coords.select(
         "z", "x", "y",
         F.least(F.col("z"), F.lit(max_zoom)).alias("eff_z"),

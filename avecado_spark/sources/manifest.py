@@ -9,9 +9,10 @@ manifest of completed work partitions:
   done(part_key long, n_tiles long, n_features long, bytes long,
        lineage string, finished_ts long)
 
-  * part_key is a coarse spatial partition of the tile space (the top-K
-    bits of the z14 key — 4096 buckets by default) so one manifest row
-    covers many tiles and resume granularity stays bounded.
+  * part_key is a coarse spatial partition of the tile space (the top
+    PART_BITS bits of x and y — 4096 buckets from z12 on, fewer below) so
+    one manifest row covers many tiles and resume granularity stays
+    bounded.
   * lineage records the input fingerprint (source path + query id) so a
     stale manifest never silently resumes a different job.
   * resume = anti-join pending partitions against the manifest — a
@@ -36,9 +37,16 @@ MANIFEST_SCHEMA = ("part_key long, n_tiles long, n_features long, "
                    "bytes long, lineage string, finished_ts long")
 
 
+def _part_shift(z: int) -> int:
+    """Right shift from zoom-z tile coords to part_key buckets: the top
+    PART_BITS bits of x and y, or the top z // 2 bits below z12, so a
+    low-zoom part_key still groups 4^(z - z // 2) tiles instead of one."""
+    return z - min(PART_BITS, z // 2)
+
+
 def part_key_col(z: int, x, y):
-    """Coarse partition key: top PART_BITS of x and y at zoom z."""
-    shift = max(z - PART_BITS, 0)
+    """Coarse partition key of tile (x, y) at zoom z (see _part_shift)."""
+    shift = _part_shift(z)
     return (F.shiftright(x, shift) * F.lit(1 << PART_BITS)
             + F.shiftright(y, shift))
 
@@ -130,7 +138,7 @@ def read_tiles(spark: SparkSession, out_path: str,
 def part_keys_for_tile_range(z: int, x0: int, x1: int, y0: int, y1: int) -> list[int]:
     """All part_keys covering the inclusive tile-coordinate rectangle —
     the serving-side mapping from a viewport to partitions."""
-    shift = max(z - PART_BITS, 0)
+    shift = _part_shift(z)
     keys = set()
     for bx in range(x0 >> shift, (x1 >> shift) + 1):
         for by in range(y0 >> shift, (y1 >> shift) + 1):

@@ -54,21 +54,19 @@ def run_crawl_round(spark, table: str, warc_dir: str, fetcher,
                     top_k: int = 1000, round_ts: int = 0,
                     parts: int = 4, robots=None,
                     user_agent: str = "avecado",
-                    max_per_host: int | None = None,
-                    seeds=None) -> dict:
+                    max_per_host: int | None = None) -> dict:
     """One frontier→fetch→WARC→snapshot round. Returns metrics including
     the frontier size before and after (after < before whenever any
     fetch succeeded and the new pages add no unseen targets). Pass
     `robots` — a (host, robots_txt) DataFrame — to apply the RFC 9309
     politeness gate before the top-k cut (disallowed urls are never
     fetched and never counted against top_k). `max_per_host` caps the
-    round's fetches per host (crawl politeness AND skew control: one
-    mega-host cannot monopolize the fetch budget or a fetch partition) —
+    round's fetches per host (webgraph.cap_frontier_per_host) —
     demand-ranked within each host, then the global top-k cut."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    from avecado_spark.operators.webgraph import (filter_frontier_robots,
+    from avecado_spark.operators.webgraph import (cap_frontier_per_host,
+                                                  filter_frontier_robots,
                                                   frontier_df)
     from avecado_spark.sources import snapshots
     from avecado_spark.sources.warc import warc_bytes
@@ -76,29 +74,12 @@ def run_crawl_round(spark, table: str, warc_dir: str, fetcher,
 
     pages = snapshots.read(spark, table).select("url", "html")
     frontier = frontier_df(pages)
-    if seeds is not None:
-        # sitemap (or operator-provided) seed urls: anything not already
-        # in the corpus or on the link-derived frontier joins the
-        # want-list at base demand — the discovery path for urls nothing
-        # links to yet
-        fresh = (seeds.select("url").distinct()
-                      .join(pages.select("url"), "url", "left_anti")
-                      .join(frontier.select("url"), "url", "left_anti")
-                      .select("url", F.lit(1).cast("long").alias("want_cnt"),
-                              F.lit(0).cast("long").alias("n_srcs")))
-        frontier = frontier.unionByName(fresh)
     n_frontier = frontier.count()
     if robots is not None:
         frontier = filter_frontier_robots(frontier, robots,
                                           user_agent=user_agent)
     if max_per_host is not None:
-        from avecado_spark.functions.url import host_of
-        host_udf = F.udf(host_of, "string")
-        w = Window.partitionBy(host_udf("url")) \
-                  .orderBy(F.col("want_cnt").desc(), "url")
-        frontier = (frontier.withColumn("_rk", F.row_number().over(w))
-                            .where(F.col("_rk") <= max_per_host)
-                            .drop("_rk"))
+        frontier = cap_frontier_per_host(frontier, max_per_host)
     want = (frontier.orderBy(F.col("want_cnt").desc(), "url")
                     .limit(top_k).select("url"))
 

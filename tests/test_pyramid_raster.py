@@ -1,67 +1,65 @@
-"""Overzoom truth table (ported from /root/reference/test/overzoom.cpp:38-101)
-and raster pixel tests (spirit of test/render_vector_tile.cpp:23-110)."""
+"""The reference overzoom truth tables (test/overzoom.cpp:38-101) run
+through sources/fetch.fetch_tiles_overzoom, and raster pixel tests (spirit
+of test/render_vector_tile.cpp:23-110)."""
 
 import numpy as np
+import pytest
 
 from avecado_spark.functions import mvt
-from avecado_spark.operators.pyramid import (NOT_FOUND, OK, SERVER_ERROR,
-                                             Overzoom)
 from avecado_spark.operators.raster import (png_decode, png_encode,
                                             render_tile, render_tile_png)
 
-
-def _src(min_z, max_z, status):
-    def fetch(z, x, y):
-        if min_z <= z <= max_z:
-            return OK, (z, x, y)
-        return status, None
-    return fetch
-
-
-def _hit(o, z):
-    status, _ = o.fetch(z, 0, 0)
-    return status == OK
-
-
-def test_overzoom_fetch_missing():
-    o = Overzoom(_src(11, 16, NOT_FOUND), max_zoom=18, mask_zoom=12)
-    for z, expect in [(19, True), (18, True), (17, True), (16, True),
-                      (15, True), (14, True), (13, True), (12, True),
-                      (11, True), (10, False)]:
-        assert _hit(o, z) is expect, z
+# name -> (tiles exist at lo..hi, status elsewhere, max_zoom, mask_zoom,
+#          {requested z: served?}); requests are tile (z, 0, 0)
+OVERZOOM_TABLES = {
+    "missing": (11, 16, 404, 18, 12,
+                {19: True, 18: True, 17: True, 16: True, 15: True,
+                 14: True, 13: True, 12: True, 11: True, 10: False}),
+    # only a not-found retries at the mask zoom, a server error does not
+    "error_not_masked": (11, 16, 500, 18, 12,
+                         {19: False, 18: False, 17: False, 16: True,
+                          15: True, 14: True, 13: True, 12: True,
+                          11: True, 10: False}),
+    "no_mask": (11, 16, 404, 18, None,
+                {19: False, 18: False, 17: False, 16: True}),
+    "no_mask2": (11, 18, 404, 18, None,
+                 {19: True, 18: True, 17: True, 16: True}),
+}
 
 
-def test_overzoom_fetch_error_not_masked():
-    o = Overzoom(_src(11, 16, SERVER_ERROR), max_zoom=18, mask_zoom=12)
-    for z, expect in [(19, False), (18, False), (17, False), (16, True),
-                      (15, True), (14, True), (13, True), (12, True),
-                      (11, True), (10, False)]:
-        assert _hit(o, z) is expect, z
+def _zoom_opener(lo, hi, miss):
+    def opener(url, headers):
+        z, x, y = url.rsplit(".", 1)[0].rsplit("/", 3)[1:]
+        if lo <= int(z) <= hi:
+            return 200, f"{z}/{x}/{y}".encode(), {}
+        return miss, b"", {}
+    return opener
 
 
-def test_overzoom_no_mask():
-    o = Overzoom(_src(11, 16, NOT_FOUND), max_zoom=18, mask_zoom=None)
-    for z, expect in [(19, False), (18, False), (17, False), (16, True)]:
-        assert _hit(o, z) is expect, z
-
-
-def test_overzoom_no_mask2():
-    o = Overzoom(_src(11, 18, NOT_FOUND), max_zoom=18, mask_zoom=None)
-    for z, expect in [(19, True), (18, True), (17, True), (16, True)]:
-        assert _hit(o, z) is expect, z
-
-
-def test_overzoom_ancestor_coords():
-    calls = []
-
-    def src(z, x, y):
-        calls.append((z, x, y))
-        return NOT_FOUND, None
-
-    o = Overzoom(src, max_zoom=14, mask_zoom=12)
-    o.fetch(16, 1000, 2000)
-    # z16 remaps to z14 (>>2), then mask retry at z12 (>>2 again)
-    assert calls == [(14, 250, 500), (12, 62, 125)]
+@pytest.mark.parametrize("case", [*OVERZOOM_TABLES, "ancestor_coords"])
+def test_fetch_tiles_overzoom(spark, case):
+    from avecado_spark.sources.fetch import fetch_tiles_overzoom
+    url = "https://t.example/{z}/{x}/{y}.pbf"
+    if case == "ancestor_coords":
+        # z16 remaps to its z14 ancestor (>>2); when that is missing, the
+        # mask retry fetches the z12 ancestor (>>2 again)
+        coords = spark.createDataFrame([(16, 1000, 2000)],
+                                       "z int, x long, y long")
+        for hi, served in [(14, (14, 250, 500)), (12, (12, 62, 125))]:
+            (r,) = fetch_tiles_overzoom(
+                coords, url, 14, mask_zoom=12,
+                opener=_zoom_opener(0, hi, 404)).collect()
+            assert (r.status, r.served_z, r.served_x, r.served_y) == \
+                (200, *served)
+            assert bytes(r.tile_pbf) == "/".join(map(str, served)).encode()
+        return
+    lo, hi, miss, max_zoom, mask_zoom, table = OVERZOOM_TABLES[case]
+    coords = spark.createDataFrame([(z, 0, 0) for z in table],
+                                   "z int, x long, y long")
+    got = {r.z: r.status == 200 for r in fetch_tiles_overzoom(
+        coords, url, max_zoom, mask_zoom=mask_zoom,
+        opener=_zoom_opener(lo, hi, miss)).collect()}
+    assert got == table
 
 
 BACKGROUND = (0x8C, 0xC6, 0x3F, 0xFF)
@@ -202,7 +200,6 @@ def test_png_decode_malformed_fails_loudly(spark):
     inside vectorize_tiles names its z/x/y."""
     import struct
     import zlib
-    import pytest
     from avecado_spark.operators.raster import _chunk, vectorize_tiles
     good = png_encode(np.zeros((4, 4, 4), np.uint8))
     with pytest.raises(ValueError, match="IHDR.*truncated"):
@@ -415,7 +412,6 @@ def test_overzoom_scales_subtile_geometry():
 
 def test_overzoom_same_zoom_identity_and_errors():
     from avecado_spark.operators.raster import render_tile_styled
-    import pytest
     style = {"background": "#000000",
              "layers": [{"layer": "water", "polygon": {"fill": "#0000ff"}}]}
     tile = _overzoom_tile()

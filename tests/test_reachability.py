@@ -10,11 +10,11 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 ENTRY_GLOBS = ["__spark_entry__.py", "bench*.py", "jobs/*.py", "perfbench/*.py",
                "avecado_spark/queries.py", "avecado_spark/api.py"]
 TEST_ONLY = {
-    "avecado_spark.operators.pyramid": "reference overzoom + exporter pyramid",
-    "avecado_spark.sources.mapnik_xml": "reference --map-file surface",
-    "avecado_spark.streaming.dedup": "streaming twin of the dedup queries",
-    "avecado_spark.streaming.tiles": "streaming twin of the tile build",
-    "avecado_spark.streaming.webgraph": "streaming twin of the link graph",
+    "avecado_spark.streaming.tiles":
+        "blocked by perfbench's encode.phase1 cut, which calls "
+        "build_point_tiles(partials_only=True); goes together with "
+        "encode.merge_point_partials and partials_only once that cut is "
+        "replaced",
 }
 
 

@@ -174,6 +174,24 @@ def test_crawl_round_max_per_host(spark, tmp_path):
     assert m["frontier_after"] == 2                # the capped-out urls
 
 
+def test_frontier_host_cap_is_arrow_batched(spark):
+    """The max_per_host window keeps each host's most-wanted urls, and its
+    host key is Arrow-batched like the robots gate's, never a
+    row-at-a-time pickled UDF."""
+    from avecado_spark.operators.webgraph import cap_frontier_per_host
+    frontier = spark.createDataFrame(
+        [("https://big.example/a", 3, 1), ("https://big.example/b", 5, 1),
+         ("https://big.example/c", 5, 2), ("https://small.example/x", 1, 1)],
+        ["url", "want_cnt", "n_srcs"])
+    out = cap_frontier_per_host(frontier, 2)
+    assert out.columns == ["url", "want_cnt", "n_srcs"]
+    assert sorted(r.url for r in out.collect()) == [
+        "https://big.example/b", "https://big.example/c",
+        "https://small.example/x"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan, plan
+
+
 def test_robots_sitemaps_and_crawl_delay():
     """Sitemap: directives are group-independent (order kept, deduped);
     Crawl-delay follows the group-selection rule; junk values ignored."""

@@ -1,6 +1,6 @@
 """Sinks (z/x/y.pbf tree, TileJSON), checkpoint/resume manifest,
-Structured Streaming batch-parity, overzoom join, pyramid rollup /
-copy-down — the Spark-integration layer."""
+Structured Streaming batch-parity, the distributed feature build and the
+HTTP tile fetchers — the Spark-integration layer."""
 
 import glob
 import os
@@ -92,6 +92,29 @@ def test_resumable_build_runs_the_build_once(spark, tmp_path):
     assert got == want and len(got) == m["written_partitions"]
 
 
+def test_low_zoom_part_keys_group_tiles(spark, tiles, tmp_path):
+    """A z6 part_key groups 8×8 tiles, so the sf0.001 z6 build writes at
+    most 64 part_key directories, not one per tile; a viewport read pruned
+    by part_key returns the rows an (x, y) filter on the unpartitioned
+    tiles does, for windows that cross bucket edges too."""
+    from avecado_spark.sources.manifest import (read_tiles_bbox,
+                                                run_resumable_build)
+    m = run_resumable_build(spark, tiles, 6, str(tmp_path), lineage="z6")
+    dirs = list((tmp_path / "tiles").glob("part_key=*"))
+    assert 0 < len(dirs) == m["written_partitions"] <= 64
+
+    def rows(df):
+        return sorted((r.z, r.x, r.y, bytes(r.tile_pbf), r.n_features)
+                      for r in df.collect())
+
+    for x0, x1, y0, y1 in [(0, 63, 0, 63), (10, 37, 20, 29), (33, 33, 21, 21)]:
+        want = rows(tiles.where(F.col("x").between(x0, x1)
+                                & F.col("y").between(y0, y1)))
+        assert want, (x0, x1, y0, y1)
+        assert rows(read_tiles_bbox(spark, str(tmp_path), 6,
+                                    x0, x1, y0, y1)) == want
+
+
 def test_streaming_batch_parity(spark):
     """Streaming windowed agg over availableNow == batch twin."""
     import shutil
@@ -111,50 +134,6 @@ def test_streaming_batch_parity(spark):
     canon = lambda rows: sorted((r.wstart, r.event_type, r.n, r.value_cents) for r in rows)
     assert canon(stream_rows) == canon(batch)
     assert len(stream_rows) > 0
-
-
-def test_overzoom_join(spark, tiles):
-    from avecado_spark.operators.pyramid import overzoom_join
-    # requests at z8 for children of existing z6 tiles + one miss
-    some = tiles.limit(5).select(
-        F.lit(8).alias("z"), (F.col("x") * 4 + 1).alias("x"),
-        (F.col("y") * 4 + 2).alias("y"))
-    miss = spark.createDataFrame([(8, 255, 255)], "z int, x long, y long")
-    reqs = some.unionAll(miss)
-    out = overzoom_join(reqs, tiles, max_zoom=6, mask_zoom=None).collect()
-    hits = [r for r in out if r.hit]
-    assert len(hits) == 5
-    assert all(r.eff_z == 6 for r in out)
-
-
-def test_pyramid_rollup(spark):
-    from avecado_spark.operators.pyramid import rollup_pyramid
-    from avecado_spark import queries as q
-    counts = q.queries()["tile_assign_z14"](spark, SF)
-    roll = rollup_pyramid(counts, 14, 10)
-    per_z = {r.z: r.total for r in
-             roll.groupBy("z").agg(F.sum("n_docs").alias("total")).collect()}
-    assert set(per_z) == {10, 11, 12, 13, 14}
-    assert len(set(per_z.values())) == 1  # doc counts conserved per level
-
-
-def test_copy_down(spark, tiles):
-    from avecado_spark.operators.pyramid import copy_down_subtrees
-    # force one uninteresting full-cover tile into the set (at sf0.001 all
-    # data tiles are interesting) — copy_subtree semantics need coverage
-    fake = spark.createDataFrame(
-        [(6, 60, 60, bytearray(b"\x1f\x8bfake"), 1, False)],
-        "z int, x long, y long, tile_pbf binary, n_features long, interesting boolean")
-    allt = tiles.unionAll(fake)
-    n_un = allt.where(~F.col("interesting")).count()
-    assert n_un >= 1
-    out = copy_down_subtrees(allt, to_z=8)
-    # every uninteresting z6 tile spawns 4 z7 + 16 z8 children
-    assert out.count() == allt.count() + n_un * (4 + 16)
-    kids = out.where((F.col("z") == 8) & (F.col("x") >= 240) & (F.col("x") < 244)
-                     & (F.col("y") >= 240) & (F.col("y") < 244)).collect()
-    assert len(kids) == 16
-    assert all(bytes(k.tile_pbf) == b"\x1f\x8bfake" for k in kids)
 
 
 def test_build_feature_tiles_lines_and_polygons(spark):
@@ -553,164 +532,3 @@ def test_default_opener_maps_transport_errors():
     from avecado_spark.sources.fetch import _default_opener
     status, body, headers = _default_opener("http://127.0.0.1:1/x.pbf", {})
     assert status == 599 and body == b"" and headers == {}
-
-
-def test_streaming_dedup_matches_batch(spark):
-    """streaming/dedup.py: the running exact-dedup aggregate over the
-    document stream equals the batch md5-groupBy (dedup_exact), and the
-    append-mode keep-list emits exactly one doc per distinct hash with a
-    doc_id the batch aggregate recognizes as a member of that group."""
-    import shutil
-    from avecado_spark.streaming.dedup import (distinct_docs_stream,
-                                               exact_dedup_stream,
-                                               run_available_now_append)
-    from avecado_spark.streaming.events import run_available_now
-    from tests.conftest import SF_DIR
-
-    batch = {r.h: (r.keep_id, r.n_dups) for r in
-             spark.read.parquet(f"{SF_DIR}/documents.parquet")
-                  .groupBy(F.md5("text").alias("h"))
-                  .agg(F.min("doc_id").alias("keep_id"),
-                       F.count("*").alias("n_dups")).collect()}
-
-    with tempfile.TemporaryDirectory() as d:
-        # file streaming sources require a directory
-        shutil.copy(f"{SF_DIR}/documents.parquet",
-                    os.path.join(d, "documents.parquet"))
-        stream_rows = run_available_now(
-            exact_dedup_stream(spark, d), "dedup_stream_q")
-        got = {r.h: (r.keep_id, r.n_dups) for r in stream_rows}
-        assert got == batch
-
-        kept = run_available_now_append(
-            distinct_docs_stream(spark, d), "dedup_keep_q")
-    assert len(kept) == len(batch)                   # one row per hash
-    assert len({r.h for r in kept}) == len(kept)     # all distinct
-    all_ids = {r.doc_id for r in
-               spark.read.parquet(f"{SF_DIR}/documents.parquet")
-                    .select("doc_id").collect()}
-    assert all(r.doc_id in all_ids for r in kept)
-
-
-def test_streaming_lsh_pairs_matches_batch(spark):
-    """streaming/dedup.lsh_pairs_stream: documents re-split into 4 files
-    and streamed one file per trigger must surface exactly the batch
-    dedup_lsh_pairs candidate set — each pair once, in the micro-batch
-    where the later document arrives — with the band store accumulating
-    batch-partitioned parquet."""
-    from avecado_spark.operators.dedup import (minhash_bands_from_docs,
-                                               _pairs_from_bands)
-    from avecado_spark.streaming.dedup import lsh_pairs_stream
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    expected = {(r.doc_a, r.doc_b) for r in
-                _pairs_from_bands(
-                    minhash_bands_from_docs(docs).persist()).collect()}
-    assert expected  # non-vacuous: the corpus seeds near-dups
-
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "docs")
-        docs.repartition(4).write.parquet(src)
-        store = os.path.join(d, "store")
-        q = lsh_pairs_stream(spark, src, store, max_files_per_trigger=1)
-        q.awaitTermination()
-        got_rows = spark.read.parquet(os.path.join(store, "pairs")).collect()
-        got = {(r.doc_a, r.doc_b) for r in got_rows}
-        assert got == expected
-        # exactly-once: no pair surfaced in two different micro-batches
-        assert len({(r.doc_a, r.doc_b) for r in got_rows}) == len(got_rows)
-        # the band store holds one partition per micro-batch
-        n_batches = len({r.batch_id for r in
-                         spark.read.parquet(os.path.join(store, "bands"))
-                              .select("batch_id").distinct().collect()})
-        assert n_batches >= 2  # maxFilesPerTrigger=1 over 4 files
-
-
-def test_streaming_lsh_replay_is_idempotent(spark):
-    """Restart semantics: re-running an already-committed micro-batch
-    (foreachBatch replay after a crash) must leave the band store and
-    pair log byte-identical — the batch_id-partitioned dynamic overwrite
-    replaces the batch's own partition instead of appending a duplicate."""
-    from avecado_spark.streaming.dedup import lsh_pairs_stream
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "docs")
-        docs.repartition(2).write.parquet(src)
-        store = os.path.join(d, "store")
-        q = lsh_pairs_stream(spark, src, store, max_files_per_trigger=1)
-        q.awaitTermination()
-        pairs_path = os.path.join(store, "pairs")
-        bands_path = os.path.join(store, "bands")
-        pairs_before = sorted((r.doc_a, r.doc_b, r.batch_id) for r in
-                              spark.read.parquet(pairs_path).collect())
-        bands_before = spark.read.parquet(bands_path).count()
-        batch_ids = sorted({r[2] for r in pairs_before} | {
-            r.batch_id for r in
-            spark.read.parquet(bands_path).select("batch_id")
-                 .distinct().collect()})
-        assert len(batch_ids) >= 2
-        # replay the LAST batch by hand: the batch's own band partition
-        # records exactly which documents it processed, so filter the
-        # source to those doc_ids (file->batch assignment inside the
-        # streaming source isn't glob order)
-        replay_id = batch_ids[-1]
-        batch_doc_ids = {r.doc_id for r in
-                         spark.read.parquet(bands_path)
-                              .where(f"batch_id = {replay_id}")
-                              .select("doc_id").distinct().collect()}
-        replay_docs = docs.where(docs.doc_id.isin(batch_doc_ids))
-        # mirror step()'s body exactly
-        from avecado_spark.operators.dedup import minhash_bands_from_docs
-        from pyspark.sql import functions as F
-        bands_new = minhash_bands_from_docs(replay_docs)
-        storeb = (spark.read.parquet(bands_path)
-                  .where(F.col("batch_id") < replay_id).drop("batch_id"))
-        everything = storeb.unionByName(bands_new)
-        pairs = (bands_new.alias("a")
-                 .join(everything.alias("b"),
-                       (F.col("a.band") == F.col("b.band"))
-                       & (F.col("a.band_key") == F.col("b.band_key"))
-                       & (F.col("a.doc_id") != F.col("b.doc_id")))
-                 .select(F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                         F.greatest("a.doc_id", "b.doc_id").alias("doc_b"))
-                 .distinct())
-        for frame, path in ((pairs, pairs_path), (bands_new, bands_path)):
-            (frame.withColumn("batch_id", F.lit(int(replay_id)))
-                  .write.mode("overwrite").partitionBy("batch_id")
-                  .option("partitionOverwriteMode", "dynamic")
-                  .parquet(path))
-        pairs_after = sorted((r.doc_a, r.doc_b, r.batch_id) for r in
-                             spark.read.parquet(pairs_path).collect())
-        assert pairs_after == pairs_before
-        assert spark.read.parquet(bands_path).count() == bands_before
-
-
-def test_streaming_paragraph_keeplist_matches_batch(spark):
-    """streaming/dedup.paragraph_keeplist_stream: the append-mode
-    first-seen paragraph keep-list covers exactly the batch operator's
-    hash universe — one row per distinct normalized paragraph hash, and
-    the kept count equals batch paragraph_dedup's total n_kept."""
-    import shutil
-    from avecado_spark.operators.dedup import paragraph_dedup, paragraph_rows
-    from avecado_spark.streaming.dedup import (paragraph_keeplist_stream,
-                                               run_available_now_append)
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    batch_hashes = {r.h for r in
-                    paragraph_rows(docs, segment="words:8")
-                    .select("h").distinct().collect()}
-    batch_kept = paragraph_dedup(docs, segment="words:8", join_sep=" ") \
-        .agg(F.sum("n_kept").alias("k")).collect()[0]["k"]
-
-    with tempfile.TemporaryDirectory() as d:
-        shutil.copy(f"{SF_DIR}/documents.parquet",
-                    os.path.join(d, "documents.parquet"))
-        kept = run_available_now_append(
-            paragraph_keeplist_stream(spark, d, segment="words:8"),
-            "para_keep_q")
-    assert {r.h for r in kept} == batch_hashes
-    assert len(kept) == len(batch_hashes) == batch_kept

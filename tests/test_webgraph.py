@@ -479,42 +479,6 @@ def test_hits_int_overflow_guard(spark):
 
 
 # ---------------------------------------------------------------------------
-# streaming twins: link extraction (stateless) + running in-degree
-# ---------------------------------------------------------------------------
-
-def _pages_parquet(spark, tmp_path, n_files=4):
-    p = str(tmp_path / "pages_pq")
-    pages_sample(spark).repartition(n_files).write.mode("overwrite").parquet(p)
-    return p
-
-
-def test_links_stream_matches_batch(spark, tmp_path):
-    from avecado_spark.operators.webgraph import extract_links
-    from avecado_spark.streaming.dedup import run_available_now_append
-    from avecado_spark.streaming.webgraph import links_stream
-    p = _pages_parquet(spark, tmp_path)
-    got = run_available_now_append(links_stream(spark, p),
-                                  "links_stream_t")
-    want = extract_links(spark.read.parquet(p)).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-
-def test_indegree_stream_matches_batch(spark, tmp_path):
-    from avecado_spark.operators.webgraph import indegree_signals
-    from avecado_spark.streaming.webgraph import indegree_stream
-    p = _pages_parquet(spark, tmp_path)
-    df = indegree_stream(spark, p)
-    q = (df.writeStream.format("memory").queryName("indeg_stream_t")
-           .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r["url"]: (r["in_cnt"], r["top_anchor"]) for r in
-           spark.sql("SELECT * FROM indeg_stream_t").collect()}
-    want = {r["url"]: (r["in_cnt"], r["top_anchor"]) for r in
-            indegree_signals(spark.read.parquet(p)).collect()}
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # RFC 3986 resolve: fuzz against the stdlib reference implementation
 # ---------------------------------------------------------------------------
 
